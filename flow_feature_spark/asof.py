@@ -2,7 +2,8 @@
 every entity x timestamp probe (SURVEY.md §2.3 J1 — north-rule mandate; the
 reference performs no joins).
 
-Two independent strategies, cross-checked in tests:
+Two production strategies, cross-checked in tests against each other and
+against a cogrouped ``pd.merge_asof`` oracle (tests/reference_asof.py):
 
 * ``asof_join_union_window`` — pure Spark SQL: tag both sides, union, one
   window pass per entity ordered by (ts, side), ``last(payload,
@@ -13,9 +14,6 @@ Two independent strategies, cross-checked in tests:
   strategy at 30M probes with 8->32-core scaling at ~0.98 of the hardware
   ceiling (BENCH/BASELINE.md). Paired with session_features_exact_sql the
   whole probe pipeline is JVM-only.
-* ``asof_join_merge`` — cogrouped ``pd.merge_asof(...,
-  allow_exact_matches=not strict)`` per entity bucket — readable, exact, but
-  pays a Python call per entity.
 * ``asof_join_fast`` — vectorized Arrow sort-merge: union both sides,
   ONE hash co-shuffle on entity + partition-local sort by (entity, ts, side),
   then a single vectorized forward-fill pass per Arrow batch
@@ -33,7 +31,7 @@ Max-staleness contract (``tolerance_seconds``): when set, a probe only
 matches a feature with ``probe_ts - feature_ts <= tolerance`` — the standard
 feature-store guard against serving stale state. Since the as-of match is
 always the LATEST admissible feature, a too-old match means no admissible
-feature exists, so the row nulls out (identical semantics in all three
+feature exists, so the row nulls out (identical semantics in both
 strategies and the DuckDB oracle).
 """
 
@@ -47,11 +45,11 @@ from pyspark.sql import types as T
 
 
 def _tol_us(tolerance_seconds: float | None) -> int | None:
-    """Validated tolerance in µs — identical contract for all three strategies.
+    """Validated tolerance in µs — identical contract for every strategy.
 
     A tolerance that rounds to 0 µs is rejected here (rather than letting
-    pd.merge_asof raise its own 'tolerance must be positive' only on the
-    merge strategy while the window strategies silently accept tol_us=0):
+    pd.merge_asof raise its own 'tolerance must be positive' only in the
+    test oracle while the window strategies silently accept tol_us=0):
     strategy parity means the same inputs raise the same error everywhere.
     """
     if tolerance_seconds is None:
@@ -128,66 +126,6 @@ def asof_join_union_window(
         F.col("__ent").alias(probe_entity),
         F.col(probe_ts),
         *[F.col("__last").getField(c).alias(c) for c in vals],
-    )
-
-
-def asof_join_merge(
-    features: DataFrame,
-    probes: DataFrame,
-    feature_entity: str = "conv_id",
-    feature_ts: str = "feature_ts",
-    probe_entity: str = "entity_id",
-    probe_ts: str = "probe_ts",
-    strict: bool = True,
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Cogrouped sort-merge as-of join via ``pd.merge_asof`` (the fast path)."""
-    vals = _feature_value_cols(features, feature_entity, feature_ts)
-    tol_us = _tol_us(tolerance_seconds)
-
-    out_fields = [
-        T.StructField(probe_entity, T.StringType(), False),
-        T.StructField(probe_ts, T.TimestampType(), False),
-    ] + [
-        T.StructField(c, features.schema[c].dataType, True) for c in vals
-    ]
-    out_schema = T.StructType(out_fields)
-
-    # micros domain for exact tie semantics (timestamp columns arrive in
-    # pandas as datetime64[ns]/[us]; int64 micros avoids unit drift).
-    f = features.select(
-        F.col(feature_entity).alias("__ent"),
-        F.unix_micros(F.col(feature_ts).cast("timestamp")).alias("__t_us"),
-        *vals,
-    )
-    p = probes.select(
-        F.col(probe_entity).alias("__ent"),
-        F.unix_micros(F.col(probe_ts).cast("timestamp")).alias("__t_us"),
-    )
-    allow_exact = not strict
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left = probes of one entity bucket, right = features
-        if left.empty:
-            return pd.DataFrame(columns=[fld.name for fld in out_fields])
-        left = left.sort_values("__t_us", kind="mergesort")
-        right = right.sort_values("__t_us", kind="mergesort")
-        merged = pd.merge_asof(
-            left,
-            right.drop(columns=["__ent"]),
-            on="__t_us",
-            allow_exact_matches=allow_exact,
-            direction="backward",
-            tolerance=tol_us,  # None -> unbounded lookback
-        )
-        merged[probe_entity] = merged["__ent"]
-        merged[probe_ts] = pd.to_datetime(merged["__t_us"], unit="us")
-        return merged[[probe_entity, probe_ts] + vals]
-
-    return (
-        p.groupBy("__ent")
-        .cogroup(f.groupBy("__ent"))
-        .applyInPandas(merge, schema=out_schema)
     )
 
 

@@ -1,51 +1,15 @@
-"""Expression twin of the grouped kernel: the 72 features as pure column exprs.
+"""The 72 features as one pure Spark SQL query: no Python boundary.
 
-Same semantics as kernel.py but expressed declaratively so Catalyst owns the
-whole plan (partial+final hash aggregation, whole-stage codegen, no Python).
-Used as (a) an internal cross-check oracle against the pandas kernel (catches
-window-frame and rounding bugs, SURVEY.md §5.4) and (b) the JVM-speed path for
-callers that don't need bit-parity with the reference's Python rounding.
-
-Per-direction IAT subtlety (flow.py:139-140): gaps are between consecutive
-same-direction turns of the time-sorted session, so ``lag`` runs over a window
-partitioned by (conv, session, is_fwd) — not a masked global lag.
-
-Rounding: ``F.bround`` (HALF_EVEN) matches Python's round() used by the
-reference; agreement with the pandas kernel is asserted allclose in tests.
+``session_features_exact_sql`` runs the exact-integer/decimal-domain SQL the
+DuckDB oracle uses, so its r6 output is bit-identical to the Arrow kernels
+(kernel.py, kernel_fast.py) while the whole plan stays in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from flow_feature_spark.schema import DURATION_EPSILON, FEATURE_NAMES
-
-
-def _b6(c: Column) -> Column:
-    return F.bround(c, 6)
-
-
-def _stats(prefix: str, x: Column) -> list[Column]:
-    """mean/min/max/std_pop of x (nulls excluded), empty -> 0.0 (calculation)."""
-    z = F.lit(0.0)
-    return [
-        F.coalesce(_b6(F.avg(x)), z).alias(f"{prefix}_mean"),
-        F.coalesce(_b6(F.min(x)), z).cast("double").alias(f"{prefix}_min"),
-        F.coalesce(_b6(F.max(x)), z).cast("double").alias(f"{prefix}_max"),
-        F.coalesce(_b6(F.stddev_pop(x)), z).alias(f"{prefix}_std"),
-    ]
-
-
-def _sum_stats(prefix: str, x: Column) -> list[Column]:
-    """total + mean/min/max/std_pop (packet_len / packet_win shape)."""
-    return [
-        F.coalesce(_b6(F.sum(x)), F.lit(0.0)).cast("double").alias(f"{prefix}_total")
-    ] + _stats(prefix, x)
-
-
-def _flag_bit(flags: Column, bit: int) -> Column:
-    return F.shiftright(flags, bit).bitwiseAND(F.lit(1))
+from flow_feature_spark.schema import FEATURE_NAMES
 
 
 def session_features_exact_sql(
@@ -59,12 +23,11 @@ def session_features_exact_sql(
 ) -> DataFrame:
     """EXACT 72-feature extraction as pure Spark SQL — no Python anywhere.
 
-    Unlike ``session_features_expr`` (bround over float avg/stddev —
-    allclose only), this runs the same exact-integer/decimal-domain SQL the
-    DuckDB oracle uses (oracle_queries.feature_vector_sql) over any
-    normalized transcript DataFrame: gap sessionization, centered exact IAT
-    deviations, r6 rounding — bit-identical to the Arrow kernel (pinned in
-    tests) while staying entirely inside whole-stage codegen / JVM. This is
+    Runs the same exact-integer/decimal-domain SQL the DuckDB oracle uses
+    (oracle_queries.feature_vector_sql) over any normalized transcript
+    DataFrame: gap sessionization, centered exact IAT deviations, r6
+    rounding — bit-identical to the Arrow kernel (pinned in tests) while
+    staying entirely inside whole-stage codegen / JVM. This is
     the no-Python-boundary scale path for clusters where the Arrow socket is
     the bottleneck; the fused kernel remains the fewer-shuffles option.
 
@@ -135,97 +98,4 @@ def session_features_exact_sql(
     return out.select(
         "conv_id", "session_id", "session_start_ts", "session_end_ts",
         "n_turns", *FEATURE_NAMES,
-    )
-
-
-def session_features_expr(
-    df: DataFrame, keys: tuple[str, str] = ("conv_id", "session_id")
-) -> DataFrame:
-    """Normalized + sessionized turns -> per-session 72-feature rows.
-
-    Output schema matches kernel.extract_session_features exactly.
-    """
-    k0, k1 = keys
-    w_all = Window.partitionBy(k0, k1).orderBy("ts_us", "turn_idx")
-    w_dir = Window.partitionBy(k0, k1, "is_fwd").orderBy("ts_us", "turn_idx")
-
-    # gaps differenced in exact integer micros, then scaled to seconds
-    t = (
-        df.withColumn("gap_all", (F.col("ts_us") - F.lag("ts_us").over(w_all)) / F.lit(1e6))
-        .withColumn("gap_dir", (F.col("ts_us") - F.lag("ts_us").over(w_dir)) / F.lit(1e6))
-    )
-
-    fwd = F.col("is_fwd")
-    f = lambda c: F.when(fwd, c)          # noqa: E731
-    b = lambda c: F.when(~fwd, c)         # noqa: E731
-    hdr = F.lit(14) + 4 * F.col("ihl") + F.lit(20)
-
-    aggs: list[Column] = []
-    aggs += [
-        (F.min("ts_us") / F.lit(1e6)).alias("session_start_ts"),
-        (F.max("ts_us") / F.lit(1e6)).alias("session_end_ts"),
-        (F.min("ts_us")).alias("min_us"),
-        (F.max("ts_us")).alias("max_us"),
-    ]
-    aggs += [F.count(F.lit(1)).alias("n_turns")]
-    aggs += _stats("fiat", f(F.col("gap_dir")))
-    aggs += _stats("biat", b(F.col("gap_dir")))
-    aggs += _stats("diat", F.col("gap_all"))
-    aggs += _sum_stats("fwin", f(F.col("win")))
-    aggs += _sum_stats("bwin", b(F.col("win")))
-    aggs += _sum_stats("dwin", F.col("win"))
-    aggs += [
-        F.sum(fwd.cast("long")).alias("fpnum_l"),
-        F.sum((~fwd).cast("long")).alias("bpnum_l"),
-    ]
-    aggs += _sum_stats("fpl", f(F.col("plen")))
-    aggs += _sum_stats("bpl", b(F.col("plen")))
-    aggs += _sum_stats("dpl", F.col("plen"))
-    for i, name in enumerate(
-        ["fin_cnt", "syn_cnt", "rst_cnt", "pst_cnt", "ack_cnt", "urg_cnt", "cwe_cnt", "ece_cnt"]
-    ):
-        aggs.append(F.sum(_flag_bit(F.col("flags"), i)).cast("double").alias(name))
-    for name, bit, side in [
-        ("fwd_pst_cnt", 3, f), ("fwd_urg_cnt", 5, f),
-        ("bwd_pst_cnt", 3, b), ("bwd_urg_cnt", 5, b),
-    ]:
-        aggs.append(F.sum(side(_flag_bit(F.col("flags"), bit))).cast("double").alias(name))
-    aggs += [
-        F.coalesce(F.sum(f(hdr)), F.lit(0)).cast("double").alias("fp_hdr_len"),
-        F.coalesce(F.sum(b(hdr)), F.lit(0)).cast("double").alias("bp_hdr_len"),
-    ]
-
-    g = t.groupBy(k0, k1).agg(*aggs).filter(F.col("n_turns") >= 2)
-
-    dur = _b6((F.col("max_us") - F.col("min_us")) / F.lit(1e6) + F.lit(DURATION_EPSILON))
-    g = g.withColumn("duration", dur)
-
-    fp, bp = F.col("fpnum_l"), F.col("bpnum_l")
-    g = (
-        g.withColumn("fpnum", fp.cast("double"))
-        .withColumn("bpnum", bp.cast("double"))
-        .withColumn("dpnum", (fp + bp).cast("double"))
-        .withColumn("bfpnum_rate", _b6(bp / F.greatest(fp, F.lit(1))))
-        .withColumn("fpnum_s", _b6(fp / F.col("duration")))
-        .withColumn("bpnum_s", _b6(bp / F.col("duration")))
-        .withColumn("dpnum_s", F.col("fpnum_s") + F.col("bpnum_s"))
-        .withColumn("bfpl_rate", _b6(F.col("bpl_total") / F.greatest(F.col("fpl_total"), F.lit(1))))
-        .withColumn("fpl_s", _b6(F.col("fpl_total") / F.col("duration")))
-        .withColumn("bpl_s", _b6(F.col("bpl_total") / F.col("duration")))
-        .withColumn("dpl_s", F.col("fpl_s") + F.col("bpl_s"))
-        .withColumn("dp_hdr_len", F.col("fp_hdr_len") + F.col("bp_hdr_len"))
-        .withColumn("f_ht_len", _b6(F.col("fp_hdr_len") / F.greatest(F.col("fpl_total"), F.lit(1))))
-        .withColumn("b_ht_len", _b6(F.col("bp_hdr_len") / F.greatest(F.col("bpl_total"), F.lit(1))))
-        .withColumn("d_ht_len", _b6(F.col("dp_hdr_len") / F.greatest(F.col("dpl_total"), F.lit(1))))
-    )
-
-    # Empty-direction flag sentinels (-1, flow.py:363-373) — win/len/IAT stats
-    # stay 0.0 (flow.py:341-344): the reference's deliberate asymmetry.
-    for name in ["fwd_pst_cnt", "fwd_urg_cnt"]:
-        g = g.withColumn(name, F.when(fp == 0, F.lit(-1.0)).otherwise(F.col(name)))
-    for name in ["bwd_pst_cnt", "bwd_urg_cnt"]:
-        g = g.withColumn(name, F.when(bp == 0, F.lit(-1.0)).otherwise(F.col(name)))
-
-    return g.select(
-        k0, k1, "session_start_ts", "session_end_ts", "n_turns", *FEATURE_NAMES
     )

@@ -91,14 +91,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--gap-seconds", type=float, default=1800.0)
     p.add_argument(
         "--engine",
-        choices=["fast", "kernel", "expr", "exact-sql", "salted", "adaptive"],
+        choices=["fast", "kernel", "exact-sql", "adaptive"],
         default="fast",
         help="fast: fused Arrow kernel (fewest shuffles); kernel: grouped "
-        "exact kernel; expr: float Catalyst twin (allclose); exact-sql: "
-        "exact-domain pure SQL, no Python boundary; salted: skew-proof "
-        "partial moments (bucketized sessionization, no per-conv task); "
-        "adaptive: skew router (fused for normal convs, salted for "
-        "mega-convs, grouped kernel for order-violating convs)",
+        "exact kernel; exact-sql: exact-domain pure SQL, no Python boundary "
+        "(--mode asof then uses the union-window join, also JVM-only); "
+        "adaptive: skew router (fused for normal convs, salted partial "
+        "moments for mega-convs, grouped kernel for order-violating convs)",
     )
     p.add_argument("--rounding", choices=["half_even", "r6"], default="half_even")
     p.add_argument("--sessionizer", choices=["sql", "bucketed"], default="sql",
@@ -194,9 +193,7 @@ def run(argv: list[str] | None = None) -> int:
     from flow_feature_spark.io import resume_or_compute
     from flow_feature_spark.kernel import attach_feature_ts, extract_session_features
     from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
-    from flow_feature_spark.features import session_features_expr
     from flow_feature_spark.prepare import drop_housekeeping, normalize_turns
-    from flow_feature_spark.salted import salted_session_features
     from flow_feature_spark.session import get_spark
     from flow_feature_spark.sessionize import assign_sessions, dedup_turns
 
@@ -479,29 +476,16 @@ def run(argv: list[str] | None = None) -> int:
             feats = adaptive_session_features(
                 turns, gap_seconds=args.gap_seconds, rounding=args.rounding
             )
-        elif effective_engine == "salted":
-            # the salted feature stage already requires ts non-decreasing in
-            # turn_idx (salted.py precondition), so the bucketized sessionizer
-            # adds no new assumption — and removes the per-conv window task
-            from flow_feature_spark.sessionize import assign_sessions_bucketed
-
-            sess = assign_sessions_bucketed(
-                turns, gap_seconds=args.gap_seconds, reset_tool=args.reset_tool
-            )
-            feats = salted_session_features(sess, rounding=args.rounding)
         else:
             sess = assign_sessions(
                 turns, gap_seconds=args.gap_seconds, reset_tool=args.reset_tool
             )
-            if effective_engine == "expr":
-                feats = session_features_expr(sess)
-            else:
-                feats = extract_session_features(sess, rounding=args.rounding)
+            feats = extract_session_features(sess, rounding=args.rounding)
         feats = attach_feature_ts(feats)
         if args.mode == "asof":
             probes = spark.read.parquet(args.probes)
             payload = feats.drop("session_start_ts", "session_end_ts")
-            if effective_engine in ("exact-sql", "expr"):
+            if effective_engine == "exact-sql":
                 # keep the WHOLE pipeline JVM-only: the union-window as-of is
                 # measured 8-13x faster than the Arrow strategy at 30M probes
                 # and scales at ~0.98 vs the hardware ceiling 8->32

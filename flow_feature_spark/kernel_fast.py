@@ -5,15 +5,17 @@ but per-group overhead (~ms) dominates when groups are small and numerous.
 This module computes the same 72 features for THOUSANDS of groups per NumPy
 call:
 
-  repartition(conv_id, session_id)           -- one hash shuffle (same as any
-  sortWithinPartitions(keys, ts_us, turn_idx) -- grouped agg would need)
-  mapInPandas(batch kernel)                   -- Arrow batches stream through,
-                                                 group stats via np.*.reduceat
+  repartition(conv_id)                           -- the one hash shuffle
+  sortWithinPartitions(conv_id, ts_us, turn_idx)
+  mapInPandas(sessionize + batch kernel)         -- Arrow batches stream
+                                                    through, group stats via
+                                                    np.*.reduceat
 
-Within a partition, a group's rows are contiguous after the sort but may span
-Arrow batch boundaries — the iterator wrapper holds back each batch's trailing
-(possibly incomplete) group and prepends it to the next batch, so every group
-is processed exactly once and memory stays bounded by (batch + largest group).
+Within a partition, a session's rows are contiguous after the sort but may
+span Arrow batch boundaries — the iterator wrapper holds back each batch's
+trailing (possibly incomplete) session and prepends it to the next batch, so
+every session is processed exactly once and memory stays bounded by
+(batch + largest session).
 
 Numeric contract: integer sums/sumsq via int64 reduceat (exact); the centered
 IAT deviations use float64 products whose error (~1e-16 relative) is ~10
@@ -260,7 +262,6 @@ def sessionize_and_extract_fast(
     conv_col: str = "conv_id",
     num_partitions: int | None = None,
     metrics=None,
-    partition_mode: str = "hash",
 ) -> DataFrame:
     """Fused sessionize + feature extraction: ONE shuffle total.
 
@@ -276,22 +277,11 @@ def sessionize_and_extract_fast(
     proj = df.select(
         conv_col, "turn_idx", "ts_us", "is_fwd", "plen", "win", "flags", "ihl"
     )
-    if partition_mode == "range":
-        # range partitioning on conv_id ONLY: equal keys land in one
-        # partition (group contiguity preserved); adding ts to the range key
-        # would split conversations across partitions. Range keeps output
-        # files clustered by conv for downstream scan locality.
-        part = (
-            proj.repartitionByRange(num_partitions, conv_col)
-            if num_partitions
-            else proj.repartitionByRange(conv_col)
-        )
-    else:
-        part = (
-            proj.repartition(num_partitions, conv_col)
-            if num_partitions
-            else proj.repartition(conv_col)
-        )
+    part = (
+        proj.repartition(num_partitions, conv_col)
+        if num_partitions
+        else proj.repartition(conv_col)
+    )
     sorted_df = part.sortWithinPartitions(conv_col, "ts_us", "turn_idx")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -347,45 +337,5 @@ def sessionize_and_extract_fast(
             if metrics is not None:
                 metrics.record(len(carry), len(out))
             yield out
-
-    return sorted_df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def extract_session_features_fast(
-    df: DataFrame,
-    rounding: str = "r6",
-    keys: tuple[str, str] = ("conv_id", "session_id"),
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Scale-path feature extraction: one shuffle, streaming batch kernel."""
-    proj = df.select(
-        keys[0], keys[1], "turn_idx", "ts_us", "is_fwd", "plen", "win", "flags", "ihl"
-    )
-    part = (
-        proj.repartition(num_partitions, *keys)
-        if num_partitions
-        else proj.repartition(*keys)
-    )
-    sorted_df = part.sortWithinPartitions(*keys, "ts_us", "turn_idx")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            # hold back the trailing (possibly incomplete) group
-            codes = pd.factorize(pdf["conv_id"].to_numpy())[0]
-            sess_arr = pdf["session_id"].to_numpy(np.int64)
-            tail_mask = (codes == codes[-1]) & (sess_arr == sess_arr[-1])
-            # rows of the last group are a contiguous suffix (sorted input)
-            tail_start = int(len(pdf) - tail_mask[::-1].cumprod().sum())
-            carry = pdf.iloc[tail_start:]
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                yield batch_feature_frame(head, rounding)
-        if carry is not None and len(carry):
-            yield batch_feature_frame(carry, rounding)
 
     return sorted_df.mapInPandas(run, schema=FEATURE_SCHEMA)

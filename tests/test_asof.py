@@ -1,5 +1,6 @@
-"""As-of join: strict/inclusive semantics, both strategies agree, and a
-brute-force zero-leakage property check (SURVEY.md §5.3)."""
+"""As-of join: strict/inclusive semantics, both strategies agree with the
+pd.merge_asof oracle (tests/reference_asof.py), and a brute-force
+zero-leakage property check (SURVEY.md §5.3)."""
 
 from __future__ import annotations
 
@@ -7,10 +8,13 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from flow_feature_spark.asof import asof_join_merge, asof_join_union_window
+from flow_feature_spark.asof import asof_join_union_window
+from flow_feature_spark.features import session_features_exact_sql
 from flow_feature_spark.kernel import attach_feature_ts
-from flow_feature_spark.pipeline import transcript_features
+from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.synth import synth_probes, synth_transcripts
+
+from tests.reference_asof import asof_join_merge
 
 N = 40
 
@@ -18,7 +22,9 @@ N = 40
 @pytest.fixture(scope="module")
 def data(spark):
     tr = synth_transcripts(spark, n_convs=N, turns_mean=15, hot_factor=5).cache()
-    feats = transcript_features(tr, gap_seconds=1800.0, engine="expr")
+    feats = attach_feature_ts(
+        session_features_exact_sql(normalize_turns(tr), gap_seconds=1800.0)
+    )
     # compact payload for readable assertions
     feats = feats.select("conv_id", "feature_ts", "session_id", "n_turns", "dpl_total")
     probes = synth_probes(spark, n_convs=N, probes_per_entity=4).cache()
@@ -120,8 +126,9 @@ def test_fast_asof_tiny_batches(spark, data):
 
 
 def test_tolerance_all_strategies_agree_and_match_brute_force(spark, data):
-    """Max-staleness: all three strategies agree under tolerance, and every
-    row matches a brute-force 'latest fresh feature' recomputation."""
+    """Max-staleness: both strategies and the oracle agree under tolerance,
+    and every row matches a brute-force 'latest fresh feature'
+    recomputation."""
     from flow_feature_spark.asof import asof_join_fast
 
     feats, probes = data

@@ -217,6 +217,37 @@ def test_job_stream_counts_engine(spark, tmp_path):
     assert got  # at least the gap-closed sessions flushed
 
 
+def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
+    """Every --engine gives identical r6 rows on the input shape that makes a
+    skew path answer wrongly when it trusts turn order: one conversation
+    longer than the default 8192-turn bucket whose turn_idx runs backwards
+    in time."""
+    inp = f"{tmp_path}/in"
+    tr = synth_transcripts(spark, n_convs=30, turns_mean=20, hot_factor=500)
+    hot = F.col("conv_id") == "conv00000000"
+    n_hot = tr.filter(hot).count()
+    assert n_hot > 8192
+    tr.withColumn(
+        "turn_idx",
+        F.when(hot, F.lit(n_hot - 1) - F.col("turn_idx")).otherwise(F.col("turn_idx")),
+    ).write.parquet(inp)
+
+    outs = {}
+    for eng in ("fast", "kernel", "exact-sql", "adaptive"):
+        out = f"{tmp_path}/out_{eng}"
+        assert job.run([
+            "--input", inp, "--output", out, "--mode", "features",
+            "--engine", eng, "--rounding", "r6",
+        ]) == 0
+        outs[eng] = spark.read.parquet(out)
+    base = outs["fast"]
+    cols = sorted(base.columns)
+    assert base.filter(hot).count() > 0
+    for eng, got in outs.items():
+        a, b = base.select(cols), got.select(cols)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, eng
+
+
 def test_job_asof_mode_engines_agree(spark, tmp_path):
     """--mode asof: the JVM-only route (exact-sql + union-window) and the
     Arrow route (kernel + sort-merge) must produce identical rows at r6 —

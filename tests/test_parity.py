@@ -1,6 +1,6 @@
-"""Reference-oracle parity (SURVEY.md §5.2) and dual-implementation
-cross-check (§5.4): Spark kernel vs pure-Python loop oracle vs expression twin
-on the deterministic synthetic transcript table, allclose rtol 1e-6.
+"""Reference-oracle parity (SURVEY.md §5.2): Spark kernel vs pure-Python
+loop oracle on the deterministic synthetic transcript table, allclose rtol
+1e-6.
 """
 
 from __future__ import annotations
@@ -8,9 +8,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from flow_feature_spark.pipeline import transcript_features
+from flow_feature_spark.kernel import extract_session_features
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.schema import FEATURE_NAMES
+from flow_feature_spark.sessionize import assign_sessions
 from flow_feature_spark.synth import synth_transcripts
 
 from tests.reference_kernel import ref_feature_vector, ref_sessionize
@@ -25,9 +26,9 @@ def synth_df(spark):
     return synth_transcripts(spark, n_convs=N_CONVS, turns_mean=20, hot_factor=10).cache()
 
 
-def _spark_features(spark, synth_df, engine):
-    out = transcript_features(synth_df, gap_seconds=GAP_S, engine=engine)
-    rows = out.collect()
+def _spark_features(synth_df):
+    sess = assign_sessions(normalize_turns(synth_df), gap_seconds=GAP_S)
+    rows = extract_session_features(sess).collect()
     return {
         (r["conv_id"], r["session_id"]): [r[n] for n in FEATURE_NAMES] for r in rows
     }
@@ -67,7 +68,7 @@ ATOL = 1.2e-6
 
 
 def test_kernel_matches_pure_python_oracle(spark, synth_df):
-    got = _spark_features(spark, synth_df, engine="kernel")
+    got = _spark_features(synth_df)
     expected = _oracle_features(synth_df)
     assert set(got) == set(expected)
     assert len(got) > N_CONVS / 2  # sessions actually split
@@ -75,23 +76,6 @@ def test_kernel_matches_pure_python_oracle(spark, synth_df):
         np.testing.assert_allclose(
             got[key], expected[key], rtol=1e-6, atol=ATOL,
             err_msg=f"group {key}: {list(zip(FEATURE_NAMES, got[key], expected[key]))}",
-        )
-
-
-def test_expr_twin_matches_kernel(spark, synth_df):
-    kernel = _spark_features(spark, synth_df, engine="kernel")
-    expr = _spark_features(spark, synth_df, engine="expr")
-    assert set(kernel) == set(expr)
-    for key in kernel:
-        np.testing.assert_allclose(
-            expr[key], kernel[key], rtol=1e-6, atol=ATOL,
-            err_msg=f"group {key}: " + str(
-                [
-                    (n, a, b)
-                    for n, a, b in zip(FEATURE_NAMES, expr[key], kernel[key])
-                    if not np.isclose(a, b, rtol=1e-6, atol=ATOL)
-                ]
-            ),
         )
 
 

@@ -35,8 +35,7 @@ sys.path.insert(0, {repo!r})
 from flow_feature_spark.session import get_spark
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
-from flow_feature_spark.sessionize import assign_sessions
-from flow_feature_spark.features import session_features_expr, session_features_exact_sql
+from flow_feature_spark.features import session_features_exact_sql
 from flow_feature_spark.asof import asof_join_fast
 from flow_feature_spark.kernel import attach_feature_ts
 from pyspark.sql import functions as F
@@ -53,10 +52,6 @@ def feature_job():
         normalize_turns(stored), gap_seconds=1800.0, rounding="r6",
         num_partitions=2 * cpus).count()
 
-def feature_expr_job():
-    return session_features_expr(
-        assign_sessions(normalize_turns(stored), 1800.0)).count()
-
 def feature_exact_sql_job():
     return session_features_exact_sql(normalize_turns(stored), 1800.0).count()
 
@@ -72,7 +67,6 @@ def asof_job():
 
 out = {{"cpus": cpus, "rows": n_rows}}
 for name, job in (("feature_kernel", feature_job),
-                  ("feature_expr", feature_expr_job),
                   ("feature_exact_sql", feature_exact_sql_job),
                   ("asof_fast", asof_job)):
     for _ in range(warmups):
@@ -145,7 +139,7 @@ def main() -> int:
         print(json.dumps(results[cpus]))
 
     rows = results[LEVELS[0]]["rows"]
-    jobs = ("feature_kernel", "feature_expr", "feature_exact_sql", "asof_fast")
+    jobs = ("feature_kernel", "feature_exact_sql", "asof_fast")
     md = [
         "# BENCH — scaling efficiency (N vs 4N cores)",
         "",
@@ -206,8 +200,6 @@ def main() -> int:
         "  local socket path irrespective of cores); on a real multi-executor",
         "  cluster each executor owns its own boundary, so this term scales",
         "  out with executors rather than saturating a single host.",
-        "- feature_expr = same features as float Catalyst expressions (JVM only,",
-        "  whole-stage codegen, allclose).",
         "- feature_exact_sql = the EXACT-domain generated SQL (bit-equal to the",
         "  kernel), also JVM-only — sessionization fused into the same query.",
         "- asof_fast = feature_kernel -> vectorized sort-merge as-of join of",

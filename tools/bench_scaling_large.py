@@ -1,13 +1,12 @@
-"""Overhead-amortized N vs 4N scaling for the JVM-only engines.
+"""Overhead-amortized N vs 4N scaling for the JVM-only feature engine.
 
 The full sweep (tools/bench_scaling.py) at 29.7M turns leaves the 32-core
 exact-sql wall at ~2.5 s, where per-job fixed costs (JVM job launch, AQE
 planning, stage scheduling) are a large fraction of the measurement and the
-8->32 ratio under-reads the engine. This tool re-measures ONLY the two
-JVM-only engines (exact-sql, expr — the production routes for JVM-expressible
-plans) on a 4x larger input (2M convs ~ 119M turns) so the 4N wall-clock is
-~10 s and the ratio measures the pipeline, not the launcher. Fresh JVM per
-(engine, level) cell, alternating level order to cancel co-tenant drift,
+8->32 ratio under-reads the engine. This tool re-measures ONLY the JVM-only
+engine (exact-sql, the production route for JVM-expressible plans) on a 4x
+larger input (2M convs ~ 119M turns) so the 4N wall-clock is ~10 s and the
+ratio measures the pipeline, not the launcher. Fresh JVM per level cell,
 1 warm-up + 3 timed runs, medians. Appends a section to BENCH/BASELINE.md.
 
 Usage: python tools/bench_scaling_large.py [n_convs]
@@ -28,20 +27,16 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from flow_feature_spark.session import get_spark
 from flow_feature_spark.prepare import normalize_turns
-from flow_feature_spark.sessionize import assign_sessions
-from flow_feature_spark.features import session_features_expr, session_features_exact_sql
+from flow_feature_spark.features import session_features_exact_sql
 
-cpus = int(sys.argv[1]); path = sys.argv[2]; engine = sys.argv[3]
-spark = get_spark(app_name=f"scal_lg_{{engine}}_{{cpus}}", master=f"local[{{cpus}}]",
+cpus = int(sys.argv[1]); path = sys.argv[2]
+spark = get_spark(app_name=f"scal_lg_exact_sql_{{cpus}}", master=f"local[{{cpus}}]",
                   shuffle_partitions=2 * cpus)
 stored = spark.read.parquet(path)
 n_rows = stored.count()
 
 def job():
-    turns = normalize_turns(stored)
-    if engine == "exact_sql":
-        return session_features_exact_sql(turns, 1800.0).count()
-    return session_features_expr(assign_sessions(turns, 1800.0)).count()
+    return session_features_exact_sql(normalize_turns(stored), 1800.0).count()
 
 job()  # warm-up
 times = []
@@ -49,25 +44,25 @@ for _ in range(3):
     t0 = time.time(); n_out = job(); times.append(round(time.time() - t0, 3))
 times.sort()
 spark.stop()
-print("RESULT " + json.dumps({{"cpus": cpus, "engine": engine, "rows": n_rows,
+print("RESULT " + json.dumps({{"cpus": cpus, "rows": n_rows,
     "all_sec": times, "median_sec": times[1],
     "rows_per_sec": round(n_rows / times[1], 1), "out_rows": n_out}}))
 """
 
 
-def run_cell(cpus: int, path: str, engine: str) -> dict:
+def run_cell(cpus: int, path: str) -> dict:
     # repo on PYTHONPATH for the EXECUTOR python workers (driver-side
     # sys.path.insert does not reach them — same fix as bench_scaling.py)
     env = dict(os.environ)
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
     p = subprocess.run(
-        [sys.executable, "-c", WORKER.format(repo=REPO), str(cpus), path, engine],
+        [sys.executable, "-c", WORKER.format(repo=REPO), str(cpus), path],
         capture_output=True, text=True, timeout=1800, env=env,
     )
     for line in p.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"no RESULT from cell {engine}@{cpus}:\n{p.stderr[-2000:]}")
+    raise RuntimeError(f"no RESULT from cell local[{cpus}]:\n{p.stderr[-2000:]}")
 
 
 def main() -> int:
@@ -87,12 +82,10 @@ def main() -> int:
     spark.stop()
     print(f"input: {n_rows:,} turns in {time.time()-t0:.0f}s")
 
-    # alternate level order per engine so slow-drift load biases neither side
-    cells: dict[tuple[str, int], dict] = {}
-    for engine, order in (("exact_sql", (8, 32)), ("expr", (32, 8))):
-        for cpus in order:
-            cells[(engine, cpus)] = run_cell(cpus, path, engine)
-            print("cell", engine, cpus, cells[(engine, cpus)]["all_sec"])
+    cells: dict[int, dict] = {}
+    for cpus in (8, 32):
+        cells[cpus] = run_cell(cpus, path)
+        print("cell", cpus, cells[cpus]["all_sec"])
 
     lines = [
         "",
@@ -102,31 +95,29 @@ def main() -> int:
         "",
         "The 29.7M-turn sweep above leaves the 32-core JVM-engine walls at",
         "~2.5-3 s, where per-job fixed costs dominate the 8->32 ratio. Same",
-        "jobs at 4x the input (fresh JVM per cell, alternating level order,",
-        "1 warm-up + 3 runs, medians):",
+        "job at 4x the input (fresh JVM per cell, 1 warm-up + 3 runs,",
+        "medians):",
         "",
         "| engine | local[8] s (3 runs) | local[32] s (3 runs) | "
         "E(8->32) ideal | vs-ceiling |",
         "|---|---|---|---|---|",
     ]
-    summary = {}
-    for engine in ("exact_sql", "expr"):
-        a, b = cells[(engine, 8)], cells[(engine, 32)]
-        e_ideal = (a["median_sec"] / b["median_sec"]) / 4.0
-        ceiling = 0.75  # same-day mp.Pool ceiling, table above
-        e_ceil = e_ideal / ceiling
-        summary[engine] = {
-            "8": a["all_sec"], "32": b["all_sec"],
-            "tput32": b["rows_per_sec"],
-            "E_ideal": round(e_ideal, 2), "E_vs_ceiling": round(e_ceil, 2),
-        }
-        lines.append(
-            f"| {engine} | {a['all_sec']} | {b['all_sec']} | "
-            f"**{e_ideal:.2f}** | **{e_ceil:.2f}** |"
-        )
+    a, b = cells[8], cells[32]
+    e_ideal = (a["median_sec"] / b["median_sec"]) / 4.0
+    ceiling = 0.75  # same-day mp.Pool ceiling, table above
+    e_ceil = e_ideal / ceiling
+    summary = {"exact_sql": {
+        "8": a["all_sec"], "32": b["all_sec"],
+        "tput32": b["rows_per_sec"],
+        "E_ideal": round(e_ideal, 2), "E_vs_ceiling": round(e_ceil, 2),
+    }}
+    lines.append(
+        f"| exact_sql | {a['all_sec']} | {b['all_sec']} | "
+        f"**{e_ideal:.2f}** | **{e_ceil:.2f}** |"
+    )
     lines += [
         "",
-        f"exact-sql at 32 cores: {summary['exact_sql']['tput32']:,.0f} turns/s.",
+        f"exact-sql at 32 cores: {b['rows_per_sec']:,.0f} turns/s.",
         "vs-ceiling divides by the same-day measured mp.Pool 8->32 ceiling",
         "(0.75, table above).",
         "",
