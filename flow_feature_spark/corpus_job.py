@@ -105,7 +105,7 @@ def _pairs(df, args):
 def run(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkContext
     from pyspark.sql import functions as F
 
     from flow_feature_spark.ops import text as tx
@@ -113,7 +113,9 @@ def run(argv: list[str] | None = None) -> int:
     from flow_feature_spark.ops.sample import deterministic_sample, stratified_topk
     from flow_feature_spark.session import get_spark
 
-    owns_session = SparkSession.getActiveSession() is None
+    # only stop a session this run created; the JVM's active session is per
+    # thread, so ask whether a SparkContext exists at all
+    owns_session = SparkContext._active_spark_context is None
     spark = get_spark(
         app_name=f"ffs_corpus_{args.op}",
         master=args.master,

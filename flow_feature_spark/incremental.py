@@ -15,15 +15,19 @@ footprint, not the table size.
 
 Scale shape at 100 TB:
 - the turn-history append commits ONLY the delta directory (fast-append);
-- touched conversation ids are broadcast (a day's distinct entities are
-  ~MBs) so the history scan is one pass with a broadcast semi-join — no
-  shuffle of the 100-TB side; partition the turns table by an entity bucket
-  and the semi-join prunes to touched buckets;
+- the touched conversation ids are read back from that committed delta
+  directory (a day's distinct entities are ~MBs), so the delta's own plan
+  runs once, in the append; the one touched-id frame is broadcast into the
+  history scan (one pass with a broadcast semi-join — no shuffle of the
+  100-TB side) and is also the replace's key set, so the feature plan runs
+  once, in the feature-table write, instead of a second time just to
+  list the conversations it produced;
 - the feature recompute is the JVM-only exact-SQL engine, shuffling only the
   touched conversations' turns;
 - the feature-table rewrite is copy-on-write replace_groups; bound it with
-  partition_cols like partitioned COW, or keep deltas and reconcile at read
-  (merge-on-read) when the touched set is huge.
+  ``feature_buckets`` / ``feature_bucket_expr`` (partition-bounded replace),
+  or keep deltas and reconcile at read (merge-on-read) when the touched set
+  is huge.
 """
 
 from __future__ import annotations
@@ -49,8 +53,6 @@ def incremental_feature_update(
     gap_seconds: float,
     rounding: str = "r6",
     reset_tool: str | None = None,
-    broadcast_touched: bool = True,
-    partition_cols: tuple[str, ...] | None = None,
     feature_buckets: int | None = None,
     feature_bucket_expr: str | None = None,
 ) -> dict:
@@ -65,9 +67,8 @@ def incremental_feature_update(
     tests and by the ``incremental_features`` driver query, which shares the
     full-recompute oracle).
 
-    ``broadcast_touched`` forces a broadcast of the distinct touched
-    conversation ids into the history scan (the right call when the delta is
-    a day against years of history); set False to let AQE choose.
+    The distinct touched conversation ids are broadcast into the history
+    scan (the right call when the delta is a day against years of history).
 
     ``feature_buckets=N`` stores the feature table hive-partitioned by
     ``__bucket = xxhash64(conv_id) % N`` and updates it with
@@ -111,9 +112,7 @@ def incremental_feature_update(
         bucket_of, bucketed = None, False
     first = not _read_log(spark, turns_table)
     if first:
-        te = write_snapshot(
-            new_turns, turns_table, job="incremental", partition_cols=partition_cols
-        )
+        te = write_snapshot(new_turns, turns_table, job="incremental")
         feats = feats_of(read_snapshot(spark, turns_table))
         if bucketed:
             fe = write_snapshot(
@@ -134,17 +133,18 @@ def incremental_feature_update(
         }
 
     te = write_snapshot(
-        new_turns,
-        turns_table,
-        job="incremental",
-        operation="append",
-        partition_cols=partition_cols,
+        new_turns, turns_table, job="incremental", operation="append"
     )
-    touched = new_turns.select("conv_id").distinct()
+    # the touched ids come from the committed delta directory, not from
+    # new_turns (each use would rerun its normalize + dedup plan), and they
+    # are the replace's keys, not feats' own ids (which would rerun the
+    # feature plan inside the write). history holds only touched
+    # conversations, so the keys cover every conversation in feats — the
+    # replaces' precondition.
+    delta_dir = f"{turns_table.rstrip('/')}/{te['dir']}"
+    touched = spark.read.parquet(delta_dir).select("conv_id").distinct()
     history = read_snapshot(spark, turns_table).join(
-        F.broadcast(touched) if broadcast_touched else touched,
-        on="conv_id",
-        how="left_semi",
+        F.broadcast(touched), on="conv_id", how="left_semi"
     )
     feats = feats_of(history)
     if bucketed:
@@ -153,9 +153,12 @@ def incremental_feature_update(
             features_table,
             ("conv_id",),
             "__bucket",
+            keys=touched.withColumn("__bucket", bucket_of),
         )
     else:
-        fe = replace_groups_snapshot(feats, features_table, ("conv_id",))
+        fe = replace_groups_snapshot(
+            feats, features_table, ("conv_id",), keys=touched
+        )
     return {
         "initialized": False,
         "touched_convs": touched.count(),

@@ -1000,13 +1000,23 @@ def replace_groups_snapshot(
     group_cols: tuple[str, ...],
     job: str = "",
     partition_cols: tuple[str, ...] | None = None,
+    keys: DataFrame | None = None,
 ) -> dict:
     """Group-granular overwrite (Delta ``replaceWhere`` / Iceberg dynamic
     partition overwrite, at arbitrary key granularity): every current row
-    whose group key appears in ``updates`` is dropped and replaced by ALL of
+    whose group key appears in ``keys`` is dropped and replaced by ALL of
     ``updates``' rows for that group — including groups with a different row
-    COUNT than before (a row-keyed merge can't shrink a group; this can).
-    Groups absent from ``updates`` are untouched; new groups are inserted.
+    COUNT than before (a row-keyed merge can't shrink a group; this can),
+    and groups in ``keys`` with no rows in ``updates``, which are deleted.
+    Groups absent from ``keys`` are untouched; new groups are inserted.
+
+    ``keys`` (a frame with the ``group_cols`` columns) names the groups to
+    replace; it defaults to the groups present in ``updates``. Pass it when
+    the caller already holds the key set more cheaply than ``updates``
+    yields it: deriving the keys from ``updates`` runs ``updates``' plan a
+    second time in the same write. Precondition: ``keys`` must cover every
+    group in ``updates`` — a group in ``updates`` but not in ``keys`` keeps
+    its old rows beside the new ones.
 
     This is the maintenance primitive incremental recomputation needs: a
     group (conversation, partition, day) is recomputed as a unit, so its old
@@ -1024,7 +1034,7 @@ def replace_groups_snapshot(
     missing = [k for k in group_cols if k not in current.columns]
     if missing:
         raise ValueError(f"group columns not in table: {missing}")
-    touched = updates.select(*group_cols).distinct()
+    touched = (updates if keys is None else keys).select(*group_cols).distinct()
     kept = current.join(touched, on=list(group_cols), how="left_anti")
     partition_cols, stats_cols = _inherit_spec(
         spark, table_path, partition_cols
@@ -1045,6 +1055,7 @@ def replace_groups_partitioned(
     group_cols: tuple[str, ...],
     partition_col: str,
     job: str = "",
+    keys: DataFrame | None = None,
 ) -> dict:
     """Partition-bounded group replace (Iceberg dynamic partition overwrite
     composed with merge-on-read shadowing): like replace_groups_snapshot,
@@ -1068,7 +1079,14 @@ def replace_groups_partitioned(
     ``partition_cols=(partition_col,)``), and ``updates`` must carry that
     column with values consistent with the group key (every row of a group
     in one bucket — e.g. bucket = hash(key) % N). Use an INT bucket column:
-    hive partition-value inference types it back as int on read."""
+    hive partition-value inference types it back as int on read.
+
+    ``keys`` (a frame with the ``group_cols`` columns and ``partition_col``)
+    names the groups to replace, as in replace_groups_snapshot, and the
+    buckets to rewrite are read from it; it defaults to ``updates``. Pass it
+    when the keys are cheaper to get than ``updates``' plan: each use of
+    ``updates`` here runs that plan again. Precondition: ``keys`` must cover
+    every group in ``updates``, with the same bucket value for each group."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -1097,9 +1115,10 @@ def replace_groups_partitioned(
     missing = [k for k in group_cols if k not in updates.columns]
     if missing:
         raise ValueError(f"group columns not in updates: {missing}")
+    keys = updates if keys is None else keys
 
     touched_parts = sorted(
-        r[0] for r in updates.select(partition_col).distinct().collect()
+        r[0] for r in keys.select(partition_col).distinct().collect()
     )
     current = _read_entry(spark, table_path, parent)
     if set(updates.columns) != set(current.columns):
@@ -1109,7 +1128,7 @@ def replace_groups_partitioned(
         )
     cur_touched = current.filter(F.col(partition_col).isin(touched_parts))
     replaced_rows = cur_touched.count()  # partition-pruned job
-    touched_keys = updates.select(*group_cols).distinct()
+    touched_keys = keys.select(*group_cols).distinct()
     kept = cur_touched.join(touched_keys, on=list(group_cols), how="left_anti")
 
     snap_id = len(log) + 1

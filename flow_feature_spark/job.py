@@ -197,10 +197,8 @@ def run(argv: list[str] | None = None) -> int:
     from flow_feature_spark.session import get_spark
     from flow_feature_spark.sessionize import assign_sessions, dedup_turns
 
-    from pyspark.sql import SparkSession
+    from pyspark import SparkContext
 
-    # getOrCreate reuses an active session (e.g. pytest's); only stop what
-    # this run created
     # resolve the EFFECTIVE engine up front so the checkpoint fingerprint
     # records what actually ran, never a silently-substituted path: the fused
     # kernel cannot force-reset sessions mid-stream, so fast + --reset-tool
@@ -214,7 +212,11 @@ def run(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
 
-    owns_session = SparkSession.getActiveSession() is None
+    # getOrCreate reuses a running session (e.g. pytest's); only stop what
+    # this run created. The JVM's active session is per thread, so a call on
+    # a non-main thread sees none — whether a SparkContext exists is the
+    # process-wide answer.
+    owns_session = SparkContext._active_spark_context is None
     spark = get_spark(
         app_name=f"ffs_job_{args.mode}",
         master=args.master,

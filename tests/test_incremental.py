@@ -148,6 +148,18 @@ def test_replace_groups_snapshot(spark, tmp_path):
     # time travel to the pre-replace state still works
     assert read_snapshot(spark, tp, snapshot_id=1).count() == 4
 
+    # explicit keys: a key in keys and in the table but absent from the
+    # updates loses its rows; groups not in keys are untouched
+    keys = spark.createDataFrame([("b",), ("c",)], "g string")
+    upd2 = spark.createDataFrame([("c", 5, 70)], "g string, sub int, v int")
+    replace_groups_snapshot(upd2, tp, ("g",), keys=keys)
+    got = sorted(map(tuple, read_snapshot(spark, tp).collect()))
+    assert got == [
+        ("a", 9, 99),          # not in keys: untouched
+        ("c", 5, 70),          # in keys and updates: replaced
+        ("d", 1, 50), ("d", 2, 60),  # not in keys: untouched
+    ]                          # b: in keys only -> deleted
+
     try:
         replace_groups_snapshot(upd.drop("v"), tp, ("g",))
         raise AssertionError("schema mismatch must fail")
@@ -225,6 +237,20 @@ def test_replace_groups_partitioned_unit(spark, tmp_path):
     assert sorted(
         map(tuple, read_snapshot(spark, tp, snapshot_id=2).collect())
     ) == [("a", 9, 0), ("b", 3, 1), ("c", 4, 2)]
+    # explicit keys: c (bucket 2) is in keys and the table but not in the
+    # updates, so it loses its rows; the buckets come from keys, so bucket
+    # 0 (groups not in keys) is not rewritten
+    e = replace_groups_partitioned(
+        mk([("d", 6, 1)]),
+        tp,
+        ("g",),
+        "b",
+        keys=spark.createDataFrame([("c", 2), ("d", 1)], "g string, b int"),
+    )
+    assert e["replaced_partitions"] == [1, 2]
+    got = sorted(map(tuple, read_snapshot(spark, tp).collect()))
+    assert got == [("a", 9, 0), ("b", 8, 1), ("d", 6, 1)]
+    assert snapshot_history(spark, tp)[-1]["state_rows"] == 3
 
     # walls
     flat = str(tmp_path / "flat")

@@ -31,6 +31,23 @@ def test_job_features_parquet(spark, tmp_path):
     assert "fiat_mean" in got.columns and "feature_ts" in got.columns
 
 
+def test_job_on_worker_thread_keeps_shared_session(spark, tmp_path):
+    """A job run on a non-main thread sees no active JVM session (it is per
+    thread) but must still leave the caller's session running."""
+    import threading
+
+    inp, out = f"{tmp_path}/in", f"{tmp_path}/out"
+    _write_input(spark, inp, n_convs=5)
+    rc = []
+    t = threading.Thread(
+        target=lambda: rc.append(job.run(["--input", inp, "--output", out]))
+    )
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive() and rc == [0]
+    assert spark.range(3).count() == 3
+
+
 def test_job_per_source_mode(spark, tmp_path):
     """--per-source: one feature row per input FILE (reference pcap mode)."""
     inp, out = f"{tmp_path}/in", f"{tmp_path}/out"
