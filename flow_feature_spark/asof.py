@@ -33,6 +33,13 @@ feature-store guard against serving stale state. Since the as-of match is
 always the LATEST admissible feature, a too-old match means no admissible
 feature exists, so the row nulls out (identical semantics in both
 strategies and the DuckDB oracle).
+
+Driver-side rule: under PySpark 4.1's call-site capture every ``Column`` API
+call costs about 10 py4j round trips, so both strategies build their wide
+projections (the payload, the null-filled probe side, the output expansion)
+in a constant number of calls — from column names, SQL text,
+``unionByName(allowMissingColumns=True)`` and ``struct.*`` — never one
+``Column`` per feature column.
 """
 
 from __future__ import annotations
@@ -63,6 +70,11 @@ def _tol_us(tolerance_seconds: float | None) -> int | None:
     return tol_us
 
 
+def _quote(name: str) -> str:
+    """``name`` as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _feature_value_cols(features: DataFrame, entity_col: str, ts_col: str) -> list[str]:
     return [c for c in features.columns if c not in (entity_col, ts_col)]
 
@@ -85,21 +97,21 @@ def asof_join_union_window(
     # (cannot see it); inclusive -> after.
     probe_side, feat_side = (0, 1) if strict else (1, 0)
 
+    payload = ", ".join(
+        [f"unix_micros(CAST({_quote(feature_ts)} AS TIMESTAMP)) AS __ft_us"]
+        + [_quote(c) for c in vals]
+    )
     f = features.select(
         F.col(feature_entity).alias("__ent"),
         F.unix_micros(F.col(feature_ts).cast("timestamp")).alias("__t_us"),
         F.lit(feat_side).alias("__side"),
-        F.struct(
-            F.unix_micros(F.col(feature_ts).cast("timestamp")).alias("__ft_us"),
-            *[F.col(c) for c in vals],
-        ).alias("__payload"),
+        F.expr(f"struct({payload})").alias("__payload"),
         F.lit(None).cast("timestamp").alias(probe_ts),
     )
     p = probes.select(
         F.col(probe_entity).alias("__ent"),
         F.unix_micros(F.col(probe_ts).cast("timestamp")).alias("__t_us"),
         F.lit(probe_side).alias("__side"),
-        F.lit(None).cast(f.schema["__payload"].dataType).alias("__payload"),
         F.col(probe_ts),
     )
     from pyspark.sql import Window
@@ -110,7 +122,7 @@ def asof_join_union_window(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     joined = (
-        f.unionByName(p)
+        f.unionByName(p, allowMissingColumns=True)  # probes: null payload
         .withColumn("__last", F.last("__payload", ignorenulls=True).over(w))
         .filter(F.col("__side") == probe_side)
     )
@@ -123,10 +135,8 @@ def asof_join_union_window(
             "__last", F.when(fresh, F.col("__last"))
         )
     return joined.select(
-        F.col("__ent").alias(probe_entity),
-        F.col(probe_ts),
-        *[F.col("__last").getField(c).alias(c) for c in vals],
-    )
+        F.col("__ent").alias(probe_entity), F.col(probe_ts), "__last.*"
+    ).drop("__ft_us")
 
 
 def asof_join_fast(
@@ -147,19 +157,19 @@ def asof_join_fast(
     tol_us = _tol_us(tolerance_seconds)
     probe_side, feat_side = (0, 1) if strict else (1, 0)
 
-    f = features.select(
-        F.col(feature_entity).alias("__ent"),
-        F.unix_micros(F.col(feature_ts).cast("timestamp")).alias("__t_us"),
-        F.lit(feat_side).alias("__side"),
-        *[F.col(c) for c in vals],
-    )
+    f = features.withColumns({
+        "__ent": F.col(feature_entity),
+        "__t_us": F.unix_micros(F.col(feature_ts).cast("timestamp")),
+        "__side": F.lit(feat_side),
+    }).drop(feature_entity, feature_ts)
     p = probes.select(
         F.col(probe_entity).alias("__ent"),
         F.unix_micros(F.col(probe_ts).cast("timestamp")).alias("__t_us"),
         F.lit(probe_side).alias("__side"),
-        *[F.lit(None).cast(features.schema[c].dataType).alias(c) for c in vals],
     )
-    u = f.unionByName(p)
+    # the probe side's value columns are filled with typed nulls by Spark;
+    # the kernel reads columns by name, so the union's order is free
+    u = f.unionByName(p, allowMissingColumns=True)
     u = (
         u.repartition(num_partitions, "__ent") if num_partitions else u.repartition("__ent")
     ).sortWithinPartitions("__ent", "__t_us", "__side")

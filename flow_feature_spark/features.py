@@ -90,12 +90,14 @@ def session_features_exact_sql(
         reset_cond=reset_cond,
         presessionized=presessionized,
     )
-    out = spark.sql(sql)
+    # kernel column order: keys, bounds, n_turns, features — put in the SQL
+    # text, so the projection costs one call however many columns it names
+    order = ", ".join(
+        ["conv_id", "session_id", "session_start_ts", "session_end_ts", "n_turns"]
+        + FEATURE_NAMES
+    )
+    out = spark.sql(f"SELECT {order} FROM ({sql})")
     # analysis captured the plan; drop the view so the session namespace
     # doesn't accumulate per-call entries
     spark.catalog.dropTempView(view_name)
-    # kernel column order: keys, bounds, n_turns, features
-    return out.select(
-        "conv_id", "session_id", "session_start_ts", "session_end_ts",
-        "n_turns", *FEATURE_NAMES,
-    )
+    return out

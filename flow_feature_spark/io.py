@@ -1040,7 +1040,7 @@ def replace_groups_snapshot(
         spark, table_path, partition_cols
     )
     return write_snapshot(
-        kept.unionByName(updates.select(*current.columns)),
+        kept.unionByName(updates),
         table_path,
         job=job,
         operation="merge",
@@ -1135,7 +1135,7 @@ def replace_groups_partitioned(
     own = f"snap-{snap_id:06d}"
     obs = Observation()
     (
-        kept.unionByName(updates.select(*current.columns))
+        kept.unionByName(updates)
         .observe(obs, F.count(F.lit(1)).alias("rows"))
         .write.mode("errorifexists")
         .partitionBy(partition_col)

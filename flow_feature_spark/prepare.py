@@ -25,12 +25,18 @@ def ts_seconds(ts: Column) -> Column:
     return F.unix_micros(ts.cast("timestamp")) / F.lit(1e6)
 
 
-def tool_flags(tool: Column) -> Column:
-    """tool name -> 8-bit bitmask (the TCP-flags analog, flow.py:375-378)."""
-    expr = F.lit(0)
-    for name, bit in TOOL_FLAG_BITS.items():
-        expr = F.when(tool == name, F.lit(1 << bit)).otherwise(expr)
-    return expr.cast("int")
+def tool_flags(tool_col: str) -> Column:
+    """tool name -> 8-bit bitmask (the TCP-flags analog, flow.py:375-378).
+
+    Built as one SQL ``CASE`` over the column named ``tool_col`` (null and
+    unknown tools map to 0): a chain of ``F.when`` calls would cost about
+    10 py4j round trips per Column call.
+    """
+    arms = " ".join(
+        f"WHEN '{name}' THEN {1 << bit}" for name, bit in TOOL_FLAG_BITS.items()
+    )
+    quoted = tool_col.replace("`", "``")
+    return F.expr(f"CAST(CASE `{quoted}` {arms} ELSE 0 END AS INT)")
 
 
 def token_count(text: Column) -> Column:
@@ -138,6 +144,6 @@ def normalize_turns(
         (F.col(role_col) == fwd_role).alias("is_fwd"),
         F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long").alias("plen"),
         token_count(F.col(text_col)).alias("win"),
-        tool_flags(F.col(tool_col)).alias("flags"),
+        tool_flags(tool_col).alias("flags"),
         F.length(F.coalesce(F.col(role_col), F.lit(""))).cast("long").alias("ihl"),
     )

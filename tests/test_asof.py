@@ -185,3 +185,93 @@ def test_asof_forward_is_strictly_later(spark):
             assert not later
         else:
             assert later and later[0][1] == r["session_id"]
+
+
+def _wide_payload(spark):
+    from flow_feature_spark.schema import FEATURE_NAMES
+
+    cols = ", ".join(f"{c} double" for c in FEATURE_NAMES)
+    feats = spark.createDataFrame(
+        [], f"conv_id string, feature_ts timestamp, session_id long, n_turns long, {cols}"
+    )
+    probes = spark.createDataFrame([], "entity_id string, probe_ts timestamp")
+    return feats, probes
+
+
+@pytest.mark.parametrize("strategy", ["fast", "union_window"])
+def test_build_round_trip_budget(spark, strategy):
+    """Building the as-of frame over the 72-feature payload costs a bounded
+    number of py4j round trips, not several per feature column: every Column
+    call pays about 10 under PySpark's call-site capture, so per-column
+    Column calls alone cost 3,500-6,000 here."""
+    import py4j.clientserver as cs
+
+    from flow_feature_spark import asof
+
+    build = {"fast": asof.asof_join_fast,
+             "union_window": asof.asof_join_union_window}[strategy]
+    feats, probes = _wide_payload(spark)
+    build(feats, probes)  # warm: first-call imports and lookups
+    orig = cs.ClientServerConnection.send_command
+    calls = [0]
+
+    def counting(self, command):
+        calls[0] += 1
+        return orig(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        out = build(feats, probes)
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    assert calls[0] > 0  # the patched method is the one py4j calls
+    assert calls[0] < 600, calls[0]
+    assert out.columns[2:] == feats.columns[2:]
+
+
+def test_value_column_types_and_unmatched_nulls(spark):
+    """Both strategies keep every value column's type, and fill the value
+    columns of unmatched probes (an entity with no features, a probe before
+    the first feature) with nulls."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from flow_feature_spark.asof import asof_join_fast
+
+    t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
+    value_fields = [
+        T.StructField("i", T.IntegerType()),
+        T.StructField("l", T.LongType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("seen", T.TimestampType()),
+        T.StructField("d", T.DoubleType()),
+    ]
+    feats = spark.createDataFrame(
+        [("a", t(10), 1, 10, True, "x", t(1), 0.5),
+         ("a", t(20), 2, 20, False, "y", t(2), 1.5),
+         ("b", t(10), 3, 30, None, None, None, None)],
+        T.StructType([T.StructField("conv_id", T.StringType()),
+                      T.StructField("feature_ts", T.TimestampType())] + value_fields),
+    )
+    probes = spark.createDataFrame(
+        [("a", t(5)), ("a", t(15)), ("a", t(25)), ("b", t(11)), ("z", t(30))],
+        "entity_id string, probe_ts timestamp",
+    )
+    expected = {
+        ("a", t(5)): (None,) * 6,
+        ("a", t(15)): (1, 10, True, "x", t(1), 0.5),
+        ("a", t(25)): (2, 20, False, "y", t(2), 1.5),
+        ("b", t(11)): (3, 30, None, None, None, None),
+        ("z", t(30)): (None,) * 6,
+    }
+    want_types = [("entity_id", T.StringType()), ("probe_ts", T.TimestampType())] + [
+        (f.name, f.dataType) for f in value_fields
+    ]
+    for build in (asof_join_union_window, asof_join_fast):
+        out = build(feats, probes, strict=True)
+        assert [(f.name, f.dataType) for f in out.schema] == want_types, build
+        assert all(f.nullable for f in out.schema.fields[2:]), build
+        got = {(r[0], r[1]): tuple(r[2:]) for r in out.collect()}
+        assert got == expected, build
