@@ -760,15 +760,16 @@ def q_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_session_features_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted partial-moment path: exact integer/decimal bucket moments merged
-    with the kernel's float-op sequence -> bit-identical to the unsalted
-    kernel, so it shares feature_vector_sql's oracle (bucket_turns=512 forces
-    real boundary stitching at sf0.01 group sizes)."""
-    from flow_feature_spark.salted import salted_session_features
+    """The skew path: the exact-SQL engine over the bucketized two-pass
+    sessionizer (no per-conversation task anywhere) — same oracle as the
+    other feature engines. bucket_turns=16 is below the longest conversation
+    at sf0.001/sf0.01 (88/86 turns), so bucket boundaries are stitched."""
+    from flow_feature_spark.features import session_features_exact_sql
 
-    turns = _events_turns(spark, sf_dir)
-    sess = assign_sessions(turns, gap_seconds=OQ.SESSION_GAP_S)
-    feats = salted_session_features(sess, bucket_turns=512, rounding="r6")
+    feats = session_features_exact_sql(
+        _events_turns(spark, sf_dir), OQ.SESSION_GAP_S, rounding="r6",
+        sessionizer="bucketed", bucket_turns=16,
+    )
     return feats.select("conv_id", "session_id", "n_turns", *FEATURE_NAMES)
 
 

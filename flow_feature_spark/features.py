@@ -15,7 +15,6 @@ from flow_feature_spark.schema import FEATURE_NAMES
 def session_features_exact_sql(
     turns: DataFrame,
     gap_seconds: float,
-    view_name: str | None = None,
     rounding: str = "r6",
     reset_tool: str | None = None,
     sessionizer: str = "sql",
@@ -45,18 +44,19 @@ def session_features_exact_sql(
     sessionize.assign_sessions_bucketed (bit-identical ids, no per-conv task
     anywhere) and runs the feature SQL presessionized, so the largest task
     unit drops from conversation to session. Output is bit-identical either
-    way (pinned in tests).
+    way (pinned in tests), except that "bucketed" raises on a conversation
+    whose turn_idx buckets overlap in time (its precondition, see
+    assign_sessions_bucketed) where "sql" answers it.
     """
     import uuid
 
     from flow_feature_spark.oracle_queries import feature_vector_sql
 
-    if view_name is None:
-        # session-global temp views are shared mutable state: a fixed name
-        # races when two pipelines are built on the same SparkSession before
-        # either executes (the second createOrReplaceTempView would rebind
-        # the first caller's plan) — suffix with a uuid per call
-        view_name = f"ffs_turns_v_{uuid.uuid4().hex}"
+    # session-global temp views are shared mutable state: a fixed name
+    # races when two pipelines are built on the same SparkSession before
+    # either executes (the second createOrReplaceTempView would rebind
+    # the first caller's plan) — suffix with a uuid per call
+    view_name = f"ffs_turns_v_{uuid.uuid4().hex}"
     spark = turns.sparkSession
     if sessionizer not in ("sql", "bucketed"):
         raise ValueError(f"sessionizer must be 'sql' or 'bucketed', got {sessionizer!r}")

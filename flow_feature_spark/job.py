@@ -91,20 +91,21 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--gap-seconds", type=float, default=1800.0)
     p.add_argument(
         "--engine",
-        choices=["fast", "kernel", "exact-sql", "adaptive"],
+        choices=["fast", "kernel", "exact-sql"],
         default="fast",
         help="fast: fused Arrow kernel (fewest shuffles); kernel: grouped "
         "exact kernel; exact-sql: exact-domain pure SQL, no Python boundary "
-        "(--mode asof then uses the union-window join, also JVM-only); "
-        "adaptive: skew router (fused for normal convs, salted partial "
-        "moments for mega-convs, grouped kernel for order-violating convs)",
+        "(--mode asof then uses the union-window join, also JVM-only; with "
+        "--sessionizer bucketed it is the skew path for mega-conversations)",
     )
     p.add_argument("--rounding", choices=["half_even", "r6"], default="half_even")
     p.add_argument("--sessionizer", choices=["sql", "bucketed"], default="sql",
                    help="exact-sql engine: assign sessions in-query (one "
                    "window task per conversation) or via the bucketized "
                    "two-pass pre-assignment (bit-identical ids, no per-conv "
-                   "task; use for mega-conversation inputs)")
+                   "task; use for mega-conversation inputs). bucketed fails "
+                   "the job, naming the conversation, when a conversation's "
+                   "turn_idx buckets overlap in time; use sql for such input")
     p.add_argument(
         "--input-format", choices=["parquet", "csv", "json"], default="parquet",
         help="batch source format (csv expects a header row; csv/json string "
@@ -469,14 +470,6 @@ def run(argv: list[str] | None = None) -> int:
                 turns, gap_seconds=args.gap_seconds,
                 rounding=args.rounding, reset_tool=args.reset_tool,
                 sessionizer=args.sessionizer,
-            )
-        elif effective_engine == "adaptive":
-            from flow_feature_spark.salted import adaptive_session_features
-
-            if args.reset_tool is not None:
-                raise SystemExit("--engine adaptive does not support --reset-tool")
-            feats = adaptive_session_features(
-                turns, gap_seconds=args.gap_seconds, rounding=args.rounding
             )
         else:
             sess = assign_sessions(

@@ -24,8 +24,9 @@ kernel is asserted in tests (and empirically bit-equal after r6 on the
 driver data). Exactness bound for the int64 sumsq path: per-session
 sum(plen^2) must stay below 2^63 — i.e. max_plen^2 * session_turns < 9.2e18
 (e.g. 1e6-char texts x 9M-turn sessions). Beyond that, route through the
-grouped exact kernel (Python-int accumulation) or the salted path
-(decimal(38,0) squared sums).
+grouped exact kernel (Python-int accumulation). The exact-SQL engine
+(features.session_features_exact_sql) widens only the squared gap
+deviations to decimal(38,0); its plen/win sums of squares are bigint too.
 """
 
 from __future__ import annotations

@@ -72,7 +72,6 @@ def assign_sessions_bucketed(
     tiebreak_col: str = "turn_idx",
     out_col: str = "session_id",
     reset_tool: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``assign_sessions`` with NO per-conversation single task: identical
     session ids, but every window is scoped to a contiguous turn-range bucket
@@ -80,8 +79,8 @@ def assign_sessions_bucketed(
     over 10^7/bucket_turns tasks instead of serializing its sort + lag +
     cumsum through one (the last per-conv straggler VERDICT r2 named).
 
-    Two-pass design (the salted.py turn-range-bucket + boundary-carry shape,
-    applied to session ASSIGNMENT itself):
+    Two-pass design (turn-range buckets plus a per-conversation
+    boundary carry):
 
     1. bucket = floor(turn_idx / bucket_turns) — pure arithmetic, no pre-pass
        window; explicit repartition(conv, bucket) (a window's
@@ -106,12 +105,14 @@ def assign_sessions_bucketed(
     this is that walk re-derived as a two-level scan so no single task ever
     owns a whole key — the north rule's explicit-skew-handling requirement.
 
-    Precondition (same contract as salted.py:23-27, checked by
-    ``precondition_violations``): within a conversation ts is non-decreasing
-    in turn_idx, so contiguous turn_idx ranges are contiguous time ranges and
-    the (ts, turn_idx) sort order equals the turn_idx order. Inputs that
-    violate it must route through ``assign_sessions`` (adaptive_session_features
-    does this automatically).
+    Precondition, checked inside the summary window (no extra pass): no
+    bucket of a conversation may start before the previous bucket ends,
+    i.e. min(ts) of bucket b >= max(ts) of bucket b-1. That is exactly the
+    case where bucket order agrees with the (ts, turn_idx) order the
+    windows need; ts inversions inside one bucket are answered correctly,
+    because the within-bucket windows sort by (ts, turn_idx). A violating
+    conversation makes the frame raise when evaluated, naming the
+    conversation — route such input through ``assign_sessions``.
     """
     gap_us = int(round(gap_seconds * 1_000_000))
     tool_new = _reset_cond_col(reset_tool)
@@ -119,11 +120,7 @@ def assign_sessions_bucketed(
     t = df.withColumn(
         "__bkt", F.floor(F.col(tiebreak_col).cast("long") / F.lit(bucket_turns))
     )
-    t = (
-        t.repartition(num_partitions, conv_col, "__bkt")
-        if num_partitions
-        else t.repartition(conv_col, "__bkt")
-    )
+    t = t.repartition(conv_col, "__bkt")
     wb = Window.partitionBy(conv_col, "__bkt").orderBy(ts_us_col, tiebreak_col)
     t = t.withColumn("__lgap", F.col(ts_us_col) - F.lag(ts_us_col, 1).over(wb))
     t = t.withColumn("__tool_new", tool_new.cast("int"))
@@ -144,8 +141,17 @@ def assign_sessions_bucketed(
         F.min_by("__tool_new", F.struct(ts_us_col, tiebreak_col)).alias("__first_tool"),
     )
     ws = Window.partitionBy(conv_col).orderBy("__bkt")
-    prev_last = F.lag("__last_us", 1).over(ws)
-    first_new = F.when(
+    # bound once: each use of a window Column is a separate window expression
+    summary = summary.withColumn("__prev_last", F.lag("__last_us", 1).over(ws))
+    prev_last = F.col("__prev_last")
+    overlap = F.raise_error(F.concat(
+        F.lit("assign_sessions_bucketed: conversation "),
+        F.col(conv_col).cast("string"),
+        F.lit(" has a turn_idx bucket that starts before the previous one "
+              "ends in time; sessionize it with assign_sessions "
+              "(job: --sessionizer sql)"),
+    ))
+    first_new = F.when(prev_last > F.col("__first_us"), overlap).when(
         prev_last.isNull()
         | ((F.col("__first_us") - prev_last) > F.lit(gap_us))
         | (F.col("__first_tool") == 1),
@@ -175,50 +181,6 @@ def assign_sessions_bucketed(
     return out.drop(
         "__bkt", "__lgap", "__tool_new", "__local_new", "__first_new", "__offset"
     )
-
-
-def precondition_violations(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    ts_us_col: str = "ts_us",
-    turn_col: str = "turn_idx",
-    bucket_turns: int = 8192,
-) -> DataFrame:
-    """conv_ids where ts DECREASES along turn_idx — the inputs the bucketized
-    paths (assign_sessions_bucketed, salted.py) must not receive.
-
-    Skew-safe by the same construction as the sessionizer: within-bucket lag
-    over (conv, bucket) windows bounded at ``bucket_turns`` rows, plus a
-    tiny per-conv summary pass for cross-bucket boundaries (comparing each
-    bucket's ts-at-max-turn against the next bucket's ts-at-min-turn).
-    Returns a one-column DataFrame of distinct offending conv_ids — route
-    these through the order-agnostic grouped kernel.
-    """
-    t = df.select(
-        conv_col, ts_us_col, turn_col,
-        F.floor(F.col(turn_col).cast("long") / F.lit(bucket_turns)).alias("__bkt"),
-    ).repartition(conv_col, "__bkt")
-    wb = Window.partitionBy(conv_col, "__bkt").orderBy(turn_col)
-    local_bad = (F.col(ts_us_col) < F.lag(ts_us_col, 1).over(wb)).cast("int")
-    summary = (
-        t.withColumn("__bad", local_bad)
-        .groupBy(conv_col, "__bkt")
-        .agg(
-            F.coalesce(F.sum("__bad"), F.lit(0)).alias("__bad_cnt"),
-            F.min_by(ts_us_col, F.col(turn_col)).alias("__ts_first"),
-            F.max_by(ts_us_col, F.col(turn_col)).alias("__ts_last"),
-        )
-    )
-    ws = Window.partitionBy(conv_col).orderBy("__bkt")
-    boundary_bad = (
-        F.col("__ts_first") < F.lag("__ts_last", 1).over(ws)
-    ).cast("int")
-    per_conv = (
-        summary.withColumn("__bbad", F.coalesce(boundary_bad, F.lit(0)))
-        .groupBy(conv_col)
-        .agg(F.sum(F.col("__bad_cnt") + F.col("__bbad")).alias("__viol"))
-    )
-    return per_conv.filter(F.col("__viol") > 0).select(conv_col)
 
 
 def dedup_turns(

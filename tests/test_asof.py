@@ -204,6 +204,8 @@ def test_build_round_trip_budget(spark, strategy):
     number of py4j round trips, not several per feature column: every Column
     call pays about 10 under PySpark's call-site capture, so per-column
     Column calls alone cost 3,500-6,000 here."""
+    import threading
+
     import py4j.clientserver as cs
 
     from flow_feature_spark import asof
@@ -214,9 +216,14 @@ def test_build_round_trip_budget(spark, strategy):
     build(feats, probes)  # warm: first-call imports and lookups
     orig = cs.ClientServerConnection.send_command
     calls = [0]
+    caller = threading.get_ident()
 
     def counting(self, command):
-        calls[0] += 1
+        # only the building thread's calls: py4j releases garbage-collected
+        # Java references ("m d" commands) from a background thread at
+        # arbitrary moments, adding hundreds of calls the build did not make
+        if threading.get_ident() == caller:
+            calls[0] += 1
         return orig(self, command)
 
     cs.ClientServerConnection.send_command = counting

@@ -15,7 +15,7 @@ def test_oracle_keys_subset_of_queries():
     assert set(os_) <= set(qs)
     missing_oracle = set(qs) - set(os_)
     # only deliberately rows-only entries may omit the oracle
-    assert missing_oracle <= {"ann_lsh_topk", "session_features_salted"}, missing_oracle
+    assert missing_oracle <= {"ann_lsh_topk"}, missing_oracle
 
 
 def test_entry_returns_rows(spark):

@@ -10,6 +10,7 @@ import glob
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flow_feature_spark import job
@@ -238,7 +239,10 @@ def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
     """Every --engine gives identical r6 rows on the input shape that makes a
     skew path answer wrongly when it trusts turn order: one conversation
     longer than the default 8192-turn bucket whose turn_idx runs backwards
-    in time."""
+    in time. The bucketed sessionizer, which does trust it, refuses the
+    input and names the conversation instead of writing wrong rows."""
+    from pyspark.errors import PySparkException
+
     inp = f"{tmp_path}/in"
     tr = synth_transcripts(spark, n_convs=30, turns_mean=20, hot_factor=500)
     hot = F.col("conv_id") == "conv00000000"
@@ -250,7 +254,7 @@ def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
     ).write.parquet(inp)
 
     outs = {}
-    for eng in ("fast", "kernel", "exact-sql", "adaptive"):
+    for eng in ("fast", "kernel", "exact-sql"):
         out = f"{tmp_path}/out_{eng}"
         assert job.run([
             "--input", inp, "--output", out, "--mode", "features",
@@ -263,6 +267,13 @@ def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
     for eng, got in outs.items():
         a, b = base.select(cols), got.select(cols)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, eng
+
+    with pytest.raises(PySparkException, match="conversation conv00000000 "):
+        job.run([
+            "--input", inp, "--output", f"{tmp_path}/out_bucketed",
+            "--mode", "features", "--engine", "exact-sql",
+            "--sessionizer", "bucketed", "--rounding", "r6",
+        ])
 
 
 def test_job_asof_mode_engines_agree(spark, tmp_path):

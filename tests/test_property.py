@@ -95,77 +95,3 @@ def test_invariants(rows):
     for f in ("fin_cnt", "syn_cnt", "rst_cnt", "pst_cnt",
               "ack_cnt", "urg_cnt", "cwe_cnt", "ece_cnt"):
         assert -1.0 <= d[f] <= len(rows)
-
-
-# ---------------------------------------------------------------------------
-# Salted-merge property: for ANY contiguous bucketing of a sorted group, the
-# exact partial moments + stitch merge must be BIT-EQUAL to the direct kernel
-# (SURVEY.md §4.1). Partials are built here in pure Python with the same
-# exact-domain semantics as salted._partial_aggs.
-# ---------------------------------------------------------------------------
-
-def _partials_frame(rows, bucket_size):
-    """rows: list of dicts sorted by (ts_us, turn_idx) -> one partial-moment
-    row per contiguous bucket, mirroring the SQL aggregation exactly."""
-    import pandas as pd
-
-    def hdr(r):
-        return 14 + 4 * r["ihl"] + 20
-
-    out = []
-    for b0 in range(0, len(rows), bucket_size):
-        bucket = rows[b0:b0 + bucket_size]
-        row = {
-            "bucket": b0 // bucket_size,
-            "n": len(bucket),
-            "min_us": min(r["ts_us"] for r in bucket),
-            "max_us": max(r["ts_us"] for r in bucket),
-        }
-        for d, pred in (("f", lambda r: r["is_fwd"]),
-                        ("b", lambda r: not r["is_fwd"]),
-                        ("d", lambda r: True)):
-            sel = [r for r in bucket if pred(r)]
-            row[f"{d}_n"] = len(sel)
-            row[f"{d}_first_us"] = sel[0]["ts_us"] if sel else 0
-            row[f"{d}_last_us"] = sel[-1]["ts_us"] if sel else 0
-            gaps = [b["ts_us"] - a["ts_us"] for a, b in zip(sel, sel[1:])]
-            row[f"{d}_gap_n"] = len(gaps)
-            row[f"{d}_gap_sum"] = sum(gaps)
-            row[f"{d}_gap_sumsq"] = sum(g * g for g in gaps)
-            row[f"{d}_gap_min"] = min(gaps) if gaps else 0
-            row[f"{d}_gap_max"] = max(gaps) if gaps else 0
-            for col in ("win", "plen"):
-                vals = [r[col] for r in sel]
-                row[f"{d}_{col}_sum"] = sum(vals)
-                row[f"{d}_{col}_sumsq"] = sum(v * v for v in vals)
-                row[f"{d}_{col}_min"] = min(vals) if vals else 0
-                row[f"{d}_{col}_max"] = max(vals) if vals else 0
-            row[f"{d}_hdr"] = sum(hdr(r) for r in sel)
-        for i in range(8):
-            bit = lambda r: (r["flags"] >> i) & 1  # noqa: E731
-            row[f"flag{i}"] = sum(bit(r) for r in bucket)
-            if i in (3, 5):
-                row[f"fwd_flag{i}"] = sum(bit(r) for r in bucket if r["is_fwd"])
-                row[f"bwd_flag{i}"] = sum(bit(r) for r in bucket if not r["is_fwd"])
-        out.append(row)
-    return pd.DataFrame(out)
-
-
-@settings(max_examples=150, deadline=None)
-@given(groups, st.integers(min_value=1, max_value=20),
-       st.sampled_from(["half_even", "r6"]))
-def test_salted_merge_bit_equal_for_any_bucketing(rows, bucket_size, rounding):
-    from flow_feature_spark.salted import _merge_session
-
-    dicts = _to_dicts(rows)
-    got = None
-    if dicts:
-        merged = _merge_session(_partials_frame(dicts, bucket_size), rounding)
-        got = [merged[n] for n in FEATURE_NAMES] if merged is not None else None
-    direct = feature_vector(**_to_arrays(rows), rounding=rounding)
-    if direct is None or not dicts:
-        assert got is None
-        return
-    assert got == list(direct), str([
-        (n, a, b) for n, a, b in zip(FEATURE_NAMES, got, direct) if a != b
-    ])

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from flow_feature_spark.prepare import normalize_turns
@@ -176,11 +177,26 @@ def test_bucketed_matches_plain(spark):
     from flow_feature_spark.sessionize import assign_sessions_bucketed
 
     df = _synth_turns(spark)
-    for gap_s in (100.0, 1800.0):
-        want = _ids(assign_sessions(df, gap_seconds=gap_s))
-        for bt in (7, 64, 8192):  # tiny buckets force real boundary stitching
-            got = _ids(assign_sessions_bucketed(df, gap_seconds=gap_s, bucket_turns=bt))
-            assert got == want, f"gap={gap_s} bucket_turns={bt}"
+    # a ts swap INSIDE one bucket (c4 turns 22/23 share a bucket at every
+    # size below): the within-bucket windows sort by (ts, turn_idx), so the
+    # swap is answered, not refused
+    swap = F.col("conv_id") == "c4"
+    ts_of = {r["turn_idx"]: r["ts_us"] for r in df.filter(swap).collect()}
+    assert ts_of[22] < ts_of[23]
+    swapped = df.withColumn(
+        "ts_us",
+        F.when(swap & (F.col("turn_idx") == 22), F.lit(ts_of[23]))
+        .when(swap & (F.col("turn_idx") == 23), F.lit(ts_of[22]))
+        .otherwise(F.col("ts_us")),
+    )
+    for name, d in (("in-order", df), ("swap-in-bucket", swapped)):
+        for gap_s in (100.0, 1800.0):
+            want = _ids(assign_sessions(d, gap_seconds=gap_s))
+            for bt in (7, 64, 8192):  # tiny buckets force real boundary stitching
+                got = _ids(
+                    assign_sessions_bucketed(d, gap_seconds=gap_s, bucket_turns=bt)
+                )
+                assert got == want, f"{name} gap={gap_s} bucket_turns={bt}"
 
 
 def test_bucketed_reset_tool(spark):
@@ -217,13 +233,15 @@ def test_bucketed_no_conv_partitioned_window(spark):
             assert any("__bkt" in c for c in cols), plan
 
 
-def test_precondition_violations(spark):
-    from pyspark.sql import functions as F
+def test_bucketed_raises_on_bucket_order_violation(spark):
+    """A conversation whose turn_idx order runs against ts across a bucket
+    boundary would get wrong ids; the sessionizer refuses it, naming the
+    conversation, when the frame is evaluated."""
+    from pyspark.errors import PySparkException
 
-    from flow_feature_spark.sessionize import precondition_violations
+    from flow_feature_spark.sessionize import assign_sessions_bucketed
 
     df = _synth_turns(spark)
-    assert precondition_violations(df, bucket_turns=16).count() == 0
     # break ts ordering mid-conv on the 900-turn conv (c4 in sizes order)
     bad = df.withColumn(
         "ts_us",
@@ -231,8 +249,9 @@ def test_precondition_violations(spark):
             (F.col("conv_id") == "c4") & (F.col("turn_idx") == 500), F.lit(1)
         ).otherwise(F.col("ts_us")),
     )
-    got = [r[0] for r in precondition_violations(bad, bucket_turns=16).collect()]
-    assert got == ["c4"]
+    out = assign_sessions_bucketed(bad, gap_seconds=1800.0, bucket_turns=16)
+    with pytest.raises(PySparkException, match="conversation c4 "):
+        out.collect()
 
 
 def test_bucketed_adversarial_boundaries(spark):

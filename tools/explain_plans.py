@@ -70,29 +70,11 @@ def main() -> int:
     n_ev = len(re.findall(r"\+- Exchange|^Exchange", pe, re.M))
     check("events-mapped pipeline has <= 2 exchanges", n_ev <= 2, f"found {n_ev}")
 
-    # 1b. salted path: the bucket windows must run under a (conv, session,
-    # bucket) exchange — Spark would otherwise satisfy their clustering with
-    # the upstream conv_id partitioning (a key subset) and keep every bucket
-    # of a hot conversation in ONE task (the round-2 de-skew regression trap)
-    from flow_feature_spark.salted import salted_session_features
-    from flow_feature_spark.sessionize import assign_sessions
-
-    salted = salted_session_features(assign_sessions(turns, 1800.0))
-    ps = plan_of(salted, "simple")
-    check(
-        "salted bucket windows have their own bucket-key exchange",
-        re.search(r"Exchange hashpartitioning\(conv_id[^)]*bucket", ps) is not None,
-    )
-    check(
-        "salted plan has no full-session window",
-        re.search(r"windowspecdefinition\(conv_id#\d+, session_id#\d+L, ts_us", ps) is None,
-    )
-
     # 1c. bucketized sessionizer: the big-side exchange must be on
     # (conv, bucket) and NO per-row window may be partitioned by conv alone
     # (that would be the single-task-per-conversation straggler this design
     # removes; only the tiny per-bucket SUMMARY window runs per conv)
-    from flow_feature_spark.sessionize import assign_sessions_bucketed
+    from flow_feature_spark.sessionize import assign_sessions, assign_sessions_bucketed
 
     bk = assign_sessions_bucketed(turns, 1800.0, bucket_turns=64)
     pb = plan_of(bk, "simple")

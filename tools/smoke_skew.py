@@ -2,17 +2,11 @@
 
 Measures, each in its OWN JVM on the same tmpfs input:
   1. plain fused pipeline (scan -> normalize -> fused sessionize+kernel)
-  2. adaptive routing (hot conv -> salted partial-moment path, rest -> fused)
-  3. hot-conv-only isolate: single-task grouped kernel vs the salted path
-     (the direct before/after of the de-skewed salted pre-pass: the grouped
-     kernel funnels all rows of the conv through ONE task, the salted path
-     spreads them over n_turns/bucket_turns tasks)
-  4. sessionization isolate on the hot conv: the per-conv window
-     (assign_sessions) vs the bucketized two-pass sessionizer — the r3 fix
-     for the last single-task surface
-  5. max-task-rows instrumentation: partition row counts at the two
-     bucket-scoped shuffle points (sessionizer + salted feature stage) of
-     the hot conv, proving no task sorts more than a few buckets' worth
+  2. sessionization isolate on the hot conv: the per-conv window
+     (assign_sessions) vs the bucketized two-pass sessionizer
+  3. max-task-rows instrumentation: partition row counts at the
+     sessionizer's (conv, bucket) shuffle of the hot conv, proving no task
+     sorts more than a few buckets' worth
 
 Appends a results table to BENCH/SCALE_SMOKE.md. Machine must be idle.
 Usage: python tools/smoke_skew.py [n_convs] [hot_factor]
@@ -34,12 +28,10 @@ sys.path.insert(0, {repo!r})
 from flow_feature_spark.session import get_spark
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
-from flow_feature_spark.kernel import extract_session_features
-from flow_feature_spark.salted import adaptive_session_features, salted_session_features
 from flow_feature_spark.sessionize import assign_sessions, assign_sessions_bucketed
 from pyspark.sql import functions as F
 
-job, path, hot_threshold = sys.argv[1], sys.argv[2], int(sys.argv[3])
+job, path = sys.argv[1], sys.argv[2]
 spark = get_spark(app_name=f"skew_{{job}}", master="local[32]", shuffle_partitions=64)
 stored = spark.read.parquet(path)
 
@@ -48,9 +40,6 @@ def run():
     if job == "plain_fused":
         return sessionize_and_extract_fast(turns, 1800.0, rounding="r6",
                                            num_partitions=64).count()
-    if job == "adaptive":
-        return adaptive_session_features(turns, 1800.0, rounding="r6",
-                                         hot_turn_threshold=hot_threshold).count()
     hot = turns.filter(F.col("conv_id") == "conv00000000")
     if job == "hot_sess_plain":
         # agg over session_id so the window cannot be pruned away by count()
@@ -60,22 +49,18 @@ def run():
         return assign_sessions_bucketed(hot, gap_seconds=1800.0).agg(
             F.sum("session_id")).collect()[0][0]
     if job == "task_rows":
-        # partition row counts at the two bucket-scoped shuffle points the
-        # hot conv flows through (sessionizer pass 1 + salted feature stage).
-        # AQE partition COALESCING is disabled for the measurement: it merges
-        # small partitions by BYTES (the right production behavior — task
-        # volume stays byte-bounded either way), which at smoke scale would
-        # re-fuse the fan-out and hide the key-level layout under test.
+        # partition row counts at the sessionizer's (conv, bucket) shuffle of
+        # the hot conv. AQE partition COALESCING is disabled for the
+        # measurement: it merges small partitions by BYTES (the right
+        # production behavior — task volume stays byte-bounded either way),
+        # which at smoke scale would re-fuse the fan-out and hide the
+        # key-level layout under test.
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        sess = assign_sessions_bucketed(hot, gap_seconds=1800.0)
         bt = 8192
         layouts = {{
             "sessionizer(conv,bkt)": hot.withColumn(
                 "b", F.floor(F.col("turn_idx").cast("long") / bt)
             ).repartition("conv_id", "b"),
-            "salted(conv,sess,bkt)": sess.withColumn(
-                "b", F.floor(F.col("turn_idx").cast("long") / bt)
-            ).repartition("conv_id", "session_id", "b"),
         }}
         out = {{}}
         for name, df in layouts.items():
@@ -84,14 +69,6 @@ def run():
             out[name] = {{"max_task_rows": per[0], "n_tasks": per[1]}}
         print("TASKROWS " + json.dumps(out))
         return 0
-    if job == "hot_kernel":
-        # the full OLD path: per-conv window + single-task grouped kernel
-        sess = assign_sessions(hot, gap_seconds=1800.0)
-        return extract_session_features(sess, rounding="r6").count()
-    if job == "hot_salted":
-        # the full NEW path: bucketized sessionizer + salted partial moments
-        sess = assign_sessions_bucketed(hot, gap_seconds=1800.0)
-        return salted_session_features(sess, rounding="r6").count()
     raise SystemExit(f"unknown job {{job}}")
 
 run()  # warm-up
@@ -123,11 +100,10 @@ def main() -> int:
     worker = WORKER.format(repo=REPO)
     results = {}
     taskrows = None
-    jobs = ("hot_sess_plain", "hot_sess_bucketed", "hot_kernel", "hot_salted",
-            "plain_fused", "adaptive", "task_rows")
+    jobs = ("hot_sess_plain", "hot_sess_bucketed", "plain_fused", "task_rows")
     for job in jobs:
         proc = subprocess.run(
-            [sys.executable, "-c", worker, job, path, str(600_000)],
+            [sys.executable, "-c", worker, job, path],
             capture_output=True, text=True, timeout=3600,
         )
         tr_lines = [l for l in proc.stdout.splitlines() if l.startswith("TASKROWS ")]
@@ -144,7 +120,7 @@ def main() -> int:
     stamp = utc_stamp()
     md = [
         "",
-        f"## Extreme-skew re-run ({stamp}) — de-skewed salted pre-pass",
+        f"## Extreme-skew re-run ({stamp})",
         "",
         f"Input: {n_total:,} turns, {n_convs:,} convs, hot conv = {n_hot:,} turns"
         f" ({hot_factor:,}x median). local[32], shuffle partitions 64, tmpfs,"
@@ -155,24 +131,20 @@ def main() -> int:
     ]
     for job, r in results.items():
         md.append(f"| {job} | {r['best']} | {r['all']} | {r['out_rows']:,} |")
-    hk, hs = results["hot_kernel"]["best"], results["hot_salted"]["best"]
     sp, sb = results["hot_sess_plain"]["best"], results["hot_sess_bucketed"]["best"]
     md += [
         "",
-        f"Hot-conv isolate (full path): bucketized sessionizer + salted"
-        f" partial moments {hs} s vs per-conv window + single-task grouped"
-        f" kernel {hk} s -> **{hk / hs:.1f}x** on the straggler alone.",
         f"Sessionization isolate: bucketized two-pass {sb} s vs per-conv"
         f" window {sp} s -> **{sp / sb:.1f}x** (the r3 fix: the last"
         " single-task surface removed; session ids bit-identical, pinned in"
         " tests + the sessionize_bucketed driver oracle).",
-        f"Whole-table: adaptive routing {results['adaptive']['best']} s vs"
-        f" plain fused {results['plain_fused']['best']} s at this skew level.",
+        f"Whole-table: plain fused {results['plain_fused']['best']} s.",
     ]
     if taskrows:
-        md += ["", "Max task rows of the hot conv at each bucket-scoped"
-               " shuffle (bucket_turns=8192; a task may own a few hash-"
-               "colliding buckets, never the whole conversation):", ""]
+        md += ["", "Max task rows of the hot conv at the sessionizer's"
+               " bucket-scoped shuffle (bucket_turns=8192; a task may own a"
+               " few hash-colliding buckets, never the whole conversation):",
+               ""]
         md += ["| stage | max task rows | tasks |", "|---|---|---|"]
         for name, r in taskrows.items():
             md.append(f"| {name} | {r['max_task_rows']:,} | {r['n_tasks']} |")
