@@ -2,26 +2,26 @@
 every entity x timestamp probe (SURVEY.md §2.3 J1 — north-rule mandate; the
 reference performs no joins).
 
-Two production strategies, cross-checked in tests against each other and
-against a cogrouped ``pd.merge_asof`` oracle (tests/reference_asof.py):
+Two strategies, cross-checked in tests against each other and against a
+cogrouped ``pd.merge_asof`` oracle (tests/reference_asof.py):
 
 * ``asof_join_union_window`` — pure Spark SQL: tag both sides, union, one
   window pass per entity ordered by (ts, side), ``last(payload,
   ignorenulls=True)``, keep probe rows. Strictness (`<` vs `<=`) is encoded in
   the tie order of the ``side`` column at equal timestamps. This is the
-  SQL-expressible form used as the DuckDB oracle — AND the scale path: it
-  never crosses the Arrow boundary, measured 8-13x faster than the Arrow
-  strategy at 30M probes with 8->32-core scaling at ~0.98 of the hardware
-  ceiling (BENCH/BASELINE.md). Paired with session_features_exact_sql the
-  whole probe pipeline is JVM-only.
+  SQL-expressible form used as the DuckDB oracle AND the production path:
+  ``job.py --mode asof`` uses it under every engine. It never crosses the
+  Arrow boundary, measured 8-13x faster than the Arrow strategy at 30M probes
+  with 8->32-core scaling at ~0.98 of the hardware ceiling
+  (BENCH/BASELINE.md).
 * ``asof_join_fast`` — vectorized Arrow sort-merge: union both sides,
   ONE hash co-shuffle on entity + partition-local sort by (entity, ts, side),
   then a single vectorized forward-fill pass per Arrow batch
   (np.maximum.accumulate over feature-row indices) with one carried feature
-  row across batch boundaries. No per-entity Python calls; the strategy for
-  pipelines that continue in pandas (the whole 30M-row stream pays the Arrow
-  socket once per side — per-executor on a cluster, but the dominant term on
-  one host).
+  row across batch boundaries. No per-entity Python calls. It serves the
+  declared queries built on it and pipelines that continue in pandas; the
+  whole stream pays the Arrow socket once per side, the dominant term on one
+  host.
 
 Zero-leakage contract (strict=True): a probe at ts T sees only features with
 feature_ts strictly < T. Probes before any feature, and entities with no
@@ -36,10 +36,10 @@ strategies and the DuckDB oracle).
 
 Driver-side rule: under PySpark 4.1's call-site capture every ``Column`` API
 call costs about 10 py4j round trips, so both strategies build their wide
-projections (the payload, the null-filled probe side, the output expansion)
-in a constant number of calls — from column names, SQL text,
-``unionByName(allowMissingColumns=True)`` and ``struct.*`` — never one
-``Column`` per feature column.
+projections (the payload, the null-filled probe side, the window, the output
+expansion) in a constant number of calls — from column names, SQL text
+(``selectExpr``/``where``), ``unionByName(allowMissingColumns=True)`` and
+``struct.*`` — never one ``Column`` per feature column.
 """
 
 from __future__ import annotations
@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from flow_feature_spark.prepare import quote_ident
 
 
 def _tol_us(tolerance_seconds: float | None) -> int | None:
@@ -68,11 +70,6 @@ def _tol_us(tolerance_seconds: float | None) -> int | None:
             "must be >= 1 µs (or None for unbounded lookback)"
         )
     return tol_us
-
-
-def _quote(name: str) -> str:
-    """``name`` as a Spark SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _feature_value_cols(features: DataFrame, entity_col: str, ts_col: str) -> list[str]:
@@ -97,45 +94,41 @@ def asof_join_union_window(
     # (cannot see it); inclusive -> after.
     probe_side, feat_side = (0, 1) if strict else (1, 0)
 
+    q = quote_ident
     payload = ", ".join(
-        [f"unix_micros(CAST({_quote(feature_ts)} AS TIMESTAMP)) AS __ft_us"]
-        + [_quote(c) for c in vals]
+        [f"unix_micros(CAST({q(feature_ts)} AS TIMESTAMP)) AS __ft_us"]
+        + [q(c) for c in vals]
     )
-    f = features.select(
-        F.col(feature_entity).alias("__ent"),
-        F.unix_micros(F.col(feature_ts).cast("timestamp")).alias("__t_us"),
-        F.lit(feat_side).alias("__side"),
-        F.expr(f"struct({payload})").alias("__payload"),
-        F.lit(None).cast("timestamp").alias(probe_ts),
+    f = features.selectExpr(
+        f"{q(feature_entity)} AS __ent",
+        f"unix_micros(CAST({q(feature_ts)} AS TIMESTAMP)) AS __t_us",
+        f"{feat_side} AS __side",
+        f"struct({payload}) AS __payload",
+        f"CAST(NULL AS TIMESTAMP) AS {q(probe_ts)}",
     )
-    p = probes.select(
-        F.col(probe_entity).alias("__ent"),
-        F.unix_micros(F.col(probe_ts).cast("timestamp")).alias("__t_us"),
-        F.lit(probe_side).alias("__side"),
-        F.col(probe_ts),
+    p = probes.selectExpr(
+        f"{q(probe_entity)} AS __ent",
+        f"unix_micros(CAST({q(probe_ts)} AS TIMESTAMP)) AS __t_us",
+        f"{probe_side} AS __side",
+        q(probe_ts),
     )
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("__ent")
-        .orderBy("__t_us", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    last = (
+        "last(__payload, true) OVER (PARTITION BY __ent ORDER BY __t_us, __side "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     joined = (
         f.unionByName(p, allowMissingColumns=True)  # probes: null payload
-        .withColumn("__last", F.last("__payload", ignorenulls=True).over(w))
-        .filter(F.col("__side") == probe_side)
+        .selectExpr("__ent", "__t_us", "__side", q(probe_ts), f"{last} AS __last")
+        .where(f"__side = {probe_side}")
     )
     if tol_us is not None:
-        fresh = (
-            F.col("__last").isNotNull()
-            & ((F.col("__t_us") - F.col("__last").getField("__ft_us")) <= tol_us)
+        # a null __last compares as null, so the CASE keeps it null
+        joined = joined.selectExpr(
+            "__ent", q(probe_ts),
+            f"CASE WHEN __t_us - __last.__ft_us <= {tol_us} THEN __last END AS __last",
         )
-        joined = joined.withColumn(
-            "__last", F.when(fresh, F.col("__last"))
-        )
-    return joined.select(
-        F.col("__ent").alias(probe_entity), F.col(probe_ts), "__last.*"
+    return joined.selectExpr(
+        f"__ent AS {q(probe_entity)}", q(probe_ts), "__last.*"
     ).drop("__ft_us")
 
 

@@ -95,8 +95,9 @@ def build_parser() -> argparse.ArgumentParser:
         default="fast",
         help="fast: fused Arrow kernel (fewest shuffles); kernel: grouped "
         "exact kernel; exact-sql: exact-domain pure SQL, no Python boundary "
-        "(--mode asof then uses the union-window join, also JVM-only; with "
-        "--sessionizer bucketed it is the skew path for mega-conversations)",
+        "(with --sessionizer bucketed it is the skew path for "
+        "mega-conversations). --mode asof attaches the vectors with the "
+        "JVM-only union-window join under every engine",
     )
     p.add_argument("--rounding", choices=["half_even", "r6"], default="half_even")
     p.add_argument("--sessionizer", choices=["sql", "bucketed"], default="sql",
@@ -190,7 +191,7 @@ def run(argv: list[str] | None = None) -> int:
             "--mode incremental requires --turns-table and --features-table"
         )
 
-    from flow_feature_spark.asof import asof_join_fast
+    from flow_feature_spark.asof import asof_join_union_window
     from flow_feature_spark.io import resume_or_compute
     from flow_feature_spark.kernel import attach_feature_ts, extract_session_features
     from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
@@ -451,6 +452,11 @@ def run(argv: list[str] | None = None) -> int:
         turns = normalize_turns(df)
         if args.drop_housekeeping:
             turns = drop_housekeeping(turns)
+        if effective_engine == "fast" and args.mode in ("features", "asof"):
+            # the fused kernel shuffles on conv_id; shuffling the dedup there
+            # too satisfies its (conv_id, turn_idx) window, and Spark drops
+            # the kernel's same-key repartition: one exchange, not two
+            turns = turns.repartition("conv_id")
         turns = dedup_turns(turns)
         if args.mode == "sessionize":
             return assign_sessions(
@@ -480,16 +486,7 @@ def run(argv: list[str] | None = None) -> int:
         if args.mode == "asof":
             probes = spark.read.parquet(args.probes)
             payload = feats.drop("session_start_ts", "session_end_ts")
-            if effective_engine == "exact-sql":
-                # keep the WHOLE pipeline JVM-only: the union-window as-of is
-                # measured 8-13x faster than the Arrow strategy at 30M probes
-                # and scales at ~0.98 vs the hardware ceiling 8->32
-                # (BENCH/BASELINE.md) — the Arrow sort-merge stays the
-                # strategy for pandas-side extensibility
-                from flow_feature_spark.asof import asof_join_union_window
-
-                return asof_join_union_window(payload, probes, strict=True)
-            return asof_join_fast(payload, probes, strict=True)
+            return asof_join_union_window(payload, probes, strict=True)
         return feats
 
     partition_cols: tuple[str, ...] | None = None

@@ -13,38 +13,25 @@ from pyspark.sql import functions as F
 from flow_feature_spark.schema import FWD_ROLE, TOOL_FLAG_BITS
 
 
-def ts_seconds(ts: Column) -> Column:
-    """timestamp -> epoch seconds as double, exact at microsecond precision.
-
-    ``unix_micros`` keeps integer micros; the single /1e6 division is the one
-    float op, identical across engines (used verbatim in the DuckDB oracles as
-    ``epoch_us(ts)/1e6``). Parquet TIMESTAMP_NTZ is cast to TIMESTAMP first —
-    the session timezone is pinned to UTC, so the cast is a pure reinterpret
-    that agrees with DuckDB's naive-UTC timestamps.
-    """
-    return F.unix_micros(ts.cast("timestamp")) / F.lit(1e6)
+def quote_ident(name: str) -> str:
+    """``name`` as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def tool_flags(tool_col: str) -> Column:
-    """tool name -> 8-bit bitmask (the TCP-flags analog, flow.py:375-378).
+def _sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Built as one SQL ``CASE`` over the column named ``tool_col`` (null and
-    unknown tools map to 0): a chain of ``F.when`` calls would cost about
-    10 py4j round trips per Column call.
-    """
+
+def _tool_flags_sql(tool: str) -> str:
+    """SQL text: the tool name in column ``tool`` (a quoted identifier) ->
+    8-bit bitmask (the TCP-flags analog, flow.py:375-378); null and unknown
+    tools map to 0."""
     arms = " ".join(
-        f"WHEN '{name}' THEN {1 << bit}" for name, bit in TOOL_FLAG_BITS.items()
+        f"WHEN {_sql_str(name)} THEN {1 << bit}"
+        for name, bit in TOOL_FLAG_BITS.items()
     )
-    quoted = tool_col.replace("`", "``")
-    return F.expr(f"CAST(CASE `{quoted}` {arms} ELSE 0 END AS INT)")
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count (the tcp.window analog for transcripts)."""
-    t = F.trim(F.coalesce(text, F.lit("")))
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))
-    ).cast("long")
+    return f"CAST(CASE {tool} {arms} ELSE 0 END AS INT)"
 
 
 def filter_valid_turns(df: DataFrame, ts_col: str = "ts", conv_col: str = "conv_id") -> DataFrame:
@@ -132,18 +119,34 @@ def normalize_turns(
     scale is ~0.5 µs, so subtracting rounded double seconds would drift),
     ts_sec (display/compat), is_fwd, plen, win, flags, ihl, plus the original
     text (for per-turn invariant checks downstream).
+
+    ts_sec divides the integer micros once by 1e6, the one float op, identical
+    across engines (the DuckDB oracles use it verbatim as ``epoch_us(ts)/1e6``).
+    Parquet TIMESTAMP_NTZ is cast to TIMESTAMP first — the session timezone is
+    pinned to UTC, so the cast is a pure reinterpret that agrees with DuckDB's
+    naive-UTC timestamps.
+
+    Built as one ``selectExpr`` of SQL text: under PySpark's call-site
+    capture every ``Column`` API call costs about 10 py4j round trips.
     """
-    return df.select(
-        F.col(conv_col).alias("conv_id"),
-        F.col(turn_col).cast("int").alias("turn_idx"),
-        F.col(role_col).alias("role"),
-        F.col(text_col).alias("text"),
-        F.col(ts_col).alias("ts"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
-        ts_seconds(F.col(ts_col)).alias("ts_sec"),
-        (F.col(role_col) == fwd_role).alias("is_fwd"),
-        F.length(F.coalesce(F.col(text_col), F.lit(""))).cast("long").alias("plen"),
-        token_count(F.col(text_col)).alias("win"),
-        tool_flags(tool_col).alias("flags"),
-        F.length(F.coalesce(F.col(role_col), F.lit(""))).cast("long").alias("ihl"),
+    q = quote_ident
+    role, text, ts = q(role_col), q(text_col), q(ts_col)
+    ts_us = f"unix_micros(CAST({ts} AS TIMESTAMP))"
+    trimmed = f"trim(coalesce({text}, ''))"
+    return df.selectExpr(
+        f"{q(conv_col)} AS conv_id",
+        f"CAST({q(turn_col)} AS INT) AS turn_idx",
+        f"{role} AS role",
+        f"{text} AS text",
+        f"{ts} AS ts",
+        f"{ts_us} AS ts_us",
+        f"{ts_us} / 1000000.0D AS ts_sec",
+        f"({role} = {_sql_str(fwd_role)}) AS is_fwd",
+        f"CAST(length(coalesce({text}, '')) AS BIGINT) AS plen",
+        # whitespace token count (the tcp.window analog); the SQL literal
+        # '\\s+' reaches the regex engine as \s+
+        f"CAST(CASE WHEN length({trimmed}) = 0 THEN 0 "
+        f"ELSE size(split({trimmed}, '\\\\s+')) END AS BIGINT) AS win",
+        f"{_tool_flags_sql(q(tool_col))} AS flags",
+        f"CAST(length(coalesce({role}, '')) AS BIGINT) AS ihl",
     )

@@ -15,6 +15,7 @@ from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.synth import synth_probes, synth_transcripts
 
 from tests.reference_asof import asof_join_merge
+from tests.round_trips import calling_thread_round_trips
 
 N = 40
 
@@ -204,35 +205,14 @@ def test_build_round_trip_budget(spark, strategy):
     number of py4j round trips, not several per feature column: every Column
     call pays about 10 under PySpark's call-site capture, so per-column
     Column calls alone cost 3,500-6,000 here."""
-    import threading
-
-    import py4j.clientserver as cs
-
     from flow_feature_spark import asof
 
     build = {"fast": asof.asof_join_fast,
              "union_window": asof.asof_join_union_window}[strategy]
     feats, probes = _wide_payload(spark)
     build(feats, probes)  # warm: first-call imports and lookups
-    orig = cs.ClientServerConnection.send_command
-    calls = [0]
-    caller = threading.get_ident()
-
-    def counting(self, command):
-        # only the building thread's calls: py4j releases garbage-collected
-        # Java references ("m d" commands) from a background thread at
-        # arbitrary moments, adding hundreds of calls the build did not make
-        if threading.get_ident() == caller:
-            calls[0] += 1
-        return orig(self, command)
-
-    cs.ClientServerConnection.send_command = counting
-    try:
-        out = build(feats, probes)
-    finally:
-        cs.ClientServerConnection.send_command = orig
-    assert calls[0] > 0  # the patched method is the one py4j calls
-    assert calls[0] < 600, calls[0]
+    out, calls = calling_thread_round_trips(lambda: build(feats, probes))
+    assert calls < 600, calls
     assert out.columns[2:] == feats.columns[2:]
 
 

@@ -276,31 +276,80 @@ def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
         ])
 
 
+def _write_probes(spark, inp, path):
+    spark.read.parquet(inp).select(
+        F.col("conv_id").alias("entity_id"), F.col("ts").alias("probe_ts")
+    ).write.mode("overwrite").parquet(path)
+
+
 def test_job_asof_mode_engines_agree(spark, tmp_path):
-    """--mode asof: the JVM-only route (exact-sql + union-window) and the
-    Arrow route (kernel + sort-merge) must produce identical rows at r6 —
-    two genuinely different engines and two different as-of strategies."""
-    from pyspark.sql import functions as F
+    """--mode asof: every engine's vectors go through the one union-window
+    as-of join, and fast, kernel and exact-sql give identical r6 rows in one
+    pinned output layout: the probe columns, then the feature payload in
+    feature order."""
+    from flow_feature_spark.schema import FEATURE_NAMES
 
     inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
     _write_input(spark, inp)
-    src = spark.read.parquet(inp)
-    src.select(
-        F.col("conv_id").alias("entity_id"), F.col("ts").alias("probe_ts")
-    ).write.mode("overwrite").parquet(probes_p)
+    _write_probes(spark, inp, probes_p)
 
     outs = {}
-    for tag, eng in (("arrow", "kernel"), ("jvm", "exact-sql")):
-        out = f"{tmp_path}/asof_{tag}"
+    for eng in ("fast", "kernel", "exact-sql"):
+        out = f"{tmp_path}/asof_{eng}"
         assert job.run([
             "--input", inp, "--output", out, "--mode", "asof",
             "--probes", probes_p, "--engine", eng, "--rounding", "r6",
         ]) == 0
-        outs[tag] = spark.read.parquet(out)
-    cols = sorted(outs["arrow"].columns)
-    a, b = outs["arrow"].select(cols), outs["jvm"].select(cols)
-    assert a.count() == b.count() > 0
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        outs[eng] = spark.read.parquet(out)
+    want_dtypes = [
+        ("entity_id", "string"), ("probe_ts", "timestamp"),
+        ("session_id", "bigint"), ("n_turns", "bigint"),
+    ] + [(c, "double") for c in FEATURE_NAMES]
+    base = outs["exact-sql"]
+    assert base.count() > 0
+    assert base.filter(F.col("session_id").isNotNull()).count() > 0
+    for eng, got in outs.items():
+        assert got.dtypes == want_dtypes, eng
+        assert base.exceptAll(got).count() == 0, eng
+        assert got.exceptAll(base).count() == 0, eng
+
+
+def _last_plan_nodes(spark) -> list[tuple[str, str]]:
+    """(name, description) of every node of the last SQL execution's final
+    plan, read from Spark's status store (kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    graph = store.planGraph(execs.apply(execs.size() - 1).executionId())
+    nodes = graph.allNodes()
+    return [(nodes.apply(i).name(), nodes.apply(i).desc())
+            for i in range(nodes.size())]
+
+
+def test_job_plan_shapes(spark, tmp_path):
+    """The executed plans keep their exchange budget: under the fast engine
+    the dedup shares the kernel's conv_id exchange, and --mode asof adds one
+    exchange and no second Python stage. The bucketed skew path keeps its
+    (conv_id, bucket) shuffle, so a hot conversation is never one task."""
+    import re
+
+    inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
+    _write_input(spark, inp)
+    _write_probes(spark, inp, probes_p)
+
+    def plan(*argv):
+        assert job.run(["--input", inp, "--output", f"{tmp_path}/out",
+                        *argv]) == 0
+        return _last_plan_nodes(spark)
+
+    asof = [n for n, _ in plan("--mode", "asof", "--probes", probes_p)]
+    assert asof.count("Exchange") == 2, asof
+    assert asof.count("MapInPandas") == 1, asof
+    feats = [n for n, _ in plan("--mode", "features")]
+    assert feats.count("Exchange") == 1, feats
+
+    bucketed = plan("--engine", "exact-sql", "--sessionizer", "bucketed")
+    bkt = re.compile(r"hashpartitioning\(conv_id#\d+, __bkt#\d+L?, ")
+    assert any(n == "Exchange" and bkt.search(d) for n, d in bucketed)
 
 
 def test_job_rollup_mode(spark, tmp_path):

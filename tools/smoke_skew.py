@@ -86,36 +86,37 @@ def main() -> int:
 
     from flow_feature_spark.synth import synth_transcripts
 
-    path = os.path.join(tempfile.mkdtemp(prefix="ffs_skew_", dir="/dev/shm"),
-                        "transcripts")
-    spark = tool_spark("skew_gen", cpus=32, shuffle_partitions=64)
-    tr = synth_transcripts(spark, n_convs=n_convs, turns_mean=60,
-                           hot_factor=hot_factor, partitions=64)
-    tr.write.mode("overwrite").parquet(path)
-    n_total = spark.read.parquet(path).count()
-    n_hot = spark.read.parquet(path).filter("conv_id = 'conv00000000'").count()
-    spark.stop()
-    print(f"input: {n_total:,} turns, hot conv {n_hot:,}")
+    # the input lives in tmpfs (RAM): remove it however the run ends
+    with tempfile.TemporaryDirectory(prefix="ffs_skew_", dir="/dev/shm") as tmp:
+        path = os.path.join(tmp, "transcripts")
+        spark = tool_spark("skew_gen", cpus=32, shuffle_partitions=64)
+        tr = synth_transcripts(spark, n_convs=n_convs, turns_mean=60,
+                               hot_factor=hot_factor, partitions=64)
+        tr.write.mode("overwrite").parquet(path)
+        n_total = spark.read.parquet(path).count()
+        n_hot = spark.read.parquet(path).filter("conv_id = 'conv00000000'").count()
+        spark.stop()
+        print(f"input: {n_total:,} turns, hot conv {n_hot:,}")
 
-    worker = WORKER.format(repo=REPO)
-    results = {}
-    taskrows = None
-    jobs = ("hot_sess_plain", "hot_sess_bucketed", "plain_fused", "task_rows")
-    for job in jobs:
-        proc = subprocess.run(
-            [sys.executable, "-c", worker, job, path],
-            capture_output=True, text=True, timeout=3600,
-        )
-        tr_lines = [l for l in proc.stdout.splitlines() if l.startswith("TASKROWS ")]
-        if tr_lines:
-            taskrows = json.loads(tr_lines[-1][len("TASKROWS "):])
-            print(json.dumps(taskrows))
-        lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
-        if not lines:
-            print(proc.stderr[-3000:])
-            raise RuntimeError(f"job {job} failed")
-        results[job] = json.loads(lines[-1][len("RESULT "):])
-        print(json.dumps(results[job]))
+        worker = WORKER.format(repo=REPO)
+        results = {}
+        taskrows = None
+        jobs = ("hot_sess_plain", "hot_sess_bucketed", "plain_fused", "task_rows")
+        for job in jobs:
+            proc = subprocess.run(
+                [sys.executable, "-c", worker, job, path],
+                capture_output=True, text=True, timeout=3600,
+            )
+            tr_lines = [l for l in proc.stdout.splitlines() if l.startswith("TASKROWS ")]
+            if tr_lines:
+                taskrows = json.loads(tr_lines[-1][len("TASKROWS "):])
+                print(json.dumps(taskrows))
+            lines = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
+            if not lines:
+                print(proc.stderr[-3000:])
+                raise RuntimeError(f"job {job} failed")
+            results[job] = json.loads(lines[-1][len("RESULT "):])
+            print(json.dumps(results[job]))
 
     stamp = utc_stamp()
     md = [
