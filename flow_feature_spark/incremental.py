@@ -21,7 +21,12 @@ Scale shape at 100 TB:
   history scan (one pass with a broadcast semi-join — no shuffle of the
   100-TB side) and is also the replace's key set, so the feature plan runs
   once, in the feature-table write, instead of a second time just to
-  list the conversations it produced;
+  list the conversations it produced; their count (``touched_convs``) is
+  observed on the jobs that scan them, so no job of its own counts them;
+- each table's snapshot log is read once per update (the commits and
+  reads take the parsed log or entry), and every snapshot read takes its
+  schema from the log, so no parquet footer is read to infer one: a warm
+  update runs only the jobs of its two commits;
 - the feature recompute is the JVM-only exact-SQL engine, shuffling only the
   touched conversations' turns;
 - the feature-table rewrite is copy-on-write replace_groups; bound it with
@@ -32,14 +37,16 @@ Scale shape at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from flow_feature_spark.io import (
+    _entry_reader,
+    _read_entry,
     _read_log,
-    read_snapshot,
-    replace_groups_partitioned,
-    replace_groups_snapshot,
+    _replace_groups,
+    _replace_groups_partitioned,
+    _write_snapshot,
     write_snapshot,
 )
 
@@ -69,6 +76,8 @@ def incremental_feature_update(
 
     The distinct touched conversation ids are broadcast into the history
     scan (the right call when the delta is a day against years of history).
+    A later call reads each table's snapshot log once and runs no job
+    beyond its two commits: no schema inference, no separate count.
 
     ``feature_buckets=N`` stores the feature table hive-partitioned by
     ``__bucket = xxhash64(conv_id) % N`` and updates it with
@@ -110,10 +119,12 @@ def incremental_feature_update(
         bucketed = True
     else:
         bucket_of, bucketed = None, False
-    first = not _read_log(spark, turns_table)
-    if first:
-        te = write_snapshot(new_turns, turns_table, job="incremental")
-        feats = feats_of(read_snapshot(spark, turns_table))
+    # each table's log is read once; the commits and reads below take the
+    # parsed log or entry, and every read takes its schema from the log
+    turns_log = _read_log(spark, turns_table)
+    if not turns_log:
+        te = _write_snapshot(new_turns, turns_table, turns_log, job="incremental")
+        feats = feats_of(_read_entry(spark, turns_table, te))
         if bucketed:
             fe = write_snapshot(
                 feats.withColumn("__bucket", bucket_of),
@@ -132,36 +143,45 @@ def incremental_feature_update(
             "features_snapshot": fe["snapshot_id"],
         }
 
-    te = write_snapshot(
-        new_turns, turns_table, job="incremental", operation="append"
+    te = _write_snapshot(
+        new_turns, turns_table, turns_log, job="incremental", operation="append"
     )
     # the touched ids come from the committed delta directory, not from
     # new_turns (each use would rerun its normalize + dedup plan), and they
     # are the replace's keys, not feats' own ids (which would rerun the
     # feature plan inside the write). history holds only touched
     # conversations, so the keys cover every conversation in feats — the
-    # replaces' precondition.
+    # replaces' precondition. Their count is observed on the jobs that
+    # already scan them, not counted by a job of its own (an empty delta
+    # has none, and Spark drops the empty frame from the plans that would
+    # report the observation).
     delta_dir = f"{turns_table.rstrip('/')}/{te['dir']}"
-    touched = spark.read.parquet(delta_dir).select("conv_id").distinct()
-    history = read_snapshot(spark, turns_table).join(
+    convs = Observation()
+    touched = (
+        _entry_reader(spark, te).parquet(delta_dir).select("conv_id").distinct()
+        .observe(convs, F.expr("count(1) AS n"))
+    )
+    history = _read_entry(spark, turns_table, te).join(
         F.broadcast(touched), on="conv_id", how="left_semi"
     )
     feats = feats_of(history)
+    features_log = _read_log(spark, features_table)
     if bucketed:
-        fe = replace_groups_partitioned(
+        fe = _replace_groups_partitioned(
             feats.withColumn("__bucket", bucket_of),
             features_table,
+            features_log,
             ("conv_id",),
             "__bucket",
             keys=touched.withColumn("__bucket", bucket_of),
         )
     else:
-        fe = replace_groups_snapshot(
-            feats, features_table, ("conv_id",), keys=touched
+        fe = _replace_groups(
+            feats, features_table, features_log, ("conv_id",), keys=touched
         )
     return {
         "initialized": False,
-        "touched_convs": touched.count(),
+        "touched_convs": int(convs.get["n"]) if te["rows"] else 0,
         "turns_appended": te["rows"],
         "feature_rows": fe["rows"],
         "turns_snapshot": te["snapshot_id"],

@@ -82,14 +82,20 @@ def _manifest_path(path: str) -> str:
     return os.path.join(path, MANIFEST_NAME)
 
 
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name``, resolved in one py4j round trip (walking
+    ``spark._jvm.org.apache...`` costs one per name segment)."""
+    return getattr(spark._jvm, name)
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for the path's scheme — manifest IO must live on
-    the SAME filesystem namespace as the parquet data Spark writes, so
-    hdfs:///s3a:// checkpoint locations work, not just local paths."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath
+    """(FileSystem, Path class) for the path's scheme — manifest IO must live
+    on the SAME filesystem namespace as the parquet data Spark writes, so
+    hdfs:///s3a:// checkpoint locations work, not just local paths. The
+    Path class comes back already resolved, for the caller's own paths."""
+    Path = _jclass(spark, "org.apache.hadoop.fs.Path")
+    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, Path
 
 
 def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
@@ -100,16 +106,11 @@ def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
             return None
         with open(mp) as fh:
             return json.load(fh)
-    fs, _ = _hadoop_fs(spark, path)
-    mp = spark._jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
+    fs, Path = _hadoop_fs(spark, path)
+    mp = Path(path, MANIFEST_NAME)
     if not fs.exists(mp):
         return None
-    stream = fs.open(mp)
-    try:
-        content = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(content)
+    return json.loads(_slurp(spark, fs, mp))
 
 
 def write_checkpoint(
@@ -164,10 +165,9 @@ def write_checkpoint(
     # manifest IO through the Hadoop FS of the DATA path (write tmp, rename
     # into place — atomic on HDFS/local; the commit marker either exists
     # complete or not at all)
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path, f"{MANIFEST_NAME}.tmp.{uuid.uuid4().hex}")
-    final = jvm.org.apache.hadoop.fs.Path(path, MANIFEST_NAME)
+    fs, Path = _hadoop_fs(spark, path)
+    tmp = Path(path, f"{MANIFEST_NAME}.tmp.{uuid.uuid4().hex}")
+    final = Path(path, MANIFEST_NAME)
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(json.dumps(manifest, indent=2).encode("utf-8")))
@@ -242,7 +242,7 @@ def input_fingerprint_for(df: DataFrame) -> str:
     return f"rows={df.count()}|schema={df.schema.simpleString()}"
 
 
-def _hive_partition_cols(fs, jvm, hpath) -> tuple[str, ...]:
+def _hive_partition_cols(fs, hpath) -> tuple[str, ...]:
     """Ordered hive partition columns of a parquet directory, inferred from
     the first `col=value` directory chain (empty tuple for a flat table)."""
     cols: list[str] = []
@@ -289,12 +289,11 @@ def compact_table(
     Hadoop FS (old data removed only after the rewrite commits). Returns
     {files_before, files_after, bytes, partition_cols}.
     """
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, Path = _hadoop_fs(spark, path)
+    hpath = Path(path)
     summary = fs.getContentSummary(hpath)
     total_bytes = summary.getLength()
-    part_cols = _hive_partition_cols(fs, jvm, hpath)
+    part_cols = _hive_partition_cols(fs, hpath)
     files_before = _count_parquet_files(fs, hpath)
     n_files = max(1, -(-total_bytes // target_file_bytes))
 
@@ -329,8 +328,8 @@ def compact_table(
     finally:
         spark.conf.set(_INFER, infer_before)
 
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".precompact")
+    tmp_path = Path(tmp)
+    backup = Path(path.rstrip("/") + ".precompact")
     if fs.exists(backup) and not fs.delete(backup, True):
         raise IOError(f"compaction aborted: stale backup {backup} undeletable")
     if not fs.rename(hpath, backup):
@@ -374,17 +373,20 @@ SNAPSHOT_LOG = "_FFS_SNAPSHOTS.json"
 
 
 def _slurp(spark: SparkSession, fs, path) -> str:
+    """The whole file at Hadoop ``path`` as text: the one read path for the
+    JSON side files (manifest, snapshot log, zone-map sidecar)."""
     stream = fs.open(path)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return _jclass(spark, "org.apache.commons.io.IOUtils").toString(
+            stream, "UTF-8"
+        )
     finally:
         stream.close()
 
 
 def _read_log(spark: SparkSession, table_path: str) -> list[dict]:
-    fs, _ = _hadoop_fs(spark, table_path)
-    jvm = spark._jvm
-    lp = jvm.org.apache.hadoop.fs.Path(table_path, SNAPSHOT_LOG)
+    fs, Path = _hadoop_fs(spark, table_path)
+    lp = Path(table_path, SNAPSHOT_LOG)
     if fs.exists(lp):
         return json.loads(_slurp(spark, fs, lp))
     # Log file absent. _write_log replaces the log by delete-then-rename
@@ -393,7 +395,7 @@ def _read_log(spark: SparkSession, table_path: str) -> list[dict]:
     # parseable one. Treating "no log" as "empty table" here would be a
     # DATA-LOSS bug: write_snapshot would restart ids at 1 and reclaim
     # committed snap dirs as orphans.
-    glob = jvm.org.apache.hadoop.fs.Path(table_path, f"{SNAPSHOT_LOG}.tmp.*")
+    glob = Path(table_path, f"{SNAPSHOT_LOG}.tmp.*")
     tmps = sorted(
         (fs.globStatus(glob) or []),
         key=lambda st: st.getModificationTime(),
@@ -408,9 +410,7 @@ def _read_log(spark: SparkSession, table_path: str) -> list[dict]:
     # first-commit crash (data written, log commit never started) and must
     # stay retryable; MORE than one directory means a committed history
     # whose log vanished — refuse to silently restart it as a fresh table.
-    snaps = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(table_path, "snap-*")
-    ) or []
+    snaps = fs.globStatus(Path(table_path, "snap-*")) or []
     if len(snaps) > 1:
         raise IOError(
             f"snapshot log missing at {table_path} but "
@@ -422,12 +422,9 @@ def _read_log(spark: SparkSession, table_path: str) -> list[dict]:
 
 
 def _write_log(spark: SparkSession, table_path: str, entries: list[dict]) -> None:
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, table_path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        table_path, f"{SNAPSHOT_LOG}.tmp.{uuid.uuid4().hex}"
-    )
-    final = jvm.org.apache.hadoop.fs.Path(table_path, SNAPSHOT_LOG)
+    fs, Path = _hadoop_fs(spark, table_path)
+    tmp = Path(table_path, f"{SNAPSHOT_LOG}.tmp.{uuid.uuid4().hex}")
+    final = Path(table_path, SNAPSHOT_LOG)
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(json.dumps(entries, indent=2).encode("utf-8")))
@@ -447,8 +444,7 @@ def _write_log(spark: SparkSession, table_path: str, entries: list[dict]) -> Non
     # success — reap stale tmps from earlier crashed commits (single-writer
     # protocol; any tmp other than ours is dead weight that could only
     # confuse a future recovery)
-    glob = jvm.org.apache.hadoop.fs.Path(table_path, f"{SNAPSHOT_LOG}.tmp.*")
-    for st in fs.globStatus(glob) or []:
+    for st in fs.globStatus(Path(table_path, f"{SNAPSHOT_LOG}.tmp.*")) or []:
         fs.delete(st.getPath(), False)
 
 
@@ -480,6 +476,28 @@ def _entry_dirs(entry: dict) -> list[str] | None:
     return None if nd is None else [d["dir"] for d in nd]
 
 
+def _entry_reader(spark: SparkSession, entry: dict):
+    """A parquet reader for the directories of one log entry, with the
+    schema the entry records: Spark infers no schema, which is a one-task
+    footer-read job per read. Hive partition columns still come last and
+    take their recorded type. The recorded schema of an evolved
+    composition is the newest (add-only) one, so an older directory's
+    missing columns read as NULL, as parquet schema merging gives."""
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(entry["schema"]))
+
+
+def _live_dirs(entry: dict) -> list[dict]:
+    """``_norm_dirs`` of an entry that must still have its data."""
+    ndirs = _norm_dirs(entry)
+    if ndirs is None:
+        raise KeyError(
+            f"snapshot {entry['snapshot_id']} was expired; its data is gone"
+        )
+    return ndirs
+
+
 def _read_entry(spark: SparkSession, table_path: str, entry: dict) -> DataFrame:
     """Materialize one log entry's state. Fast path: one multi-path parquet
     read. When the entry carries partition exclusions (a bounded replace
@@ -487,18 +505,10 @@ def _read_entry(spark: SparkSession, table_path: str, entry: dict) -> DataFrame:
     read separately with its exclusion filter — the filter is on the hive
     partition column, so Spark prunes the shadowed subdirectories instead
     of scanning them."""
-    ndirs = _norm_dirs(entry)
-    if ndirs is None:
-        raise KeyError(
-            f"snapshot {entry['snapshot_id']} was expired; its data is gone"
-        )
+    ndirs = _live_dirs(entry)
     base = table_path.rstrip("/")
     excl_col = entry.get("exclude_col")
-    # an evolved composition spans directories with different (add-only)
-    # schemas: parquet schema merging surfaces missing columns as NULL
-    rd = spark.read
-    if entry.get("schema_evolved"):
-        rd = rd.option("mergeSchema", "true")
+    rd = _entry_reader(spark, entry)
     if not excl_col or all(not d["exclude"] for d in ndirs):
         return rd.parquet(*[f"{base}/{d['dir']}" for d in ndirs])
     from pyspark.sql import functions as F
@@ -543,10 +553,33 @@ def write_snapshot(
     new columns as NULL without any rewrite. Dropping or retyping a column
     stays an overwrite.
     """
+    return _write_snapshot(
+        df, table_path, _read_log(df.sparkSession, table_path), job=job,
+        input_fingerprint=input_fingerprint, metrics=metrics,
+        partition_cols=partition_cols, operation=operation,
+        allow_new_columns=allow_new_columns, stats_cols=stats_cols,
+        extra_entry=extra_entry,
+    )
+
+
+def _write_snapshot(
+    df: DataFrame,
+    table_path: str,
+    log: list[dict],
+    job: str = "",
+    input_fingerprint: str = "",
+    metrics: KernelMetrics | None = None,
+    partition_cols: tuple[str, ...] | None = None,
+    operation: str = "overwrite",
+    allow_new_columns: bool = False,
+    stats_cols: tuple[str, ...] | None = None,
+    extra_entry: dict | None = None,
+) -> dict:
+    """write_snapshot on the table's already-read ``log``, for callers that
+    read it for their own checks first (one log read per commit)."""
     if operation not in ("overwrite", "append", "merge"):
         raise ValueError(f"unknown snapshot operation {operation!r}")
     spark = df.sparkSession
-    log = _read_log(spark, table_path)
     parent_dirs: list = []
     state_rows_base = 0
     exclude_col = None
@@ -589,8 +622,8 @@ def write_snapshot(
     # Ids are never reused (expired entries stay in the log), so a
     # pre-existing snap-<id> dir is by construction an orphan of a failed
     # commit — delete it before writing.
-    fs, _ = _hadoop_fs(spark, table_path)
-    orphan = spark._jvm.org.apache.hadoop.fs.Path(snap_dir)
+    fs, Path = _hadoop_fs(spark, table_path)
+    orphan = Path(snap_dir)
     if fs.exists(orphan):
         if any(e["snapshot_id"] == snap_id for e in log):
             raise IOError(
@@ -601,7 +634,8 @@ def write_snapshot(
     from pyspark.sql import functions as F
 
     obs = Observation()
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("errorifexists")
+    # SQL text: one Column call, where F.count(F.lit(1)).alias is three
+    w = df.observe(obs, F.expr("count(1) AS rows")).write.mode("errorifexists")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(snap_dir)
@@ -655,7 +689,20 @@ def read_snapshot(
     """Read the current table state, a specific snapshot (VERSION AS OF), or
     the latest snapshot committed at-or-before ``as_of_unix`` (TIMESTAMP AS
     OF). Time travel reads immutable directories — no lock, no copy."""
-    log = _read_log(spark, table_path)
+    entry = _pick_entry(
+        _read_log(spark, table_path), table_path, snapshot_id, as_of_unix
+    )
+    return _read_entry(spark, table_path, entry)
+
+
+def _pick_entry(
+    log: list[dict],
+    table_path: str,
+    snapshot_id: int | None = None,
+    as_of_unix: int | None = None,
+) -> dict:
+    """The log entry a read names: ``snapshot_id``, the latest committed
+    at-or-before ``as_of_unix``, or the current one."""
     if not log:
         raise FileNotFoundError(f"no snapshot log at {table_path}")
     if snapshot_id is not None and as_of_unix is not None:
@@ -664,15 +711,13 @@ def read_snapshot(
         matches = [e for e in log if e["snapshot_id"] == snapshot_id]
         if not matches:
             raise KeyError(f"snapshot {snapshot_id} not in log (expired or never committed)")
-        entry = matches[0]
-    elif as_of_unix is not None:
+        return matches[0]
+    if as_of_unix is not None:
         eligible = [e for e in log if e["committed_at_unix"] <= as_of_unix]
         if not eligible:
             raise KeyError(f"no snapshot at or before {as_of_unix}")
-        entry = eligible[-1]
-    else:
-        entry = log[-1]
-    return _read_entry(spark, table_path, entry)
+        return eligible[-1]
+    return log[-1]
 
 
 def read_snapshot_pruned(
@@ -694,31 +739,13 @@ def read_snapshot_pruned(
 
     from flow_feature_spark.layout import prune_plan, read_zonemap
 
-    log = _read_log(spark, table_path)
-    if not log:
-        raise FileNotFoundError(f"no snapshot log at {table_path}")
-    if snapshot_id is not None:
-        matches = [e for e in log if e["snapshot_id"] == snapshot_id]
-        if not matches:
-            raise KeyError(f"snapshot {snapshot_id} not in log")
-        entry = matches[0]
-    elif as_of_unix is not None:
-        eligible = [e for e in log if e["committed_at_unix"] <= as_of_unix]
-        if not eligible:
-            raise KeyError(f"no snapshot at or before {as_of_unix}")
-        entry = eligible[-1]
-    else:
-        entry = log[-1]
-    ndirs = _norm_dirs(entry)
-    if ndirs is None:
-        raise KeyError(
-            f"snapshot {entry['snapshot_id']} was expired; its data is gone"
-        )
+    entry = _pick_entry(
+        _read_log(spark, table_path), table_path, snapshot_id, as_of_unix
+    )
+    ndirs = _live_dirs(entry)
     base = table_path.rstrip("/")
     excl_col = entry.get("exclude_col")
-    rd = spark.read
-    if entry.get("schema_evolved"):
-        rd = rd.option("mergeSchema", "true")
+    rd = _entry_reader(spark, entry)
     out = None
     for d in ndirs:
         dpath = f"{base}/{d['dir']}"
@@ -733,7 +760,9 @@ def read_snapshot_pruned(
         else:
             if not kept:
                 continue
-            df = rd.parquet(*kept)
+            # files of a hive-partitioned directory keep their partition
+            # values only when read against the directory as base path
+            df = rd.option("basePath", dpath).parquet(*kept)
         if excl_col and d["exclude"]:
             df = df.filter(~F.col(excl_col).isin(d["exclude"]))
         out = df if out is None else out.unionByName(
@@ -751,19 +780,16 @@ def read_snapshot_pruned(
 
 
 def _inherit_spec(
-    spark: SparkSession,
-    table_path: str,
+    parent: dict,
     partition_cols: tuple[str, ...] | None,
 ) -> tuple[tuple[str, ...], tuple[str, ...]]:
     """Default a COW rewrite's partition spec and zone-map columns to the
-    parent entry's. Every operation that rewrites the CURRENT state (merge,
+    ``parent`` entry's. Every operation that rewrites the CURRENT state (merge,
     group replace, compaction) must preserve both unless the caller
     explicitly changes them: flattening the spec breaks the bounded-replace
     path ('requires the table partitioned by ...'), and dropping stats_cols
     silently turns read_snapshot_pruned into a full scan. Pass ``()`` to
     deliberately flatten."""
-    log = _read_log(spark, table_path)
-    parent = log[-1] if log else {}
     if partition_cols is None:
         partition_cols = tuple(parent.get("partition_cols") or [])
     stats_cols = tuple(parent.get("stats_cols") or [])
@@ -793,21 +819,20 @@ def compact_snapshot(
     ``partition_cols`` explicitly to change the spec, or ``()`` to
     deliberately flatten."""
     log = _read_log(spark, table_path)
-    if partition_cols is None and log:
-        partition_cols = tuple(log[-1].get("partition_cols") or [])
-    # same symmetry for zone maps: compacting a stats-tracked table must
-    # not silently turn read_snapshot_pruned into a full scan
-    if stats_cols is None and log:
-        stats_cols = tuple(log[-1].get("stats_cols") or [])
-    cur = read_snapshot(spark, table_path)
-    parts = list(partition_cols) if partition_cols else []
+    parent = _pick_entry(log, table_path)
+    cur = _read_entry(spark, table_path, parent)
+    partition_cols, inherited_stats = _inherit_spec(parent, partition_cols)
+    if stats_cols is None:
+        stats_cols = inherited_stats
+    parts = list(partition_cols)
     compacted = (
         cur.repartition(target_files, *parts) if parts
         else cur.repartition(target_files)
     )
-    return write_snapshot(
+    return _write_snapshot(
         compacted,
         table_path,
+        log,
         job="compact_snapshot",
         operation="overwrite",
         partition_cols=tuple(parts),
@@ -831,11 +856,9 @@ def vacuum_table(spark: SparkSession, table_path: str) -> dict:
     live: set[str] = set()
     for e in log:
         live.update(_entry_dirs(e) or [])
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, table_path)
-    tpath = jvm.org.apache.hadoop.fs.Path(table_path)
+    fs, Path = _hadoop_fs(spark, table_path)
     removed = []
-    for status in fs.listStatus(tpath):
+    for status in fs.listStatus(Path(table_path)):
         name = status.getPath().getName()
         if status.isDirectory() and name.startswith("snap-") and name not in live:
             fs.delete(status.getPath(), True)
@@ -886,8 +909,7 @@ def expire_snapshots(
     live_dirs: set[str] = set()
     for e in keep:
         live_dirs.update(_entry_dirs(e) or [])
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, table_path)
+    fs, Path = _hadoop_fs(spark, table_path)
     removed = []
     deleted: set[str] = set()
     new_log = []
@@ -903,7 +925,7 @@ def expire_snapshots(
             continue
         d = e.get("dir")
         if d and d not in live_dirs and d not in deleted:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(table_path, d), True)
+            fs.delete(Path(table_path, d), True)
             deleted.add(d)
         removed.append(e["snapshot_id"])
         new_log.append(
@@ -936,7 +958,8 @@ def merge_snapshot(
     partitioned COW does. A merge-on-read variant (commit the delta, apply
     at read) is the append operation + read-side reconciliation."""
     spark = updates.sparkSession
-    current = read_snapshot(spark, table_path)
+    log = _read_log(spark, table_path)
+    current = _read_entry(spark, table_path, _pick_entry(log, table_path))
     data_cols = [c for c in updates.columns if c != delete_col]
     if set(data_cols) != set(current.columns):
         raise ValueError(
@@ -981,12 +1004,11 @@ def merge_snapshot(
         updates.filter(~F.col(delete_col)) if delete_col else updates
     ).select(*current.columns)
     kept = current.join(touched, on=list(key_cols), how="left_anti")
-    partition_cols, stats_cols = _inherit_spec(
-        spark, table_path, partition_cols
-    )
-    return write_snapshot(
+    partition_cols, stats_cols = _inherit_spec(log[-1], partition_cols)
+    return _write_snapshot(
         kept.unionByName(upserts),
         table_path,
+        log,
         job=job,
         operation="merge",
         partition_cols=partition_cols,
@@ -1024,8 +1046,24 @@ def replace_groups_snapshot(
     left-anti join of the current state against the distinct touched keys
     (broadcast when small) — without MERGE's one-row-per-key cardinality
     rule, which multi-row groups would violate."""
+    return _replace_groups(
+        updates, table_path, _read_log(updates.sparkSession, table_path),
+        group_cols, job=job, partition_cols=partition_cols, keys=keys,
+    )
+
+
+def _replace_groups(
+    updates: DataFrame,
+    table_path: str,
+    log: list[dict],
+    group_cols: tuple[str, ...],
+    job: str = "",
+    partition_cols: tuple[str, ...] | None = None,
+    keys: DataFrame | None = None,
+) -> dict:
+    """replace_groups_snapshot on the table's already-read ``log``."""
     spark = updates.sparkSession
-    current = read_snapshot(spark, table_path)
+    current = _read_entry(spark, table_path, _pick_entry(log, table_path))
     if set(updates.columns) != set(current.columns):
         raise ValueError(
             f"replace_groups schema mismatch: updates {sorted(updates.columns)} "
@@ -1036,12 +1074,11 @@ def replace_groups_snapshot(
         raise ValueError(f"group columns not in table: {missing}")
     touched = (updates if keys is None else keys).select(*group_cols).distinct()
     kept = current.join(touched, on=list(group_cols), how="left_anti")
-    partition_cols, stats_cols = _inherit_spec(
-        spark, table_path, partition_cols
-    )
-    return write_snapshot(
+    partition_cols, stats_cols = _inherit_spec(log[-1], partition_cols)
+    return _write_snapshot(
         kept.unionByName(updates),
         table_path,
+        log,
         job=job,
         operation="merge",
         partition_cols=partition_cols,
@@ -1078,8 +1115,8 @@ def replace_groups_partitioned(
     ``partition_col`` (write the initial snapshot with
     ``partition_cols=(partition_col,)``), and ``updates`` must carry that
     column with values consistent with the group key (every row of a group
-    in one bucket — e.g. bucket = hash(key) % N). Use an INT bucket column:
-    hive partition-value inference types it back as int on read.
+    in one bucket — e.g. bucket = hash(key) % N). Use an INT bucket column;
+    reads type it from the snapshot log's schema.
 
     ``keys`` (a frame with the ``group_cols`` columns and ``partition_col``)
     names the groups to replace, as in replace_groups_snapshot, and the
@@ -1087,14 +1124,27 @@ def replace_groups_partitioned(
     when the keys are cheaper to get than ``updates``' plan: each use of
     ``updates`` here runs that plan again. Precondition: ``keys`` must cover
     every group in ``updates``, with the same bucket value for each group."""
+    return _replace_groups_partitioned(
+        updates, table_path, _read_log(updates.sparkSession, table_path),
+        group_cols, partition_col, job=job, keys=keys,
+    )
+
+
+def _replace_groups_partitioned(
+    updates: DataFrame,
+    table_path: str,
+    log: list[dict],
+    group_cols: tuple[str, ...],
+    partition_col: str,
+    job: str = "",
+    keys: DataFrame | None = None,
+) -> dict:
+    """replace_groups_partitioned on the table's already-read ``log``."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     spark = updates.sparkSession
-    log = _read_log(spark, table_path)
-    if not log:
-        raise FileNotFoundError(f"no snapshot log at {table_path}")
-    parent = log[-1]
+    parent = _pick_entry(log, table_path)
     ndirs = _norm_dirs(parent)
     if ndirs is None:
         raise KeyError(
@@ -1136,7 +1186,7 @@ def replace_groups_partitioned(
     obs = Observation()
     (
         kept.unionByName(updates)
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .observe(obs, F.expr("count(1) AS rows"))
         .write.mode("errorifexists")
         .partitionBy(partition_col)
         .parquet(f"{table_path.rstrip('/')}/{own}")

@@ -452,10 +452,13 @@ def run(argv: list[str] | None = None) -> int:
         turns = normalize_turns(df)
         if args.drop_housekeeping:
             turns = drop_housekeeping(turns)
-        if effective_engine == "fast" and args.mode in ("features", "asof"):
-            # the fused kernel shuffles on conv_id; shuffling the dedup there
-            # too satisfies its (conv_id, turn_idx) window, and Spark drops
-            # the kernel's same-key repartition: one exchange, not two
+        if effective_engine in ("fast", "kernel") and args.mode in (
+            "features", "asof"
+        ):
+            # both kernels shuffle on conv_id (the fused kernel's repartition;
+            # the sessionize window and the (conv_id, session_id) grouped map);
+            # shuffling the dedup there too satisfies its (conv_id, turn_idx)
+            # window, and Spark reuses that one exchange for all of them
             turns = turns.repartition("conv_id")
         turns = dedup_turns(turns)
         if args.mode == "sessionize":

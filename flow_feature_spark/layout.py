@@ -192,10 +192,8 @@ def _json_val(v):
 def _write_sidecar(spark: SparkSession, path: str, zonemap: dict) -> None:
     from flow_feature_spark.io import _hadoop_fs
 
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path, ZONEMAP_NAME)
-    out = fs.create(p, True)
+    fs, Path = _hadoop_fs(spark, path)
+    out = fs.create(Path(path, ZONEMAP_NAME), True)
     try:
         out.write(bytearray(json.dumps(zonemap, indent=1).encode("utf-8")))
     finally:
@@ -203,19 +201,13 @@ def _write_sidecar(spark: SparkSession, path: str, zonemap: dict) -> None:
 
 
 def read_zonemap(spark: SparkSession, path: str) -> dict:
-    from flow_feature_spark.io import _hadoop_fs
+    from flow_feature_spark.io import _hadoop_fs, _slurp
 
-    jvm = spark._jvm
-    fs, _ = _hadoop_fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path, ZONEMAP_NAME)
+    fs, Path = _hadoop_fs(spark, path)
+    p = Path(path, ZONEMAP_NAME)
     if not fs.exists(p):
         raise FileNotFoundError(f"no {ZONEMAP_NAME} under {path}")
-    stream = fs.open(p)
-    try:
-        content = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(content)
+    return json.loads(_slurp(spark, fs, p))
 
 
 # ---------------------------------------------------------------------------

@@ -451,7 +451,7 @@ def snapshot_append_sink(table_path: str, job: str = "stream"):
     idempotent-writer pattern). The log read+append runs on the driver
     inside the micro-batch, serialized by the streaming engine, so the
     check-then-commit pair is race-free within a query."""
-    from flow_feature_spark.io import _read_log, write_snapshot
+    from flow_feature_spark.io import _read_log, _write_snapshot
 
     def sink(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
@@ -461,9 +461,10 @@ def snapshot_append_sink(table_path: str, job: str = "stream"):
             for e in log
         ):
             return  # replayed batch: already durable, skip (exactly-once)
-        write_snapshot(
+        _write_snapshot(
             bdf,
             table_path,
+            log,
             job=job,
             operation="append",
             extra_entry={"stream_batch_id": batch_id},

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from flow_feature_spark.incremental import incremental_feature_update
@@ -267,3 +269,86 @@ def test_replace_groups_partitioned_unit(spark, tmp_path):
         raise AssertionError("missing bucket column must fail")
     except ValueError:
         pass
+
+
+def _analysis_time_jobs(spark, group, executions_before):
+    """Stage names of the jobs in ``group`` that ran outside every SQL
+    execution started since ``executions_before``: jobs Spark runs while it
+    resolves a read, such as the one-task footer read of parquet schema
+    inference (named ``parquet at ...``)."""
+    # both stores are filled from the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    execs = store.executionsList(
+        executions_before, store.executionsCount() - executions_before
+    )
+    in_sql = set()
+    for i in range(execs.size()):
+        in_sql.update(to_java(execs.apply(i).jobs()).keySet())
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs and in_sql  # the trackers saw the call's jobs
+    return [
+        tracker.getStageInfo(min(tracker.getJobInfo(j).stageIds)).name
+        for j in jobs
+        if j not in in_sql
+    ]
+
+
+@pytest.mark.parametrize("feature_buckets", [None, 4])
+def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, feature_buckets):
+    """A warm update reads each table's snapshot log once (2 reads), takes
+    every read schema from the log (no schema-inference job), and gets
+    touched_convs from jobs it runs anyway — still the delta's distinct
+    conversations."""
+    from flow_feature_spark import io
+
+    rows = _rand_rows(n_convs=12, turns_per_conv=10, seed=5)
+    cut = sorted(r[2] for r in rows)[len(rows) // 2]
+    old, delta = [r for r in rows if r[2] <= cut], [r for r in rows if r[2] > cut]
+    tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
+    incremental_feature_update(
+        _mk_turns(spark, old), tt, ft, 5.0, feature_buckets=feature_buckets
+    )
+    new_turns = _mk_turns(spark, delta)
+
+    slurps = []
+    slurp = io._slurp
+    monkeypatch.setattr(
+        io, "_slurp", lambda *a: slurps.append(str(a[2])) or slurp(*a)
+    )
+    sc = spark.sparkContext
+    group = f"budget-{feature_buckets}"
+    executions_before = spark._jsparkSession.sharedState().statusStore().executionsCount()
+    sc.setJobGroup(group, group)
+    try:
+        st = incremental_feature_update(
+            new_turns, tt, ft, 5.0, feature_buckets=feature_buckets
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    assert len(slurps) == 2, slurps
+    assert _analysis_time_jobs(spark, group, executions_before) == []
+    assert st["touched_convs"] == len({r[0] for r in delta})
+    got = sorted(map(tuple, read_snapshot(spark, ft).drop("__bucket").collect()))
+    assert got == _full(spark, rows, 5.0)
+
+
+@pytest.mark.parametrize("feature_buckets", [None, 4])
+def test_incremental_empty_delta(spark, tmp_path, feature_buckets):
+    """An empty delta commits, touches no conversation and leaves the
+    feature rows as they were."""
+    rows = _rand_rows(n_convs=5, turns_per_conv=6, seed=3)
+    tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
+    incremental_feature_update(
+        _mk_turns(spark, rows), tt, ft, 5.0, feature_buckets=feature_buckets
+    )
+    before = _table(spark, ft)
+    st = incremental_feature_update(
+        _mk_turns(spark, []), tt, ft, 5.0, feature_buckets=feature_buckets
+    )
+    assert st["touched_convs"] == 0 and st["turns_appended"] == 0
+    assert _table(spark, ft) == before

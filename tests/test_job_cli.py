@@ -326,9 +326,9 @@ def _last_plan_nodes(spark) -> list[tuple[str, str]]:
 
 
 def test_job_plan_shapes(spark, tmp_path):
-    """The executed plans keep their exchange budget: under the fast engine
-    the dedup shares the kernel's conv_id exchange, and --mode asof adds one
-    exchange and no second Python stage. The bucketed skew path keeps its
+    """The executed plans keep their exchange budget: under the fast and
+    kernel engines the dedup shares the kernel's conv_id exchange, and
+    --mode asof adds one exchange and no second Python stage. The bucketed skew path keeps its
     (conv_id, bucket) shuffle, so a hot conversation is never one task."""
     import re
 
@@ -344,6 +344,9 @@ def test_job_plan_shapes(spark, tmp_path):
     asof = [n for n, _ in plan("--mode", "asof", "--probes", probes_p)]
     assert asof.count("Exchange") == 2, asof
     assert asof.count("MapInPandas") == 1, asof
+    kernel = [n for n, _ in plan("--mode", "asof", "--probes", probes_p,
+                                 "--engine", "kernel")]
+    assert kernel.count("Exchange") == 2, kernel
     feats = [n for n, _ in plan("--mode", "features")]
     assert feats.count("Exchange") == 1, feats
 

@@ -507,3 +507,88 @@ def test_merge_inherits_partition_spec_bounded_replace_survives(spark, tmp_path)
     )
     got = {r["k"]: r["v"] for r in read_snapshot(spark, tp).collect()}
     assert got == {"a": 10, "b": 20}
+
+
+def _inferred_read(spark, tp, entry):
+    """An entry's state read the way Spark infers it: each directory's
+    footer schema, merged where the composition evolved, with the entry's
+    partition exclusions applied per directory."""
+    from flow_feature_spark.io import _norm_dirs
+
+    rd = spark.read
+    if entry.get("schema_evolved"):
+        rd = rd.option("mergeSchema", "true")
+    out = None
+    for d in _norm_dirs(entry):
+        df = rd.parquet(f"{tp}/{d['dir']}")
+        if d["exclude"]:
+            df = df.filter(~F.col(entry["exclude_col"]).isin(d["exclude"]))
+        out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+    return out
+
+
+def test_log_schema_reads_equal_inferred_reads(spark, tmp_path):
+    """read_snapshot takes the schema from the snapshot log instead of
+    inferring it from parquet footers. For every composition the log
+    builds, it reads the same columns (names, order, types, nullability)
+    and the same rows as Spark's inference (schema merging where
+    evolved)."""
+    from flow_feature_spark.io import replace_groups_partitioned
+
+    schema = "b int, g string, v long, x double, ok boolean"
+    mk = lambda rows: spark.createDataFrame(rows, schema)  # noqa: E731
+    base = [(0, "a", 1, 0.5, True), (1, "b", 2, None, False), (2, "c", 3, 1.5, None)]
+
+    def check(tp, want_rows=None):
+        entry = snapshot_history(spark, tp)[-1]
+        got, inferred = read_snapshot(spark, tp), _inferred_read(spark, tp, entry)
+        assert got.schema == inferred.schema, (entry["operation"], got.dtypes)
+        assert got.exceptAll(inferred).count() == 0, entry["operation"]
+        assert inferred.exceptAll(got).count() == 0, entry["operation"]
+        if want_rows is not None:
+            assert got.count() == want_rows
+
+    # overwrite, then a fast-append of the same schema
+    flat = str(tmp_path / "flat")
+    write_snapshot(mk(base), flat)
+    write_snapshot(mk(base[:1]), flat)
+    check(flat, want_rows=1)
+    write_snapshot(mk(base[1:]), flat, operation="append")
+    check(flat, want_rows=3)
+
+    # an add-column append: the older directory's rows read NULL
+    write_snapshot(
+        mk([(5, "e", 9, 2.5, True)]).withColumn("extra", F.lit("new")),
+        flat, operation="append", allow_new_columns=True,
+    )
+    check(flat, want_rows=4)
+    got = read_snapshot(spark, flat)
+    assert got.filter(F.col("extra").isNull()).count() == 3
+
+    # rollback to the first overwrite
+    rollback_snapshot(spark, flat, 2)
+    check(flat, want_rows=1)
+
+    # hive-partitioned by an int bucket that is not the last column, then
+    # two bounded replaces that shadow buckets of older directories
+    part = str(tmp_path / "part")
+    write_snapshot(mk(base), part, partition_cols=("b",))
+    check(part, want_rows=3)
+    replace_groups_partitioned(mk([(0, "a", 7, 0.0, False)]), part, ("g",), "b")
+    replace_groups_partitioned(
+        mk([(1, "b", 8, 1.0, True), (1, "d", 9, None, None)]), part, ("g",), "b"
+    )
+    assert snapshot_history(spark, part)[-1]["dirs"][0]["exclude"] == [0, 1]
+    check(part, want_rows=4)
+    assert read_snapshot(spark, part).columns[-1] == "b"
+
+    # a zone-map pruned read of the partitioned table keeps the partition
+    # column (the kept files are read against their directory as base)
+    from flow_feature_spark.io import read_snapshot_pruned
+
+    zm = str(tmp_path / "zm")
+    write_snapshot(mk(base), zm, partition_cols=("b",), stats_cols=("v",))
+    pruned = read_snapshot_pruned(spark, zm, {"v": (2, 3)})
+    want = read_snapshot(spark, zm).filter("v BETWEEN 2 AND 3")
+    assert pruned.schema == want.schema
+    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, want.collect()))
