@@ -500,16 +500,17 @@ def _live_dirs(entry: dict) -> list[dict]:
 
 def _read_entry(spark: SparkSession, table_path: str, entry: dict) -> DataFrame:
     """Materialize one log entry's state. Fast path: one multi-path parquet
-    read. When the entry carries partition exclusions (a bounded replace
-    shadowed some of an older directory's partitions), each directory is
-    read separately with its exclusion filter — the filter is on the hive
-    partition column, so Spark prunes the shadowed subdirectories instead
-    of scanning them."""
+    read. A hive-partitioned composition of several directories reads each
+    directory separately (Spark's partition discovery takes one root per
+    read), and a directory with partition exclusions (a bounded replace
+    shadowed some of its partitions) gets its exclusion filter — the filter
+    is on the hive partition column, so Spark prunes the shadowed
+    subdirectories instead of scanning them."""
     ndirs = _live_dirs(entry)
     base = table_path.rstrip("/")
     excl_col = entry.get("exclude_col")
     rd = _entry_reader(spark, entry)
-    if not excl_col or all(not d["exclude"] for d in ndirs):
+    if len(ndirs) == 1 or not (excl_col or entry.get("partition_cols")):
         return rd.parquet(*[f"{base}/{d['dir']}" for d in ndirs])
     from pyspark.sql import functions as F
 
@@ -745,10 +746,13 @@ def read_snapshot_pruned(
     ndirs = _live_dirs(entry)
     base = table_path.rstrip("/")
     excl_col = entry.get("exclude_col")
-    rd = _entry_reader(spark, entry)
     out = None
     for d in ndirs:
         dpath = f"{base}/{d['dir']}"
+        # a fresh reader per directory: DataFrameReader.option sets the
+        # option on the reader itself, so a shared one would carry this
+        # directory's basePath into the next directory's read
+        rd = _entry_reader(spark, entry)
         try:
             zonemap = read_zonemap(spark, dpath)
             kept, _ = prune_plan(zonemap, predicates)
@@ -1116,7 +1120,9 @@ def replace_groups_partitioned(
     ``partition_cols=(partition_col,)``), and ``updates`` must carry that
     column with values consistent with the group key (every row of a group
     in one bucket — e.g. bucket = hash(key) % N). Use an INT bucket column;
-    reads type it from the snapshot log's schema.
+    reads type it from the snapshot log's schema. ``updates`` must have the
+    table's columns with the table's types (ValueError otherwise): every
+    directory is read with the schema the log records.
 
     ``keys`` (a frame with the ``group_cols`` columns and ``partition_col``)
     names the groups to replace, as in replace_groups_snapshot, and the
@@ -1165,17 +1171,25 @@ def _replace_groups_partitioned(
     missing = [k for k in group_cols if k not in updates.columns]
     if missing:
         raise ValueError(f"group columns not in updates: {missing}")
+    # every directory is read with the schema the log records, so the new
+    # directory must hold the parent's column types: a wider update type
+    # would not read back as the parent's narrower one
+    want = {f["name"]: f["type"] for f in parent["schema"]["fields"]}
+    got = {f["name"]: f["type"] for f in updates.schema.jsonValue()["fields"]}
+    bad = sorted(n for n in set(got) | set(want) if got.get(n) != want.get(n))
+    if bad:
+        raise ValueError(
+            f"replace schema mismatch on {bad}: updates "
+            f"{[got.get(n) for n in bad]} vs table "
+            f"{[want.get(n) for n in bad]}; commit an overwrite to "
+            f"change schema"
+        )
     keys = updates if keys is None else keys
 
     touched_parts = sorted(
         r[0] for r in keys.select(partition_col).distinct().collect()
     )
     current = _read_entry(spark, table_path, parent)
-    if set(updates.columns) != set(current.columns):
-        raise ValueError(
-            f"replace schema mismatch: updates {sorted(updates.columns)} "
-            f"vs table {sorted(current.columns)}"
-        )
     cur_touched = current.filter(F.col(partition_col).isin(touched_parts))
     replaced_rows = cur_touched.count()  # partition-pruned job
     touched_keys = keys.select(*group_cols).distinct()

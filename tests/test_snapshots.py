@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from flow_feature_spark.io import (
@@ -581,6 +582,14 @@ def test_log_schema_reads_equal_inferred_reads(spark, tmp_path):
     assert snapshot_history(spark, part)[-1]["dirs"][0]["exclude"] == [0, 1]
     check(part, want_rows=4)
     assert read_snapshot(spark, part).columns[-1] == "b"
+    # updates of a wider type than the table's are refused before anything
+    # is written: the log's int bucket type could not read them back
+    wide = mk([(2, "c", 4, 0.0, True)]).withColumn("b", F.col("b").cast("long"))
+    n_commits = len(snapshot_history(spark, part))
+    with pytest.raises(ValueError, match="replace schema mismatch on \\['b'\\]"):
+        replace_groups_partitioned(wide, part, ("g",), "b")
+    assert len(snapshot_history(spark, part)) == n_commits
+    check(part, want_rows=4)
 
     # a zone-map pruned read of the partitioned table keeps the partition
     # column (the kept files are read against their directory as base)
@@ -592,3 +601,39 @@ def test_log_schema_reads_equal_inferred_reads(spark, tmp_path):
     want = read_snapshot(spark, zm).filter("v BETWEEN 2 AND 3")
     assert pruned.schema == want.schema
     assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_pruned_read_after_commits_without_zone_maps(spark, tmp_path):
+    """read_snapshot_pruned == read_snapshot + filter when a directory with
+    zone maps is followed by directories without them: an append without
+    stats_cols (flat and hive-partitioned) and a bounded replace after a
+    stats-tracked partitioned write. The directory read fully comes after
+    the kept one, so it must not inherit the kept read's base path."""
+    from flow_feature_spark.io import read_snapshot_pruned, replace_groups_partitioned
+
+    mk = lambda rows: spark.createDataFrame(rows, "b int, g string, v long")  # noqa: E731
+    base = [(0, "a", 1), (1, "b", 2), (2, "c", 3)]
+
+    def check(tp):
+        pruned = read_snapshot_pruned(spark, tp, {"v": (2, 8)})
+        want = read_snapshot(spark, tp).filter("v BETWEEN 2 AND 8")
+        assert pruned.schema == want.schema
+        got_rows = sorted(map(tuple, pruned.collect()))
+        assert got_rows == sorted(map(tuple, want.collect())) and got_rows
+
+    flat = str(tmp_path / "flat")
+    write_snapshot(mk(base), flat, stats_cols=("v",))
+    write_snapshot(mk([(3, "d", 7)]), flat, operation="append")
+    check(flat)
+
+    part = str(tmp_path / "part")
+    write_snapshot(mk(base), part, partition_cols=("b",), stats_cols=("v",))
+    write_snapshot(
+        mk([(3, "d", 7)]), part, operation="append", partition_cols=("b",)
+    )
+    check(part)
+
+    repl = str(tmp_path / "repl")
+    write_snapshot(mk(base), repl, partition_cols=("b",), stats_cols=("v",))
+    replace_groups_partitioned(mk([(1, "b", 5)]), repl, ("g",), "b")
+    check(repl)
