@@ -1,35 +1,33 @@
 """Checkpointed, resumable writes with per-partition lineage + metrics.
 
 The reference's joblib dump/load cache (get_flow_feature.py:7-14, 103-108)
-generalizes here to snapshot-checkpointed tables: a job writes its output
-table together with a MANIFEST recording row counts, schema, input
-fingerprint and per-partition lineage metrics; a restarted job finds a valid
-manifest and skips the recompute entirely (north rule: "resumable from
-checkpoint with per-partition lineage + metrics").
+generalizes here to snapshot-checkpointed tables: a job commits its output
+table as a snapshot whose log entry records row counts, schema, input
+fingerprint and per-partition lineage metrics; a restarted job finds a
+current snapshot with a matching job and fingerprint and skips the
+recompute entirely (north rule: "resumable from checkpoint with
+per-partition lineage + metrics").
 
 Backend: Iceberg table snapshots when an Iceberg catalog is on the classpath
 (`spark.sql.catalog...` + iceberg-spark-runtime jar — not in this sandbox),
-else plain parquet + atomic manifest commit (write manifest LAST, to a temp
-name, rename into place) which gives the same at-least-once/resume-exactly
-semantics for a single writer.
+else the snapshot log below: immutable parquet directories plus an atomic
+log commit (write the log LAST, to a temp name, rename into place), which
+gives the same at-least-once/resume-exactly semantics for a single writer.
 
 Per-partition metrics ride on Spark accumulators updated inside the Arrow
 batch kernel (rows in, vectors out, batches, per-partition row counts) and
-are persisted into the manifest next to the data.
+are persisted into the snapshot's log entry next to the data.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from dataclasses import dataclass
 
 from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
-
-MANIFEST_NAME = "_FFS_MANIFEST.json"
 
 
 class _DictSumParam(AccumulatorParam):
@@ -78,10 +76,6 @@ class KernelMetrics:
         }
 
 
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, MANIFEST_NAME)
-
-
 def _jclass(spark: SparkSession, name: str):
     """The JVM class ``name``, resolved in one py4j round trip (walking
     ``spark._jvm.org.apache...`` costs one per name segment)."""
@@ -89,100 +83,13 @@ def _jclass(spark: SparkSession, name: str):
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path class) for the path's scheme — manifest IO must live
+    """(FileSystem, Path class) for the path's scheme — log IO must live
     on the SAME filesystem namespace as the parquet data Spark writes, so
     hdfs:///s3a:// checkpoint locations work, not just local paths. The
     Path class comes back already resolved, for the caller's own paths."""
     Path = _jclass(spark, "org.apache.hadoop.fs.Path")
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, Path
-
-
-def read_manifest(path: str, spark: SparkSession | None = None) -> dict | None:
-    if spark is None:
-        # local-filesystem fallback for callers without a session
-        mp = _manifest_path(path)
-        if not os.path.exists(mp):
-            return None
-        with open(mp) as fh:
-            return json.load(fh)
-    fs, Path = _hadoop_fs(spark, path)
-    mp = Path(path, MANIFEST_NAME)
-    if not fs.exists(mp):
-        return None
-    return json.loads(_slurp(spark, fs, mp))
-
-
-def write_checkpoint(
-    df: DataFrame,
-    path: str,
-    job: str,
-    input_fingerprint: str = "",
-    metrics: KernelMetrics | None = None,
-    mode: str = "overwrite",
-    partition_cols: tuple[str, ...] | None = None,
-) -> dict:
-    """Write df as parquet + commit a manifest ATOMICALLY afterwards.
-
-    The manifest is the commit marker: readers treat data without one as an
-    aborted write (the resume path recomputes). Equivalent to an Iceberg
-    snapshot commit for the single-writer case.
-
-    ``partition_cols``: hive-style directory partitioning (e.g. an event-date
-    column). At 100 TB every downstream time-sliced query prunes whole
-    partition directories at planning time instead of scanning the table —
-    the parquet analog of Iceberg's partition spec. The columns must be
-    low-cardinality (dates, sources); partitioning by a high-cardinality key
-    explodes the file count.
-    """
-    spark = df.sparkSession
-    # row count rides on the write itself via observe() — no second scan of
-    # the freshly-written output (at 10^12 rows the re-read was a full extra
-    # pass just to fill one manifest field)
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
-    n = int(obs.get["rows"])
-    if mode != "overwrite":
-        # the Observation counted only THIS batch; with mode='append' the
-        # manifest must record the table's total row count, so pay one
-        # re-read — append callers are incremental jobs where the extra
-        # count is small relative to the history being preserved
-        n = spark.read.parquet(path).count()
-    manifest = {
-        "job": job,
-        "rows": n,
-        "schema": df.schema.jsonValue(),
-        "input_fingerprint": input_fingerprint,
-        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "metrics": metrics.snapshot() if metrics is not None else None,
-    }
-    # manifest IO through the Hadoop FS of the DATA path (write tmp, rename
-    # into place — atomic on HDFS/local; the commit marker either exists
-    # complete or not at all)
-    fs, Path = _hadoop_fs(spark, path)
-    tmp = Path(path, f"{MANIFEST_NAME}.tmp.{uuid.uuid4().hex}")
-    final = Path(path, MANIFEST_NAME)
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest, indent=2).encode("utf-8")))
-    finally:
-        out.close()
-    # Hadoop FileSystem.rename/delete report failure by RETURNING FALSE, not
-    # throwing — an unchecked call would weaken the commit-marker contract to
-    # "may not exist even though write_checkpoint returned"
-    if fs.exists(final) and not fs.delete(final, False):
-        fs.delete(tmp, False)
-        raise IOError(f"checkpoint commit failed: could not replace {final}")
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)
-        raise IOError(f"checkpoint commit failed: rename {tmp} -> {final} returned false")
-    return manifest
 
 
 def resume_or_compute(
@@ -194,23 +101,24 @@ def resume_or_compute(
     metrics: KernelMetrics | None = None,
     partition_cols: tuple[str, ...] | None = None,
 ) -> tuple[DataFrame, bool]:
-    """Return (df, resumed). Valid manifest with matching job+fingerprint ->
-    read the checkpoint; otherwise run ``compute()`` and commit it (with the
-    accumulator bundle's per-partition lineage in the manifest, if given,
-    and hive-partitioned by ``partition_cols`` if given)."""
-    m = read_manifest(path, spark)
-    if (
-        m is not None
-        and m.get("job") == job
-        and m.get("input_fingerprint") == input_fingerprint
+    """Return (df, resumed). The checkpoint at ``path`` is a snapshot table:
+    if its current entry records the same job and input fingerprint, read it
+    back (schema from the log, no inference job); otherwise commit
+    ``compute()`` as a new snapshot (with the accumulator bundle's
+    per-partition lineage in the entry, if given, and hive-partitioned by
+    ``partition_cols`` if given) and expire the superseded one. A crash
+    mid-recompute leaves the previous snapshot current and readable."""
+    log = _read_log(spark, path)
+    if log and (log[-1].get("job"), log[-1].get("input_fingerprint")) == (
+        job, input_fingerprint
     ):
-        return spark.read.parquet(path), True
-    df = compute()
-    write_checkpoint(
-        df, path, job, input_fingerprint, metrics=metrics,
-        partition_cols=partition_cols,
+        return _read_entry(spark, path, log[-1]), True
+    entry = _write_snapshot(
+        compute(), path, log, job, input_fingerprint, metrics, partition_cols
     )
-    return spark.read.parquet(path), False
+    if log:
+        _expire_snapshots(spark, path, log + [entry], keep_last=1)
+    return _read_entry(spark, path, entry), False
 
 
 def write_bucketed_table(
@@ -234,12 +142,6 @@ def write_bucketed_table(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)
-
-
-def input_fingerprint_for(df: DataFrame) -> str:
-    """Cheap deterministic input descriptor: count + schema (for resume
-    matching). At 10^12 scale swap in the Iceberg snapshot id."""
-    return f"rows={df.count()}|schema={df.schema.simpleString()}"
 
 
 def _hive_partition_cols(fs, hpath) -> tuple[str, ...]:
@@ -279,11 +181,13 @@ def compact_table(
     — 10^5 tiny files turn scan planning and the NameNode/manifest layer into
     the bottleneck long before data volume does.
 
-    Hive-partitioned directories (``col=value`` layout, e.g. from
-    ``write_checkpoint(partition_cols=...)``) keep their layout: rows are
+    Hive-partitioned directories (``col=value`` layout, e.g. from a plain
+    ``--partition-by`` parquet sink) keep their layout: rows are
     hash-clustered on the partition columns so each partition value rewrites
     to one file (a date partition bigger than ``target_file_bytes`` stays one
     file — split such tables by a finer partition spec, not by compaction).
+    A snapshot table (a ``--checkpoint`` or ``--snapshot`` directory) is
+    compacted by ``compact_snapshot`` instead.
 
     Safe rewrite: write to a sibling temp dir first, then swap via the
     Hadoop FS (old data removed only after the rewrite commits). Returns
@@ -349,10 +253,9 @@ def compact_table(
 
 # --- Snapshot log: Iceberg-shaped table versioning without the jar ---------
 #
-# Iceberg's core table contract re-expressed on the manifest backend above
-# (the runtime jar is not in this environment; with it, these map 1:1 onto
-# `df.writeTo(tbl)` snapshots, VERSION AS OF reads, rollback_to_snapshot and
-# expire_snapshots). Layout:
+# Iceberg's core table contract without the runtime jar (it is not in this
+# environment; with it, these map 1:1 onto `df.writeTo(tbl)` snapshots,
+# VERSION AS OF reads, rollback_to_snapshot and expire_snapshots). Layout:
 #
 #   table_path/
 #     snap-<id>/           immutable parquet data of one snapshot
@@ -366,15 +269,15 @@ def compact_table(
 # Readers scan ``dirs`` as one multi-path parquet read, so an append commits
 # only its delta (Iceberg fast-append: no table rewrite). Rollback appends a
 # NEW entry (history is never rewritten — Iceberg semantics); expiration
-# deletes data directories no live log entry references. Single writer, like
-# the manifest commit above.
+# deletes data directories no live log entry references. Single writer.
+# ``resume_or_compute`` above runs on the same log.
 
 SNAPSHOT_LOG = "_FFS_SNAPSHOTS.json"
 
 
 def _slurp(spark: SparkSession, fs, path) -> str:
     """The whole file at Hadoop ``path`` as text: the one read path for the
-    JSON side files (manifest, snapshot log, zone-map sidecar)."""
+    JSON side files (snapshot log, zone-map sidecar)."""
     stream = fs.open(path)
     try:
         return _jclass(spark, "org.apache.commons.io.IOUtils").toString(
@@ -427,7 +330,7 @@ def _write_log(spark: SparkSession, table_path: str, entries: list[dict]) -> Non
     final = Path(table_path, SNAPSHOT_LOG)
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(json.dumps(entries, indent=2).encode("utf-8")))
+        out.write(bytearray(json.dumps(entries, separators=(",", ":")).encode("utf-8")))
     finally:
         out.close()
     if fs.exists(final) and not fs.delete(final, False):
@@ -906,9 +809,17 @@ def expire_snapshots(
     entry keeps its source snapshot's directory alive). Expired entries stay
     in the log with dir=None for auditability. The storage-reclaim chore
     Iceberg's ``expire_snapshots`` runs on every production table."""
+    return _expire_snapshots(
+        spark, table_path, _read_log(spark, table_path), keep_last
+    )
+
+
+def _expire_snapshots(
+    spark: SparkSession, table_path: str, log: list[dict], keep_last: int
+) -> dict:
+    """expire_snapshots on the table's already-read ``log``."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    log = _read_log(spark, table_path)
     keep = log[-keep_last:]
     live_dirs: set[str] = set()
     for e in keep:

@@ -16,6 +16,7 @@ or plain ``python -m flow_feature_spark.job`` for local runs.
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -125,7 +126,11 @@ def build_parser() -> argparse.ArgumentParser:
                    "Iceberg partition spec)")
     p.add_argument("--csv-header", action="store_true",
                    help="write a header row (reference: print_colname switch)")
-    p.add_argument("--checkpoint", help="checkpoint dir: resume if a valid manifest exists")
+    p.add_argument("--checkpoint",
+                   help="checkpoint dir: batch modes commit their output "
+                   "there as a snapshot table and resume from its current "
+                   "snapshot when the job and flags match (--mode stream: "
+                   "the streaming checkpoint)")
     p.add_argument("--snapshot", action="store_true",
                    help="commit the output as a NEW immutable snapshot of the "
                         "output table (io.write_snapshot): earlier snapshots "
@@ -322,7 +327,7 @@ def run(argv: list[str] | None = None) -> int:
         return 0
 
     # per-partition lineage metrics ride on accumulators inside the Arrow
-    # kernel and land in the checkpoint manifest (north rule: "resumable from
+    # kernel and land in the checkpoint's log entry (north rule: "resumable from
     # checkpoint with per-partition lineage + metrics")
     kernel_metrics = None
     if args.checkpoint and effective_engine == "fast" and args.mode == "features":
@@ -371,8 +376,6 @@ def run(argv: list[str] | None = None) -> int:
     def compute():
         df = _read_input()
         if args.mode == "quality":
-            import json
-
             from flow_feature_spark.quality import (
                 check_expectations,
                 expectations_from_specs,
@@ -452,13 +455,10 @@ def run(argv: list[str] | None = None) -> int:
         turns = normalize_turns(df)
         if args.drop_housekeeping:
             turns = drop_housekeeping(turns)
-        if effective_engine in ("fast", "kernel") and args.mode in (
-            "features", "asof"
-        ):
-            # both kernels shuffle on conv_id (the fused kernel's repartition;
-            # the sessionize window and the (conv_id, session_id) grouped map);
-            # shuffling the dedup there too satisfies its (conv_id, turn_idx)
-            # window, and Spark reuses that one exchange for all of them
+        if effective_engine == "fast" and args.mode in ("features", "asof"):
+            # the fused kernel shuffles on conv_id; shuffling the dedup there
+            # too satisfies its (conv_id, turn_idx) window, and Spark drops
+            # the kernel's same-key repartition: one exchange, not two
             turns = turns.repartition("conv_id")
         turns = dedup_turns(turns)
         if args.mode == "sessionize":
@@ -520,25 +520,16 @@ def run(argv: list[str] | None = None) -> int:
                 return out
 
     if args.checkpoint:
-        # every semantics-affecting flag participates: rerunning with any of
-        # them changed must recompute, not return the stale checkpoint
-        fingerprint = "|".join([
-            args.input,
-            str(args.gap_seconds),
-            effective_engine,
-            args.rounding,
-            f"hk={args.drop_housekeeping}",
-            f"ps={args.per_source}",
-            f"rt={args.reset_tool}",
-            f"probes={args.probes if args.mode == 'asof' else None}",
-            f"ref={args.ref if args.mode == 'drift' else None}",
-            f"fmt={args.input_format}",
-            f"pb={args.partition_by}",
-            f"exp={args.expectations if args.mode == 'quality' else None}",
-            f"rs={args.bucket_seconds}:{args.ffill_col}"
-            if args.mode == "resample" else "rs=None",
-            f"scd2={args.scd2_attr}" if args.mode == "scd2" else "scd2=None",
-        ])
+        # every flag but the sinks' and the deployment's participates, with
+        # the engine that actually runs: a rerun with any other flag changed
+        # (one added later too) recomputes instead of resuming a stale table
+        sink_flags = ("output", "checkpoint", "master", "shuffle_partitions",
+                      "format", "csv_header", "snapshot")
+        flags = dict(vars(args), engine=effective_engine)
+        fingerprint = json.dumps(
+            {k: v for k, v in flags.items() if k not in sink_flags},
+            sort_keys=True,
+        )
         out, resumed = resume_or_compute(
             spark, args.checkpoint, args.mode, compute,
             input_fingerprint=fingerprint, metrics=kernel_metrics,

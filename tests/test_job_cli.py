@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flow_feature_spark import job
+from flow_feature_spark.io import snapshot_history
 from flow_feature_spark.synth import synth_transcripts
 
 
@@ -80,22 +81,40 @@ def test_job_csv_header_sink(spark, tmp_path):
     assert "fiat_mean" in header and "duration" in header
 
 
-def test_job_checkpoint_fingerprint_covers_flags(spark, tmp_path):
+def test_job_checkpoint_fingerprint_covers_flags(spark, tmp_path, capsys):
     """Rerunning with a changed semantics flag must RECOMPUTE, not resume."""
     inp, out, ckpt = f"{tmp_path}/in", f"{tmp_path}/out", f"{tmp_path}/ckpt"
     _write_input(spark, inp)
-    assert job.run(["--input", inp, "--output", out, "--checkpoint", ckpt]) == 0
-    m1 = json.load(open(os.path.join(ckpt, "_FFS_MANIFEST.json")))
-    # same flags -> resume (manifest untouched)
-    assert job.run(["--input", inp, "--output", out, "--checkpoint", ckpt]) == 0
-    m2 = json.load(open(os.path.join(ckpt, "_FFS_MANIFEST.json")))
-    assert m2["written_at"] == m1["written_at"]
-    # changed rounding -> fingerprint differs -> recompute (manifest rewritten)
-    assert job.run([
-        "--input", inp, "--output", out, "--checkpoint", ckpt, "--rounding", "r6",
-    ]) == 0
-    m3 = json.load(open(os.path.join(ckpt, "_FFS_MANIFEST.json")))
-    assert m3["input_fingerprint"] != m1["input_fingerprint"]
+
+    def run(ck, *flags):
+        """(resumed?, the checkpoint's current log entry) of one job run."""
+        assert job.run(
+            ["--input", inp, "--output", out, "--checkpoint", ck, *flags]
+        ) == 0
+        resumed = "checkpoint resumed" in capsys.readouterr().out
+        return resumed, snapshot_history(spark, ck)[-1]
+
+    r1, e1 = run(ckpt)
+    # same flags -> resume (the current snapshot untouched)
+    r2, e2 = run(ckpt)
+    assert (r1, r2) == (False, True)
+    assert e2["snapshot_id"] == e1["snapshot_id"]
+    # changed rounding -> fingerprint differs -> recompute (new snapshot)
+    r3, e3 = run(ckpt, "--rounding", "r6")
+    assert not r3 and e3["snapshot_id"] != e1["snapshot_id"]
+    assert e3["input_fingerprint"] != e1["input_fingerprint"]
+    # exact-distinct profile, then the --hll sketch profile
+    prof = f"{tmp_path}/ck_profile"
+    assert run(prof, "--mode", "profile")[0] is False
+    assert run(prof, "--mode", "profile", "--hll")[0] is False
+    # drift histogram, then a different bin count
+    drift = f"{tmp_path}/ck_drift"
+    assert run(drift, "--mode", "drift", "--ref", inp)[0] is False
+    assert run(
+        drift, "--mode", "drift", "--ref", inp, "--drift-bins", "8"
+    )[0] is False
+    bins = {r["bin_idx"] for r in spark.read.parquet(out).collect()}
+    assert max(b for b in bins if b is not None) <= 8
 
 
 def test_job_stream_mode_matches_batch(spark, tmp_path):
@@ -187,13 +206,12 @@ def test_job_exact_sql_threads_rounding_and_reset(spark, tmp_path):
 
 def test_job_checkpoint_manifest_carries_partition_lineage(spark, tmp_path):
     """--checkpoint with the fast engine records the Arrow kernel's
-    per-partition accumulator lineage in the manifest (north rule:
+    per-partition accumulator lineage in the snapshot's log entry (north rule:
     'resumable from checkpoint with per-partition lineage + metrics')."""
     inp, out, ckpt = f"{tmp_path}/in", f"{tmp_path}/out", f"{tmp_path}/ck_m"
     _write_input(spark, inp)
     assert job.run(["--input", inp, "--output", out, "--checkpoint", ckpt]) == 0
-    m = json.load(open(os.path.join(ckpt, "_FFS_MANIFEST.json")))
-    snap = m["metrics"]
+    snap = snapshot_history(spark, ckpt)[-1]["metrics"]
     assert snap is not None
     assert snap["rows_in"] > 0 and snap["rows_out"] > 0
     assert snap["rows_in_by_partition"]  # at least one partition recorded
@@ -326,10 +344,12 @@ def _last_plan_nodes(spark) -> list[tuple[str, str]]:
 
 
 def test_job_plan_shapes(spark, tmp_path):
-    """The executed plans keep their exchange budget: under the fast and
-    kernel engines the dedup shares the kernel's conv_id exchange, and
-    --mode asof adds one exchange and no second Python stage. The bucketed skew path keeps its
-    (conv_id, bucket) shuffle, so a hot conversation is never one task."""
+    """The executed plans keep their exchange budget: under the fast engine
+    the dedup shares the kernel's conv_id exchange, and --mode asof adds one
+    exchange and no second Python stage; the kernel engine's dedup keeps its
+    own exchange (sharing the conv_id one showed no end-to-end gain). The
+    bucketed skew path keeps its (conv_id, bucket) shuffle, so a hot
+    conversation is never one task."""
     import re
 
     inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
@@ -346,7 +366,7 @@ def test_job_plan_shapes(spark, tmp_path):
     assert asof.count("MapInPandas") == 1, asof
     kernel = [n for n, _ in plan("--mode", "asof", "--probes", probes_p,
                                  "--engine", "kernel")]
-    assert kernel.count("Exchange") == 2, kernel
+    assert kernel.count("Exchange") == 3, kernel
     feats = [n for n, _ in plan("--mode", "features")]
     assert feats.count("Exchange") == 1, feats
 

@@ -5,9 +5,11 @@ At 100 TB, a date-sliced query over an unpartitioned table pays a full scan;
 hive-partitioning the sink by event date turns the same predicate into
 directory-level pruning at PLANNING time (PartitionFilters on the scan node,
 only the matching directories listed/read) — the parquet analog of an
-Iceberg partition spec. These tests pin (a) that write_checkpoint lays the
-directories out, (b) that a date predicate shows up as a PartitionFilter and
-prunes the file set, and (c) that the job CLI derives + partitions end-to-end.
+Iceberg partition spec. These tests pin (a) that a partitioned snapshot
+commit (io.write_snapshot, the --checkpoint commit) lays the directories
+out, (b) that a date predicate on the snapshot read shows up as a
+PartitionFilter and prunes the file set, and (c) that the job CLI derives +
+partitions end-to-end.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from flow_feature_spark.io import read_manifest, write_checkpoint
+from flow_feature_spark.io import read_snapshot, snapshot_history, write_snapshot
 
 
 def _scan_meta(df) -> str:
@@ -40,15 +42,16 @@ def test_checkpoint_partitioned_layout_and_pruned_scan(spark, tmp_path):
         "event_date", F.to_date("ts")
     )
     out = f"{tmp_path}/events_by_date"
-    m = write_checkpoint(
+    m = write_snapshot(
         ev, out, job="events_partitioned", partition_cols=("event_date",)
     )
-    dirs = _partition_dirs(out, "event_date")
+    snap = f"{out}/{m['dir']}"
+    dirs = _partition_dirs(snap, "event_date")
     assert len(dirs) > 1, "expected one directory per event date"
     assert m["rows"] == ev.count()
-    assert read_manifest(out, spark)["job"] == "events_partitioned"
+    assert snapshot_history(spark, out)[-1]["job"] == "events_partitioned"
 
-    back = spark.read.parquet(out)
+    back = read_snapshot(spark, out)
     one_day = dirs[0].split("=", 1)[1]
     sliced = back.filter(F.col("event_date") == F.lit(one_day).cast("date"))
     plan = _scan_meta(sliced)
@@ -63,7 +66,7 @@ def test_checkpoint_partitioned_layout_and_pruned_scan(spark, tmp_path):
     )
     n_files_read = sliced.select(F.input_file_name()).distinct().count()
     n_files_one_dir = len(
-        [f for f in os.listdir(f"{out}/{dirs[0]}") if f.endswith(".parquet")]
+        [f for f in os.listdir(f"{snap}/{dirs[0]}") if f.endswith(".parquet")]
     )
     assert n_files_read == n_files_one_dir < n_files_total
     # and the slice is correct
@@ -80,8 +83,8 @@ def test_unpartitioned_scan_has_no_partition_filter(spark, tmp_path):
         "event_date", F.to_date("ts")
     )
     out = f"{tmp_path}/events_flat"
-    write_checkpoint(ev, out, job="events_flat")
-    back = spark.read.parquet(out)
+    write_snapshot(ev, out, job="events_flat")
+    back = read_snapshot(spark, out)
     sliced = back.filter(F.col("event_date") == F.to_date(F.lit("2024-01-02")))
     plan = _scan_meta(sliced)
     assert "event_date" not in _partition_filters(plan)

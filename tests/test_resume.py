@@ -1,5 +1,6 @@
 """Checkpoint/resume semantics (north rule: resumable with per-partition
-lineage + metrics) — SURVEY.md §5.6."""
+lineage + metrics) — SURVEY.md §5.6. A checkpoint is a snapshot table
+(io.py's snapshot log); resume reads its current snapshot."""
 
 from __future__ import annotations
 
@@ -13,10 +14,9 @@ from pyspark.sql import functions as F
 
 from flow_feature_spark.io import (
     KernelMetrics,
-    input_fingerprint_for,
-    read_manifest,
     resume_or_compute,
-    write_checkpoint,
+    snapshot_history,
+    write_snapshot,
 )
 from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 from flow_feature_spark.prepare import normalize_turns
@@ -61,9 +61,10 @@ def test_checkpoint_commit_and_resume(spark, tmppath):
 
 def test_aborted_write_recomputes(spark, tmppath):
     feats = _features(spark)
-    # simulate a crash: data written but manifest never committed
-    feats.write.mode("overwrite").parquet(tmppath)
-    assert read_manifest(tmppath) is None
+    # simulate a crash: the first snapshot's data written, its log never
+    # committed
+    feats.write.parquet(f"{tmppath}/snap-000001")
+    assert snapshot_history(spark, tmppath) == []
     calls = {"n": 0}
 
     def compute():
@@ -72,13 +73,76 @@ def test_aborted_write_recomputes(spark, tmppath):
 
     _, resumed = resume_or_compute(spark, tmppath, "features", compute, "fp")
     assert not resumed and calls["n"] == 1
-    assert read_manifest(tmppath) is not None
+    (entry,) = snapshot_history(spark, tmppath)
+    assert (entry["snapshot_id"], entry["input_fingerprint"]) == (1, "fp")
+
+
+def _files_read(df) -> set[str]:
+    return {r[0] for r in df.select(F.input_file_name()).distinct().collect()}
+
+
+def test_old_layout_checkpoint_recomputes(spark, tmppath):
+    """A directory in the pre-snapshot checkpoint layout (part files at the
+    root plus a _FFS_MANIFEST.json naming the same job and fingerprint)
+    recomputes once into a snapshot; no read includes the old root files."""
+    import json
+
+    _features(spark).write.parquet(tmppath)
+    with open(os.path.join(tmppath, "_FFS_MANIFEST.json"), "w") as fh:
+        json.dump({"job": "features", "input_fingerprint": "fp"}, fh)
+    calls = {"n": 0}
+
+    def compute():
+        calls["n"] += 1
+        return _features(spark)
+
+    df1, resumed1 = resume_or_compute(spark, tmppath, "features", compute, "fp")
+    df2, resumed2 = resume_or_compute(spark, tmppath, "features", compute, "fp")
+    assert (resumed1, resumed2, calls["n"]) == (False, True, 1)
+    n, snap = _features(spark).count(), f"{tmppath}/snap-000001/"
+    for df in (df1, df2):
+        assert df.count() == n
+        assert all(snap in f for f in _files_read(df))
+
+
+def test_orphan_of_crashed_recompute_keeps_checkpoint(spark, tmppath):
+    """A recompute that crashed after writing its data (an orphan
+    snap-000002, no log entry) leaves the committed checkpoint current: the
+    next run resumes it with identical rows."""
+    calls = {"n": 0}
+
+    def compute():
+        calls["n"] += 1
+        return _features(spark)
+
+    df1, _ = resume_or_compute(spark, tmppath, "features", compute, "fp")
+    _features(spark).limit(3).write.parquet(f"{tmppath}/snap-000002")
+    df2, resumed = resume_or_compute(spark, tmppath, "features", compute, "fp")
+    assert resumed and calls["n"] == 1
+    assert df1.exceptAll(df2).count() == 0 == df2.exceptAll(df1).count()
+    assert all("/snap-000001/" in f for f in _files_read(df2))
+
+
+def test_fingerprint_change_leaves_one_live_snapshot(spark, tmppath):
+    """Each recompute expires the snapshot it supersedes: the checkpoint
+    directory holds one live copy, the current one."""
+    for fp in ("v1", "v2", "v3"):
+        df, resumed = resume_or_compute(
+            spark, tmppath, "features", lambda: _features(spark), fp
+        )
+        assert not resumed
+    snaps = sorted(d for d in os.listdir(tmppath) if d.startswith("snap-"))
+    log = snapshot_history(spark, tmppath)
+    assert snaps == [log[-1]["dir"]] == ["snap-000003"]
+    assert [e["dirs"] for e in log[:-1]] == [None, None]
+    assert log[-1]["input_fingerprint"] == "v3"
+    assert df.count() == log[-1]["rows"]
 
 
 def test_metrics_lineage_in_manifest(spark, tmppath):
     metrics = KernelMetrics.create(spark)
     feats = _features(spark, metrics=metrics)
-    m = write_checkpoint(feats, tmppath, "features", "fp", metrics=metrics)
+    m = write_snapshot(feats, tmppath, "features", "fp", metrics=metrics)
     assert m["rows"] == feats.count()
     snap = m["metrics"]
     assert snap["rows_out"] >= m["rows"]  # kernel may run before final count

@@ -1,10 +1,11 @@
-"""Snapshot log: Iceberg-shaped versioning on the manifest backend
+"""Snapshot log: Iceberg-shaped versioning without the Iceberg jar
 (io.write_snapshot / read_snapshot / rollback_snapshot / expire_snapshots).
 
 Reference basis: generalizes the joblib cache S4 replaces
-(get_flow_feature.py:7-14) the same way write_checkpoint does, adding the
-Iceberg table contract the north rule names — immutable snapshots, VERSION
-AS OF / TIMESTAMP AS OF time travel, append-only rollback, expiration.
+(get_flow_feature.py:7-14) — the --checkpoint resume reads the current
+snapshot of this log — adding the Iceberg table contract the north rule
+names: immutable snapshots, VERSION AS OF / TIMESTAMP AS OF time travel,
+append-only rollback, expiration.
 """
 
 from __future__ import annotations
