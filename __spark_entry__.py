@@ -10,6 +10,7 @@ real DataFrame modules against the same oracles.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,7 +20,7 @@ from pyspark.sql import functions as F
 from flow_feature_spark import oracle_docs as OD
 from flow_feature_spark import oracle_queries as OQ
 from flow_feature_spark.asof import asof_join_fast, asof_join_union_window
-from flow_feature_spark.kernel import extract_session_features
+from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 from flow_feature_spark.ops import dedup as dd
 from flow_feature_spark.ops import multimodal as mm
 from flow_feature_spark.ops import similarity as sim
@@ -86,21 +87,12 @@ def _events_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_feature_vector_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The grouped pandas kernel (U1), r6 rounding to match the SQL oracle
-    bit-for-bit (reference-parity half_even mode is pinned in pytest)."""
-    turns = _events_turns(spark, sf_dir)
-    sess = assign_sessions(turns, gap_seconds=OQ.SESSION_GAP_S)
-    feats = extract_session_features(sess, rounding="r6")
-    return feats.select("conv_id", "session_id", "n_turns", *FEATURE_NAMES)
-
-
 def q_feature_vector_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused sessionize + batch-vectorized mapInPandas kernel (scale
-    path) — same oracle; bit-identical to the grouped kernel, including
-    session numbering (asserted in tests and here)."""
-    from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
-
+    """The 72-feature kernel (U1): fused sessionize + batch-vectorized
+    mapInPandas, r6 rounding to match the SQL oracle bit-for-bit
+    (reference-parity half_even mode is pinned in pytest). Serves both
+    ``session_features_fast`` and ``session_features_kernel``; its r6 rows
+    are bit-equal to the grouped exact kernel, a test oracle."""
     turns = _events_turns(spark, sf_dir)
     feats = sessionize_and_extract_fast(turns, OQ.SESSION_GAP_S, rounding="r6")
     return feats.select("conv_id", "session_id", "n_turns", *FEATURE_NAMES)
@@ -824,7 +816,7 @@ def q_asof_running_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_per_source_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F10: whole-file 72-vector PER SOURCE FILE (reference per-pcap
     identifier, get_flow_feature.py:57) — conv_id := input_file_name()
-    basename, one session per file, through the grouped kernel."""
+    basename, one session per file: the fused kernel with an infinite gap."""
     ev = _prep(spark).read.parquet(f"{sf_dir}/events.parquet")
     src = F.element_at(F.split(F.input_file_name(), "/"), -1)
     ev = ev.withColumn("source", src)
@@ -838,8 +830,8 @@ def q_per_source_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("value").cast("long").alias("win"),
         (F.floor("value").cast("long") % 256).cast("int").alias("flags"),
         F.length("event_type").cast("long").alias("ihl"),
-    ).withColumn("session_id", F.lit(1).cast("long"))
-    feats = extract_session_features(turns, rounding="r6")
+    )
+    feats = sessionize_and_extract_fast(turns, math.inf, rounding="r6")
     return feats.select(
         F.col("conv_id").alias("source"), "session_id", "n_turns", *FEATURE_NAMES
     )
@@ -1529,7 +1521,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "whole_table_flow": _sql(OQ.whole_table_flow_sql),
         "proto_tag_filter": q_proto_tag,
         "tpch_q1": _sql(OQ.tpch_q1_sql),
-        "session_features_kernel": q_feature_vector_kernel,
+        "session_features_kernel": q_feature_vector_fast,
         "session_features_salted": q_session_features_salted,
         "session_features_fast": q_feature_vector_fast,
         "sessionize_bucketed": q_sessionize_bucketed,

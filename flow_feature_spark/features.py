@@ -1,8 +1,8 @@
 """The 72 features as one pure Spark SQL query: no Python boundary.
 
 ``session_features_exact_sql`` runs the exact-integer/decimal-domain SQL the
-DuckDB oracle uses, so its r6 output is bit-identical to the Arrow kernels
-(kernel.py, kernel_fast.py) while the whole plan stays in whole-stage codegen.
+DuckDB oracle uses, so its r6 output is bit-identical to the Arrow kernel
+(kernel_fast.py) while the whole plan stays in whole-stage codegen.
 """
 
 from __future__ import annotations

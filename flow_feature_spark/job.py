@@ -92,12 +92,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--gap-seconds", type=float, default=1800.0)
     p.add_argument(
         "--engine",
-        choices=["fast", "kernel", "exact-sql"],
+        choices=["fast", "exact-sql"],
         default="fast",
-        help="fast: fused Arrow kernel (fewest shuffles); kernel: grouped "
-        "exact kernel; exact-sql: exact-domain pure SQL, no Python boundary "
-        "(with --sessionizer bucketed it is the skew path for "
-        "mega-conversations). --mode asof attaches the vectors with the "
+        help="fast: the fused Arrow kernel, one Python call per Arrow batch "
+        "(fewest shuffles); exact-sql: exact-domain pure SQL, no Python "
+        "boundary (with --sessionizer bucketed it is the skew path for "
+        "mega-conversations). Both give bit-identical rows at --rounding r6 "
+        "and honour --reset-tool. --mode asof attaches the vectors with the "
         "JVM-only union-window join under every engine",
     )
     p.add_argument("--rounding", choices=["half_even", "r6"], default="half_even")
@@ -197,27 +198,14 @@ def run(argv: list[str] | None = None) -> int:
         )
 
     from flow_feature_spark.asof import asof_join_union_window
-    from flow_feature_spark.io import resume_or_compute
-    from flow_feature_spark.kernel import attach_feature_ts, extract_session_features
+    from flow_feature_spark.io import resume_or_compute, snapshot_history
+    from flow_feature_spark.kernel import attach_feature_ts
     from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
     from flow_feature_spark.prepare import drop_housekeeping, normalize_turns
     from flow_feature_spark.session import get_spark
     from flow_feature_spark.sessionize import assign_sessions, dedup_turns
 
     from pyspark import SparkContext
-
-    # resolve the EFFECTIVE engine up front so the checkpoint fingerprint
-    # records what actually ran, never a silently-substituted path: the fused
-    # kernel cannot force-reset sessions mid-stream, so fast + --reset-tool
-    # degrades (loudly) to the grouped exact kernel.
-    effective_engine = args.engine
-    if args.engine == "fast" and args.reset_tool is not None:
-        effective_engine = "kernel"
-        print(
-            "warning: --engine fast does not support --reset-tool; "
-            "running the grouped exact kernel instead",
-            file=sys.stderr,
-        )
 
     # getOrCreate reuses a running session (e.g. pytest's); only stop what
     # this run created. The JVM's active session is per thread, so a call on
@@ -330,7 +318,7 @@ def run(argv: list[str] | None = None) -> int:
     # kernel and land in the checkpoint's log entry (north rule: "resumable from
     # checkpoint with per-partition lineage + metrics")
     kernel_metrics = None
-    if args.checkpoint and effective_engine == "fast" and args.mode == "features":
+    if args.checkpoint and args.engine == "fast" and args.mode == "features":
         from flow_feature_spark.io import KernelMetrics
 
         kernel_metrics = KernelMetrics.create(spark)
@@ -438,7 +426,9 @@ def run(argv: list[str] | None = None) -> int:
             )
         if args.per_source and args.mode == "features":
             # pcap mode: the whole FILE is one flow — key by source basename,
-            # order rows by time within the file
+            # order rows by time within the file; an infinite gap never splits
+            import math
+
             from pyspark.sql import Window as W
             from pyspark.sql import functions as F
 
@@ -449,13 +439,16 @@ def run(argv: list[str] | None = None) -> int:
             turns = normalize_turns(
                 src.withColumn("turn_idx", F.row_number().over(w)),
                 conv_col="source",
-            ).withColumn("session_id", F.lit(1).cast("long"))
-            feats = extract_session_features(turns, rounding=args.rounding)
+            )
+            feats = sessionize_and_extract_fast(
+                turns, gap_seconds=math.inf, rounding=args.rounding,
+                metrics=kernel_metrics,
+            )
             return attach_feature_ts(feats).withColumnRenamed("conv_id", "source")
         turns = normalize_turns(df)
         if args.drop_housekeeping:
             turns = drop_housekeeping(turns)
-        if effective_engine == "fast" and args.mode in ("features", "asof"):
+        if args.engine == "fast" and args.mode in ("features", "asof"):
             # the fused kernel shuffles on conv_id; shuffling the dedup there
             # too satisfies its (conv_id, turn_idx) window, and Spark drops
             # the kernel's same-key repartition: one exchange, not two
@@ -465,12 +458,12 @@ def run(argv: list[str] | None = None) -> int:
             return assign_sessions(
                 turns, gap_seconds=args.gap_seconds, reset_tool=args.reset_tool
             ).select("conv_id", "turn_idx", "session_id", "ts")
-        if effective_engine == "fast":
+        if args.engine == "fast":
             feats = sessionize_and_extract_fast(
                 turns, gap_seconds=args.gap_seconds, rounding=args.rounding,
-                metrics=kernel_metrics,
+                metrics=kernel_metrics, reset_tool=args.reset_tool,
             )
-        elif effective_engine == "exact-sql":
+        else:
             from flow_feature_spark.features import session_features_exact_sql
 
             # rounding + reset-tool thread all the way through (the SQL engine
@@ -480,11 +473,6 @@ def run(argv: list[str] | None = None) -> int:
                 rounding=args.rounding, reset_tool=args.reset_tool,
                 sessionizer=args.sessionizer,
             )
-        else:
-            sess = assign_sessions(
-                turns, gap_seconds=args.gap_seconds, reset_tool=args.reset_tool
-            )
-            feats = extract_session_features(sess, rounding=args.rounding)
         feats = attach_feature_ts(feats)
         if args.mode == "asof":
             probes = spark.read.parquet(args.probes)
@@ -520,14 +508,13 @@ def run(argv: list[str] | None = None) -> int:
                 return out
 
     if args.checkpoint:
-        # every flag but the sinks' and the deployment's participates, with
-        # the engine that actually runs: a rerun with any other flag changed
-        # (one added later too) recomputes instead of resuming a stale table
+        # every flag but the sinks' and the deployment's participates: a
+        # rerun with any other flag changed (one added later too) recomputes
+        # instead of resuming a stale table
         sink_flags = ("output", "checkpoint", "master", "shuffle_partitions",
                       "format", "csv_header", "snapshot")
-        flags = dict(vars(args), engine=effective_engine)
         fingerprint = json.dumps(
-            {k: v for k, v in flags.items() if k not in sink_flags},
+            {k: v for k, v in vars(args).items() if k not in sink_flags},
             sort_keys=True,
         )
         out, resumed = resume_or_compute(
@@ -535,7 +522,9 @@ def run(argv: list[str] | None = None) -> int:
             input_fingerprint=fingerprint, metrics=kernel_metrics,
             partition_cols=partition_cols,
         )
-        print(f"checkpoint {'resumed' if resumed else 'computed'}: {out.count()} rows")
+        # the current log entry records the row count: no count job
+        rows = snapshot_history(spark, args.checkpoint)[-1]["rows"]
+        print(f"checkpoint {'resumed' if resumed else 'computed'}: {rows} rows")
     else:
         out = compute()
 

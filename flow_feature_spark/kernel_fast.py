@@ -1,9 +1,10 @@
-"""Batch-vectorized feature kernel: the 10^12-turn scale path.
+"""The feature kernel: the 72 features for thousands of sessions per NumPy call.
 
-``extract_session_features`` (kernel.py) calls Python once per group — exact,
-but per-group overhead (~ms) dominates when groups are small and numerous.
-This module computes the same 72 features for THOUSANDS of groups per NumPy
-call:
+This is the Spark rebuild of the reference's per-flow kernel
+``Flow.get_flow_feature`` (flow.py:129-203) and its helpers ``calculation``
+(254-271), ``packet_iat`` (293-312), ``packet_len`` (315-329), ``packet_win``
+(332-350), ``packet_flags`` (352-382) and ``packet_hdr_len`` (385-398), and the
+one Python feature kernel of every job path:
 
   repartition(conv_id)                           -- the one hash shuffle
   sortWithinPartitions(conv_id, ts_us, turn_idx)
@@ -11,26 +12,34 @@ call:
                                                     through, group stats via
                                                     np.*.reduceat
 
+Python is called once per Arrow batch, not once per session. The reference's
+parity rules hold: population std, round(x, 6) on every statistic,
+duration = last - first + 0.0001, max(x, 1) ratio guards, dpnum_s / dpl_s as
+sums of rounded terms, empty-direction sentinels (0.0 stats, -1 flag counts),
+and no row for a session of fewer than 2 turns.
+
 Within a partition, a session's rows are contiguous after the sort but may
-span Arrow batch boundaries — the iterator wrapper holds back each batch's
-trailing (possibly incomplete) session and prepends it to the next batch, so
-every session is processed exactly once and memory stays bounded by
+span Arrow batch boundaries. Each batch is sessionized once; only the last
+conv, ts_us and session id carry into the next batch, and the open trailing
+session is held as a list of frames, concatenated once when it closes. A
+session spanning k batches costs O(its rows), and memory stays bounded by
 (batch + largest session).
 
 Numeric contract: integer sums/sumsq via int64 reduceat (exact); the centered
 IAT deviations use float64 products whose error (~1e-16 relative) is ~10
-orders of magnitude below the r6 rounding grid — agreement with the exact
-kernel is asserted in tests (and empirically bit-equal after r6 on the
-driver data). Exactness bound for the int64 sumsq path: per-session
-sum(plen^2) must stay below 2^63 — i.e. max_plen^2 * session_turns < 9.2e18
-(e.g. 1e6-char texts x 9M-turn sessions). Beyond that, route through the
-grouped exact kernel (Python-int accumulation). The exact-SQL engine
-(features.session_features_exact_sql) widens only the squared gap
+orders of magnitude below the r6 rounding grid — the r6 output is bit-equal
+to the Python-int grouped oracle (tests/exact_kernel.py) and to the exact-SQL
+engine, asserted in tests. The int64 sumsq path is exact while a session's
+max(|v|)^2 * turns < 2^63 for plen and win (e.g. 1e6-char texts x 9M-turn
+sessions); past that bound the kernel raises ValueError naming the
+conversation. Such data is outside every engine's exact domain: the exact-SQL
+engine (features.session_features_exact_sql) widens only the squared gap
 deviations to decimal(38,0); its plen/win sums of squares are bigint too.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -42,7 +51,10 @@ from flow_feature_spark.schema import (
     DURATION_EPSILON,
     FEATURE_NAMES,
     FEATURE_SCHEMA,
+    TOOL_FLAG_BITS,
 )
+
+_INT64_SQ_LIMIT = 2.0**63
 
 
 def _r6_vec(x: np.ndarray) -> np.ndarray:
@@ -64,7 +76,7 @@ def _seg_stats(
     """Per-segment [mean, min, max, std_pop] over valid entries; empty -> 0.
 
     ``vals`` int64 with garbage at ~valid positions; centered two-pass std
-    (matches kernel._exact_stats4(centered=True) op order).
+    (the op order of the exact oracle's centered statistics).
     """
     n = counts_valid.astype(np.float64)
     safe_n = np.maximum(counts_valid, 1)
@@ -94,16 +106,20 @@ def _onepass_stats(
     mask: np.ndarray,
     starts: np.ndarray,
     r,
+    keys: np.ndarray,
+    name: str,
 ) -> tuple[np.ndarray, ...]:
     """[total, mean, min, max, std] per segment over mask (win/plen path).
 
-    One-pass var = sq/n - mean^2 on exact int64 sums — same op order as
-    kernel._exact_stats4(centered=False).
+    One-pass var = sq/n - mean^2 on exact int64 sums — the op order of the
+    exact oracle's one-pass statistics. Raises ValueError, naming the
+    segment's conversation (``keys``), where the sum of squares could pass
+    int64 (max(|v|)^2 * count >= 2^63) instead of wrapping silently.
     """
     v = np.where(mask, vals, 0)
     cnt = np.add.reduceat(mask.astype(np.int64), starts)
     s = np.add.reduceat(v, starts)  # int64, exact
-    sq = np.add.reduceat(v * v, starts)  # int64, exact for our magnitudes
+    sq = np.add.reduceat(v * v, starts)  # int64, exact below the guard
     safe = np.maximum(cnt, 1).astype(np.float64)
     mean_raw = s.astype(np.float64) / safe
     var = np.maximum(sq.astype(np.float64) / safe - mean_raw * mean_raw, 0.0)
@@ -111,6 +127,14 @@ def _onepass_stats(
     mn = np.minimum.reduceat(np.where(mask, vals, big), starts).astype(np.float64)
     mx = np.maximum.reduceat(np.where(mask, vals, -big), starts).astype(np.float64)
     empty = cnt == 0
+    reach = np.where(empty, 0.0, np.maximum(mx, -mn))
+    over = reach * reach * cnt >= _INT64_SQ_LIMIT
+    if over.any():
+        raise ValueError(
+            f"conversation {keys[int(np.argmax(over))]!r}: a session's sum of "
+            f"squared {name} reaches 2^63 (max^2 x turns), past the int64 "
+            "accumulation; this data is outside the exact domain of every engine"
+        )
     z = lambda a: np.where(empty, 0.0, a)  # noqa: E731
     return (
         r(z(s.astype(np.float64))),
@@ -188,12 +212,19 @@ def batch_feature_frame(pdf: pd.DataFrame, rounding: str = "r6") -> pd.DataFrame
 
     # ---- win / plen stat families
     ones = np.ones(N, dtype=bool)
-    fwin_t, fwin_m, fwin_mn, fwin_mx, fwin_s, fpnum = _onepass_stats(win, fwd, starts, r)
-    bwin_t, bwin_m, bwin_mn, bwin_mx, bwin_s, bpnum = _onepass_stats(win, ~fwd, starts, r)
-    dwin_t, dwin_m, dwin_mn, dwin_mx, dwin_s, _ = _onepass_stats(win, ones, starts, r)
-    fpl_t, fpl_m, fpl_mn, fpl_mx, fpl_s_, _ = _onepass_stats(plen, fwd, starts, r)
-    bpl_t, bpl_m, bpl_mn, bpl_mx, bpl_s_, _ = _onepass_stats(plen, ~fwd, starts, r)
-    dpl_t, dpl_m, dpl_mn, dpl_mx, dpl_s_, _ = _onepass_stats(plen, ones, starts, r)
+    keys = conv[starts]
+    fwin_t, fwin_m, fwin_mn, fwin_mx, fwin_s, fpnum = _onepass_stats(
+        win, fwd, starts, r, keys, "win")
+    bwin_t, bwin_m, bwin_mn, bwin_mx, bwin_s, bpnum = _onepass_stats(
+        win, ~fwd, starts, r, keys, "win")
+    dwin_t, dwin_m, dwin_mn, dwin_mx, dwin_s, _ = _onepass_stats(
+        win, ones, starts, r, keys, "win")
+    fpl_t, fpl_m, fpl_mn, fpl_mx, fpl_s_, _ = _onepass_stats(
+        plen, fwd, starts, r, keys, "plen")
+    bpl_t, bpl_m, bpl_mn, bpl_mx, bpl_s_, _ = _onepass_stats(
+        plen, ~fwd, starts, r, keys, "plen")
+    dpl_t, dpl_m, dpl_mn, dpl_mx, dpl_s_, _ = _onepass_stats(
+        plen, ones, starts, r, keys, "plen")
 
     fp = fpnum.astype(np.float64)
     bp = bpnum.astype(np.float64)
@@ -230,7 +261,7 @@ def batch_feature_frame(pdf: pd.DataFrame, rounding: str = "r6") -> pd.DataFrame
     d_ht = r(dhdr / np.maximum(dpl_t, 1.0))
 
     cols = {
-        "conv_id": conv[starts],
+        "conv_id": keys,
         "session_id": sess[starts],
         "session_start_ts": first_ts / 1e6,
         "session_end_ts": last_ts / 1e6,
@@ -263,18 +294,23 @@ def sessionize_and_extract_fast(
     conv_col: str = "conv_id",
     num_partitions: int | None = None,
     metrics=None,
+    reset_tool: str | None = None,
 ) -> DataFrame:
     """Fused sessionize + feature extraction: ONE shuffle total.
 
     repartition(conv_id) + sortWithinPartitions(conv_id, ts_us, turn_idx),
     then a single streaming pass assigns gap-based session ids (identical
     numbering to sessionize.assign_sessions — 1-based per conv) and computes
-    the 72-vector per session. The separate window pass (its own exchange +
-    sort) disappears. Carry-over state per partition: the trailing,
-    possibly-incomplete session of the trailing conv — memory is bounded by
-    (Arrow batch + largest single session).
+    the 72-vector per session. A non-finite ``gap_seconds`` (math.inf) never
+    splits: one session per conv. ``reset_tool``: a tool name whose turns
+    open a new session (same contract as sessionize.assign_sessions).
     """
-    gap_us = int(round(gap_seconds * 1_000_000))
+    gap_us = (
+        int(round(gap_seconds * 1_000_000))
+        if math.isfinite(gap_seconds)
+        else np.iinfo(np.int64).max
+    )
+    reset_bit = None if reset_tool is None else TOOL_FLAG_BITS[reset_tool]
     proj = df.select(
         conv_col, "turn_idx", "ts_us", "is_fwd", "plen", "win", "flags", "ihl"
     )
@@ -285,58 +321,54 @@ def sessionize_and_extract_fast(
     )
     sorted_df = part.sortWithinPartitions(conv_col, "ts_us", "turn_idx")
 
+    def extract(parts: list[pd.DataFrame]) -> pd.DataFrame:
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+        out = batch_feature_frame(pdf, rounding)
+        if metrics is not None:
+            metrics.record(len(pdf), len(out))
+        return out
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
+        open_parts: list[pd.DataFrame] = []  # the trailing, open session
         prev_conv: object = None
-        prev_sid = 0  # global session id of the carried (incomplete) session
+        prev_ts = prev_sid = 0
 
         for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry.drop(columns=["session_id"]), pdf],
-                                ignore_index=True)
-            if len(pdf) == 0:
+            n = len(pdf)
+            if n == 0:
                 continue
             conv = pdf["conv_id"].to_numpy()
             conv_codes = pd.factorize(conv)[0]
             ts = pdf["ts_us"].to_numpy(np.int64)
-            n = len(pdf)
-            is_new = np.ones(n, dtype=np.int64)
-            if n > 1:
-                same_conv = conv_codes[1:] == conv_codes[:-1]
-                small_gap = (ts[1:] - ts[:-1]) <= gap_us
-                is_new[1:] = (~(same_conv & small_gap)).astype(np.int64)
-            carried = prev_conv is not None and conv[0] == prev_conv
-            if carried:
-                is_new[0] = 0
-            c = np.cumsum(is_new)
             conv_start = np.ones(n, dtype=bool)
             conv_start[1:] = conv_codes[1:] != conv_codes[:-1]
+            is_new = conv_start.copy()
+            is_new[1:] |= (ts[1:] - ts[:-1]) > gap_us
+            carried = prev_conv is not None and conv[0] == prev_conv
+            if carried:
+                is_new[0] = ts[0] - prev_ts > gap_us
+            if reset_bit is not None:
+                is_new |= ((pdf["flags"].to_numpy(np.int64) >> reset_bit) & 1) == 1
+            c = np.cumsum(is_new)
             starts = np.flatnonzero(conv_start)
             reps = np.diff(np.append(starts, n))
-            base = np.repeat(c[starts], reps)
-            sid = c - base + 1
+            sid = c - np.repeat(c[starts], reps) + 1
             if carried:
-                # rows of the carried conv continue its global numbering
-                first_len = reps[0]
-                sid[:first_len] += prev_sid - 1
+                # rows of the carried conv continue its numbering
+                sid[: reps[0]] = prev_sid + c[: reps[0]]
             pdf = pdf.assign(session_id=sid)
+            prev_conv, prev_ts, prev_sid = conv[-1], int(ts[-1]), int(sid[-1])
 
-            # hold back the trailing session of the trailing conv
-            tail_mask = (conv_codes == conv_codes[-1]) & (sid == sid[-1])
-            tail_start = int(n - tail_mask[::-1].cumprod().sum())
-            carry = pdf.iloc[tail_start:]
-            prev_conv = conv[-1]
-            prev_sid = int(sid[-1])
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                out = batch_feature_frame(head, rounding)
-                if metrics is not None:
-                    metrics.record(len(head), len(out))
-                yield out
-        if carry is not None and len(carry):
-            out = batch_feature_frame(carry, rounding)
-            if metrics is not None:
-                metrics.record(len(carry), len(out))
-            yield out
+            new_at = np.flatnonzero(is_new)
+            if len(new_at) == 0:  # the whole batch continues the open session
+                open_parts.append(pdf)
+                continue
+            tail = int(new_at[-1])
+            closed = open_parts + ([pdf.iloc[:tail]] if tail else [])
+            if closed:
+                yield extract(closed)
+            open_parts = [pdf.iloc[tail:]]
+        if open_parts:
+            yield extract(open_parts)
 
     return sorted_df.mapInPandas(run, schema=FEATURE_SCHEMA)

@@ -174,8 +174,8 @@ def _agg_block(dialect: str, rnd=r6) -> tuple[str, str]:
                 # — so both walls are guarded with raise_error (the sum wall
                 # via the devsq-NULL-with-nonzero-count check in stats4),
                 # matching DuckDB, which raises on int128 overflow on its
-                # own. A failing group must route through the grouped kernel
-                # (Python-int accumulation, unbounded).
+                # own. Data past these walls is outside every engine's exact
+                # domain.
                 dev = "dev_all" if dirn == "d" else "dev_dir"
                 if dialect == "spark":
                     prod = (
@@ -184,8 +184,9 @@ def _agg_block(dialect: str, rnd=r6) -> tuple[str, str]:
                         f"OR abs({dev}) < 10000000000000000000 THEN "
                         f"cast({dev} AS decimal(38,0)) * cast({dev} AS decimal(38,0)) "
                         f"ELSE cast(raise_error('{p}: |centered dev| >= 1e19 "
-                        f"exceeds the exact decimal(38,0) domain — use the "
-                        f"grouped kernel for this data') AS decimal(38,0)) END)"
+                        f"exceeds the exact decimal(38,0) domain — this data is "
+                        f"outside the exact domain of every engine') "
+                        f"AS decimal(38,0)) END)"
                     )
                 else:
                     prod = f"{dev} * {dev}"
@@ -223,7 +224,7 @@ def _agg_block(dialect: str, rnd=r6) -> tuple[str, str]:
         overflow = ""
         if centered:
             # exact centered sum of squares: S = sum((x*n - sum)^2),
-            # std = sqrt(double(S)/n^3)/scale — matches kernel._exact_stats4
+            # std = sqrt(double(S)/n^3)/scale — the exact oracle's op order
             n = f"{p}_cnt"
             std = rnd(f"(sqrt(cast({p}_devsq AS double)/{n}/{n}/{n})/{scale})")
             if dialect == "spark":
@@ -234,8 +235,8 @@ def _agg_block(dialect: str, rnd=r6) -> tuple[str, str]:
                 overflow = (
                     f"WHEN {p}_devsq IS NULL AND {p}_cnt > 0 THEN "
                     f"cast(raise_error('{p}: exact devsq sum overflowed "
-                    f"decimal(38,0) — use the grouped kernel for this data') "
-                    f"AS double) "
+                    f"decimal(38,0) — this data is outside the exact "
+                    f"domain of every engine') AS double) "
                 )
         else:
             std = rnd(_std_from_exact(f"{p}_sum", f"{p}_sumsq", f"{p}_cnt", scale))

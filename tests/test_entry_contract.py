@@ -46,3 +46,28 @@ def test_valid_turn_filter(spark):
         "conv_id string, ts_raw string",
     ).selectExpr("conv_id", "cast(ts_raw as timestamp) as ts")
     assert filter_valid_turns(df).count() == 1
+
+
+def test_production_never_imports_tests():
+    """The oracles under tests/ (the exact grouped kernel, the merge_asof
+    join) stay out of production: no module of the package, and not the
+    driver contract, imports from ``tests``."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(entrymod.__file__).parent
+    files = [root / "__spark_entry__.py",
+             *sorted((root / "flow_feature_spark").rglob("*.py"))]
+    offenders = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module or ""]
+            else:
+                continue
+            offenders += [(path.name, n) for n in names
+                          if n == "tests" or n.startswith("tests.")]
+    assert len(files) > 30
+    assert offenders == []

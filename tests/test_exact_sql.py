@@ -1,16 +1,18 @@
 """JVM-only exact SQL path: session_features_exact_sql must be BIT-EQUAL to
-the Arrow kernel (r6) on the same turns — the no-Python-boundary engine."""
+the exact grouped oracle kernel (r6) on the same turns — the
+no-Python-boundary engine."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from flow_feature_spark.features import session_features_exact_sql
-from flow_feature_spark.kernel import extract_session_features
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.schema import FEATURE_NAMES
 from flow_feature_spark.sessionize import assign_sessions
 from flow_feature_spark.synth import synth_transcripts
+
+from tests.exact_kernel import extract_session_features
 
 
 def _collect(df):
@@ -148,7 +150,7 @@ def _expect_raise(df):
 
     with _pytest.raises((SparkRuntimeException, Exception)) as ei:
         df.collect()
-    assert "grouped kernel" in str(ei.value)
+    assert "outside the exact domain of every engine" in str(ei.value)
 
 
 def test_exact_sql_product_wall_raises_not_silent(spark):
@@ -157,11 +159,6 @@ def test_exact_sql_product_wall_raises_not_silent(spark):
     way non-ANSI overflow-NULL would. dev = 99 * 2e17 = 1.98e19."""
     turns = _wide_turns(spark, big_gap_us=200_000_000_000_000_000)
     _expect_raise(session_features_exact_sql(turns, gap_seconds=GAP_HUGE_S))
-    # the documented route for such data still works: Python-int kernel
-    out = extract_session_features(
-        assign_sessions(turns, gap_seconds=GAP_HUGE_S), rounding="r6"
-    ).collect()
-    assert len(out) == 1 and out[0]["diat_std"] > 0
 
 
 def test_exact_sql_sum_wall_raises_not_silent(spark):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -68,6 +69,47 @@ def test_job_per_source_mode(spark, tmp_path):
     assert all(r["source"].startswith("part-") for r in rows)
 
 
+def test_job_per_source_tiny_batches_match_exact_kernel(spark, tmp_path):
+    """--per-source over 37-row Arrow batches: each file's one flow spans
+    several batches and its gaps pass --gap-seconds, and every row equals
+    the exact grouped kernel over one session per file (r6)."""
+    from pyspark.sql import Window as W
+
+    from flow_feature_spark.prepare import normalize_turns, with_source_file
+    from flow_feature_spark.schema import FEATURE_NAMES
+
+    from tests.exact_kernel import extract_session_features
+
+    inp, out = f"{tmp_path}/in", f"{tmp_path}/out"
+    base = synth_transcripts(spark, n_convs=30, turns_mean=10)
+    cidx = F.substring("conv_id", 5, 8).cast("int")
+    for shard in range(3):
+        base.filter(cidx % 3 == shard).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{inp}/shard{shard}.parquet")
+    glob_in = f"{inp}/shard*.parquet"
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "37")
+    try:
+        assert job.run(["--input", glob_in, "--output", out, "--per-source",
+                        "--rounding", "r6", "--gap-seconds", "60"]) == 0
+    finally:
+        spark.conf.set(conf, old)
+    cols = ["source", "session_id", "n_turns", *FEATURE_NAMES]
+    got = spark.read.parquet(out).select(cols)
+
+    w = W.partitionBy("source").orderBy("ts", "conv_id", "turn_idx")
+    src = with_source_file(spark.read.parquet(glob_in))
+    turns = normalize_turns(
+        src.withColumn("turn_idx", F.row_number().over(w)), conv_col="source"
+    ).withColumn("session_id", F.lit(1).cast("long"))
+    want = extract_session_features(turns, rounding="r6").withColumnRenamed(
+        "conv_id", "source").select(cols)
+    assert want.count() == 3 and min(r[0] for r in want.select("n_turns").collect()) > 37
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_job_csv_header_sink(spark, tmp_path):
     inp, out = f"{tmp_path}/in", f"{tmp_path}/out"
     _write_input(spark, inp)
@@ -91,8 +133,11 @@ def test_job_checkpoint_fingerprint_covers_flags(spark, tmp_path, capsys):
         assert job.run(
             ["--input", inp, "--output", out, "--checkpoint", ck, *flags]
         ) == 0
-        resumed = "checkpoint resumed" in capsys.readouterr().out
-        return resumed, snapshot_history(spark, ck)[-1]
+        printed = capsys.readouterr().out
+        rows = int(re.search(r"checkpoint \w+: (\d+) rows", printed).group(1))
+        # the row count comes from the log entry, and it is the output's
+        assert rows == spark.read.parquet(out).count() > 0
+        return "checkpoint resumed" in printed, snapshot_history(spark, ck)[-1]
 
     r1, e1 = run(ckpt)
     # same flags -> resume (the current snapshot untouched)
@@ -190,15 +235,20 @@ def test_job_exact_sql_threads_rounding_and_reset(spark, tmp_path):
             ["--input", inp, "--output", out, "--engine", "exact-sql", *extra]
         ) == 0
         outs[tag] = spark.read.parquet(out)
-    # kernel r6 reference: exact-sql r6 must be bit-identical
-    out_k = f"{tmp_path}/out_kernel"
-    assert job.run([
-        "--input", inp, "--output", out_k, "--engine", "kernel", "--rounding", "r6",
-    ]) == 0
-    kern = spark.read.parquet(out_k)
+    # fast r6 reference: exact-sql r6 must be bit-identical, with and
+    # without the reset tool (the fast engine honours --reset-tool too)
     cols = sorted(set(outs["r6"].columns) - {"feature_ts"})
-    a = outs["r6"].select(cols).exceptAll(kern.select(cols)).count()
-    assert a == 0
+    for tag, extra in {"r6": [], "reset": ["--reset-tool", "retry"]}.items():
+        out_f = f"{tmp_path}/out_fast_{tag}"
+        assert job.run([
+            "--input", inp, "--output", out_f, "--engine", "fast",
+            "--rounding", "r6", *extra,
+        ]) == 0
+        fast = spark.read.parquet(out_f).select(cols)
+        sql = outs[tag].select(cols)
+        assert sql.exceptAll(fast).count() == 0, tag
+        assert fast.exceptAll(sql).count() == 0, tag
+    assert outs["reset"].count() != outs["r6"].count()
     # half_even and r6 agree allclose but the engines did run different
     # rounding (sanity: same row count, same keys)
     assert outs["he"].count() == outs["r6"].count()
@@ -272,7 +322,7 @@ def test_job_engines_agree_on_hot_out_of_order_conv(spark, tmp_path):
     ).write.parquet(inp)
 
     outs = {}
-    for eng in ("fast", "kernel", "exact-sql"):
+    for eng in ("fast", "exact-sql"):
         out = f"{tmp_path}/out_{eng}"
         assert job.run([
             "--input", inp, "--output", out, "--mode", "features",
@@ -302,7 +352,7 @@ def _write_probes(spark, inp, path):
 
 def test_job_asof_mode_engines_agree(spark, tmp_path):
     """--mode asof: every engine's vectors go through the one union-window
-    as-of join, and fast, kernel and exact-sql give identical r6 rows in one
+    as-of join, and fast and exact-sql give identical r6 rows in one
     pinned output layout: the probe columns, then the feature payload in
     feature order."""
     from flow_feature_spark.schema import FEATURE_NAMES
@@ -312,7 +362,7 @@ def test_job_asof_mode_engines_agree(spark, tmp_path):
     _write_probes(spark, inp, probes_p)
 
     outs = {}
-    for eng in ("fast", "kernel", "exact-sql"):
+    for eng in ("fast", "exact-sql"):
         out = f"{tmp_path}/asof_{eng}"
         assert job.run([
             "--input", inp, "--output", out, "--mode", "asof",
@@ -346,12 +396,8 @@ def _last_plan_nodes(spark) -> list[tuple[str, str]]:
 def test_job_plan_shapes(spark, tmp_path):
     """The executed plans keep their exchange budget: under the fast engine
     the dedup shares the kernel's conv_id exchange, and --mode asof adds one
-    exchange and no second Python stage; the kernel engine's dedup keeps its
-    own exchange (sharing the conv_id one showed no end-to-end gain). The
-    bucketed skew path keeps its (conv_id, bucket) shuffle, so a hot
-    conversation is never one task."""
-    import re
-
+    exchange and no second Python stage. The bucketed skew path keeps its
+    (conv_id, bucket) shuffle, so a hot conversation is never one task."""
     inp, probes_p = f"{tmp_path}/in", f"{tmp_path}/probes"
     _write_input(spark, inp)
     _write_probes(spark, inp, probes_p)
@@ -364,9 +410,6 @@ def test_job_plan_shapes(spark, tmp_path):
     asof = [n for n, _ in plan("--mode", "asof", "--probes", probes_p)]
     assert asof.count("Exchange") == 2, asof
     assert asof.count("MapInPandas") == 1, asof
-    kernel = [n for n, _ in plan("--mode", "asof", "--probes", probes_p,
-                                 "--engine", "kernel")]
-    assert kernel.count("Exchange") == 3, kernel
     feats = [n for n, _ in plan("--mode", "features")]
     assert feats.count("Exchange") == 1, feats
 

@@ -1,22 +1,24 @@
-"""Fused batch-vectorized kernel vs the window sessionizer + grouped exact
-kernel: bit-equality (including session numbering) in r6 mode, allclose in
-reference (half_even) mode, on synthetic data with hot keys, mono-role convs,
-ties and session splits."""
+"""Fused batch-vectorized kernel vs the window sessionizer + the grouped exact
+oracle kernel (tests/exact_kernel.py): bit-equality (including session
+numbering) in r6 mode, allclose in reference (half_even) mode, on synthetic
+data with hot keys, mono-role convs, ties, session splits and tool resets."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
-from flow_feature_spark.kernel import extract_session_features
 from flow_feature_spark.kernel_fast import (
     batch_feature_frame,
     sessionize_and_extract_fast,
 )
 from flow_feature_spark.prepare import normalize_turns
-from flow_feature_spark.schema import FEATURE_NAMES, FEATURE_SCHEMA
+from flow_feature_spark.schema import FEATURE_NAMES, FEATURE_SCHEMA, TOOL_FLAG_BITS
 from flow_feature_spark.sessionize import assign_sessions
 from flow_feature_spark.synth import synth_transcripts
+
+from tests.exact_kernel import extract_session_features
 
 
 @pytest.fixture(scope="module")
@@ -33,10 +35,9 @@ def _collect(df):
     }
 
 
-def _two_pass(turns, rounding):
-    return _collect(
-        extract_session_features(assign_sessions(turns, 1800.0), rounding=rounding)
-    )
+def _two_pass(turns, rounding, reset_tool=None):
+    sess = assign_sessions(turns, 1800.0, reset_tool=reset_tool)
+    return _collect(extract_session_features(sess, rounding=rounding))
 
 
 def _assert_bit_equal(exact, fast):
@@ -86,11 +87,11 @@ def test_fast_kernel_allclose_half_even(spark, turns):
         np.testing.assert_allclose(exact[k], fused[k], rtol=1e-6, atol=1.2e-6)
 
 
-def _fused_with_batch_rows(spark, turns, batch_rows):
+def _fused_with_batch_rows(spark, turns, batch_rows, **kw):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch_rows)
     try:
-        return _collect(sessionize_and_extract_fast(turns, 1800.0, rounding="r6"))
+        return _collect(sessionize_and_extract_fast(turns, 1800.0, rounding="r6", **kw))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
@@ -105,3 +106,59 @@ def test_small_arrow_batches_preserve_groups(spark, turns):
     """64-row Arrow batches: same carry check at a second batch size, so
     boundaries fall on different sessions of the hot conversation."""
     assert _fused_with_batch_rows(spark, turns, "64") == _two_pass(turns, "r6")
+
+
+def _reset_conv(spark):
+    """One conversation in one partition, all gaps 1 s: with 37-row batches
+    the reset turns 37 and 74 open both the second and the third batch, and
+    turns 50 and 51 reset inside one batch."""
+    bit = 1 << TOOL_FLAG_BITS["retry"]
+    rows = [
+        ("solo", i, 1_700_000_000_000_000 + i * 1_000_000, i % 2 == 0,
+         10 + i, 1 + i % 5, bit if i in (37, 50, 51, 74) else i % 3, 4)
+        for i in range(120)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, ts_us long, is_fwd boolean, "
+        "plen long, win long, flags int, ihl long",
+    )
+
+
+def test_fused_reset_tool_matches_two_pass(spark, turns):
+    """reset_tool on the fused kernel: a turn with the tool bit opens a new
+    session, bit-equal at r6 to assign_sessions(reset_tool=...) plus the
+    exact kernel, also where a reset turn opens an Arrow batch."""
+    want = _two_pass(turns, "r6", reset_tool="retry")
+    assert want != _two_pass(turns, "r6")  # the reset splits sessions
+    assert _fused_with_batch_rows(spark, turns, "37", reset_tool="retry") == want
+
+    solo = _reset_conv(spark)
+    got = _fused_with_batch_rows(spark, solo, "37", reset_tool="retry",
+                                 num_partitions=1)
+    assert got == _two_pass(solo, "r6", reset_tool="retry")
+    # session 3 is turn 50 alone: fewer than 2 turns, no row
+    assert sorted(k[1] for k in got) == [1, 2, 4, 5]
+
+
+def _overflow_frame(plen):
+    n = len(plen)
+    return pd.DataFrame({
+        "conv_id": "big", "session_id": 1,
+        "ts_us": np.arange(n, dtype=np.int64) * 1_000_000,
+        "turn_idx": np.arange(n), "is_fwd": [True] * n,
+        "plen": np.array(plen, dtype=np.int64),
+        "win": np.ones(n, dtype=np.int64), "flags": np.zeros(n, dtype=np.int64),
+        "ihl": np.full(n, 4, dtype=np.int64),
+    })
+
+
+def test_int64_sumsq_overflow_raises():
+    """plen 4e9 and 1e9: sum(plen^2) = 1.7e19 passes int64 and used to wrap
+    to a silent dpl_std of 0.0 (exact: 1.5e9); the kernel must raise instead,
+    naming the conversation."""
+    with pytest.raises(ValueError, match="conversation 'big'.*plen.*every engine"):
+        batch_feature_frame(_overflow_frame([4_000_000_000, 1_000_000_000]))
+    # just inside the bound the int64 path is exact
+    ok = batch_feature_frame(_overflow_frame([2_000_000_000, 1_000_000_000]))
+    assert ok.loc[0, "dpl_std"] == 500_000_000.0

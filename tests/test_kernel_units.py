@@ -1,6 +1,7 @@
 """Kernel unit tests ported 1:1 from the reference's suite
 (test_flow_feature.py, 31 cases — SURVEY.md §5 / FIXTURES.md §3).
-No Spark needed: these pin the pure NumPy kernel helpers.
+No Spark needed: these pin the helpers of the exact oracle kernel
+(tests/exact_kernel.py).
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ import math
 import numpy as np
 import pytest
 
-from flow_feature_spark.kernel import (
+from tests.exact_kernel import (
     _flag_counts,
     _hdr_len,
     _iat_stats,

@@ -1,6 +1,6 @@
-"""Reference-oracle parity (SURVEY.md §5.2): Spark kernel vs pure-Python
-loop oracle on the deterministic synthetic transcript table, allclose rtol
-1e-6.
+"""Reference-oracle parity (SURVEY.md §5.2): the production fused kernel
+(reference half_even rounding) vs the pure-Python loop oracle on the
+deterministic synthetic transcript table, allclose rtol 1e-6.
 """
 
 from __future__ import annotations
@@ -8,10 +8,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from flow_feature_spark.kernel import extract_session_features
+from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.schema import FEATURE_NAMES
-from flow_feature_spark.sessionize import assign_sessions
 from flow_feature_spark.synth import synth_transcripts
 
 from tests.reference_kernel import ref_feature_vector, ref_sessionize
@@ -27,8 +26,9 @@ def synth_df(spark):
 
 
 def _spark_features(synth_df):
-    sess = assign_sessions(normalize_turns(synth_df), gap_seconds=GAP_S)
-    rows = extract_session_features(sess).collect()
+    rows = sessionize_and_extract_fast(
+        normalize_turns(synth_df), gap_seconds=GAP_S, rounding="half_even"
+    ).collect()
     return {
         (r["conv_id"], r["session_id"]): [r[n] for n in FEATURE_NAMES] for r in rows
     }
@@ -62,7 +62,8 @@ def _oracle_features(synth_df):
 
 # Tolerance note: every statistic is round(x, 6), so two implementations whose
 # raw values agree to 1e-12 can still differ by exactly 1e-6 when the 7th
-# decimal sits on the .5 boundary (np pairwise sum vs Python sequential sum).
+# decimal sits on the .5 boundary (np.round vs Python round, float64 centered
+# deviations vs Python sequential sums).
 # atol of 1.2e-6 = one rounding quantum; anything real shows up far larger.
 ATOL = 1.2e-6
 

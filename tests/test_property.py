@@ -1,14 +1,17 @@
-"""Property-based kernel parity (hypothesis): random turn groups, the NumPy
-kernel must match the loop-style reference oracle within one rounding quantum,
-and both exact sentinels/guards must hold on arbitrary inputs (SURVEY.md §5)."""
+"""Property-based kernel parity (hypothesis): random turn groups, the
+production batch kernel (kernel_fast.batch_feature_frame, reference half_even
+rounding) must match the loop-style reference oracle within one rounding
+quantum, and both exact sentinels/guards must hold on arbitrary inputs
+(SURVEY.md §5)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flow_feature_spark.kernel import feature_vector
+from flow_feature_spark.kernel_fast import batch_feature_frame
 from flow_feature_spark.schema import FEATURE_NAMES
 
 from tests.reference_kernel import ref_feature_vector
@@ -40,6 +43,22 @@ def _to_arrays(rows):
     )
 
 
+def feature_vector(rows):
+    """The batch kernel over one session of ``rows``: 72 floats, or None when
+    it emits no row (<2 turns)."""
+    a = _to_arrays(rows)
+    n = len(rows)
+    pdf = pd.DataFrame(
+        {"conv_id": ["c"] * n, "session_id": np.ones(n, dtype=np.int64),
+         "turn_idx": np.arange(n, dtype=np.int64), **a}
+    )
+    out = batch_feature_frame(pdf, "half_even")
+    if out.empty:
+        return None
+    assert len(out) == 1
+    return [float(out.loc[0, c]) for c in FEATURE_NAMES]
+
+
 def _to_dicts(rows):
     rows = sorted(rows, key=lambda t: t[0])
     return [
@@ -52,7 +71,7 @@ def _to_dicts(rows):
 @settings(max_examples=200, deadline=None)
 @given(groups)
 def test_kernel_matches_reference_oracle(rows):
-    got = feature_vector(**_to_arrays(rows))
+    got = feature_vector(rows)
     expected = ref_feature_vector(_to_dicts(rows))
     if expected is None:
         assert got is None
@@ -69,7 +88,7 @@ def test_kernel_matches_reference_oracle(rows):
 @settings(max_examples=100, deadline=None)
 @given(groups)
 def test_invariants(rows):
-    vec = feature_vector(**_to_arrays(rows))
+    vec = feature_vector(rows)
     if vec is None:
         assert len(rows) <= 1
         return
