@@ -45,6 +45,62 @@ def _prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _r6(c):
+    """Round a double column half-up to 6 decimals: the r6 rounding the
+    DuckDB oracles apply (OQ.r6 is its SQL-text twin)."""
+    return F.floor(c * 1e6 + 0.5) / 1e6
+
+
+def _replay_staged(
+    spark: SparkSession, sources: list[list[DataFrame]], build, prefix: str
+) -> DataFrame:
+    """Replay frames as a bounded file stream; returns the memory table of
+    what ``build`` emits. ``sources`` holds one list of frames per file
+    source: frame ``i`` is staged as the source's micro-batch ``i`` (one
+    file, mtime-ordered), and the source is read back with its batch 0's
+    schema and ``maxFilesPerTrigger=1``. ``build(*streams)`` returns the
+    streaming frame whose append output is collected once every staged
+    file is processed. The staged files are removed whatever happens."""
+    import os
+    import shutil
+    import tempfile
+    import time as _time
+    import uuid as _uuid
+
+    root = tempfile.mkdtemp(prefix=f"ffs_{prefix}_")
+    name = f"{prefix}_{_uuid.uuid4().hex[:8]}"
+    try:
+        streams = []
+        for k, frames in enumerate(sources):
+            base = f"{root}/s{k}"
+            for i, df in enumerate(frames):
+                sub = f"{base}/batch{i}"
+                df.coalesce(1).write.mode("overwrite").parquet(sub)
+                stamp = _time.time() + i * 10  # mtime orders the micro-batches
+                for r, _, files in os.walk(sub):
+                    for fn in files:
+                        os.utime(os.path.join(r, fn), (stamp, stamp))
+            streams.append(
+                spark.readStream.schema(spark.read.parquet(f"{base}/batch0").schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(f"{base}/batch*")
+            )
+        q = (
+            build(*streams)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.table(name)
+
+
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
     _prep(spark)
     for t in TABLES:
@@ -108,7 +164,6 @@ def _session_feature_payload(
     if turns is None:
         turns = _events_turns(spark, sf_dir)
     sess = assign_sessions(turns, gap_seconds=OQ.SESSION_GAP_S)
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     g = (
         sess.groupBy("conv_id", "session_id")
         .agg(
@@ -124,7 +179,7 @@ def _session_feature_payload(
         "session_id",
         F.timestamp_micros(F.col("feat_us")).alias("feature_ts"),
         "n_turns",
-        r6((F.col("feat_us") - F.col("min_us")) / F.lit(1e6) + F.lit(0.0001)).alias("duration"),
+        _r6((F.col("feat_us") - F.col("min_us")) / F.lit(1e6) + F.lit(0.0001)).alias("duration"),
         "dpl_total_i",
     )
 
@@ -164,12 +219,6 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate file sources; two far-future advancer FEATURES then push the
     watermark past every probe so EventTimeTimeout flushes all pending
     answers. Same staged-batch mechanics as q_stream_features."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid as _uuid
-
     from flow_feature_spark.streaming import stream_asof_attach
 
     _prep(spark)
@@ -179,56 +228,24 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "entity_id", F.col("probe_ts").cast("timestamp").alias("probe_ts")
     )
     max_us = probes.agg(F.max(F.unix_micros("probe_ts"))).collect()[0][0]
-    root = tempfile.mkdtemp(prefix="ffs_stream_asof_")
-    fdir, pdir = f"{root}/f", f"{root}/p"
-
-    def _stage(base: str, i: int, df: DataFrame) -> None:
-        sub = f"{base}/batch{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        stamp = _time.time() + i * 10
-        for r, _, files in os.walk(sub):
-            for fn in files:
-                os.utime(os.path.join(r, fn), (stamp, stamp))
-
-    _stage(fdir, 0, feats)
-    for j, off in enumerate((86_400_000_000, 2 * 86_400_000_000)):
-        _stage(
-            fdir,
-            j + 1,
-            feats.limit(1).select(
-                F.lit("zz_advancer").alias("conv_id"),
-                F.timestamp_micros(F.lit(max_us + off)).alias("feature_ts"),
-                F.lit(-1).cast("long").alias("session_id"),
-                F.lit(0).cast("long").alias("n_turns"),
-                F.lit(0.0).alias("duration"),
-                F.lit(0).cast("long").alias("dpl_total_i"),
-            ),
+    advancers = [
+        feats.limit(1).select(
+            F.lit("zz_advancer").alias("conv_id"),
+            F.timestamp_micros(F.lit(max_us + off)).alias("feature_ts"),
+            F.lit(-1).cast("long").alias("session_id"),
+            F.lit(0).cast("long").alias("n_turns"),
+            F.lit(0.0).alias("duration"),
+            F.lit(0).cast("long").alias("dpl_total_i"),
         )
-    _stage(pdir, 0, probes)
-
-    def _src(base: str) -> DataFrame:
-        return (
-            spark.readStream.schema(spark.read.parquet(f"{base}/batch0").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{base}/batch*")
-        )
-
-    name = f"stream_asof_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream_asof_attach(
-            _src(fdir), _src(pdir), strict=True, watermark="0 seconds"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+        for off in (86_400_000_000, 2 * 86_400_000_000)
+    ]
+    out = _replay_staged(
+        spark,
+        [[feats, *advancers], [probes]],
+        lambda f, p: stream_asof_attach(f, p, strict=True, watermark="0 seconds"),
+        "stream_asof",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.table(name).select(
+    return out.select(
         "entity_id", "probe_ts", "session_id", "n_turns", "duration", "dpl_total_i"
     )
 
@@ -265,7 +282,6 @@ def q_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = assign_sessions_bucketed(
         turns, gap_seconds=OQ.SESSION_GAP_S, bucket_turns=64
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     g = sess.groupBy("conv_id", "session_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("turn_cnt"),
         F.sum("plen").cast("bigint").alias("byte_cnt"),
@@ -275,10 +291,10 @@ def q_sessionize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return g.select(
         "conv_id", "session_id", "turn_cnt", "byte_cnt",
-        r6(F.col("min_us") / F.lit(1e6)).alias("start_sec"),
-        r6(F.col("max_us") / F.lit(1e6)).alias("end_sec"),
-        r6((F.col("max_us") - F.col("min_us")) / F.lit(1e6) + F.lit(0.0001)).alias("duration"),
-        r6(F.col("byte_cnt").cast("double") / F.col("turn_cnt")).alias("avg_len"),
+        _r6(F.col("min_us") / F.lit(1e6)).alias("start_sec"),
+        _r6(F.col("max_us") / F.lit(1e6)).alias("end_sec"),
+        _r6((F.col("max_us") - F.col("min_us")) / F.lit(1e6) + F.lit(0.0001)).alias("duration"),
+        _r6(F.col("byte_cnt").cast("double") / F.col("turn_cnt")).alias("avg_len"),
         "fwd_cnt",
     )
 
@@ -294,12 +310,6 @@ def q_stream_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions — the same staged-batch mechanics
     tests/test_streaming.py::test_event_time_timeout_flushes_open_tails pins
     on synthetic transcripts."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid as _uuid
-
     from flow_feature_spark.streaming import stateful_session_features
 
     _prep(spark)
@@ -328,42 +338,17 @@ def q_stream_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(0).cast("long").alias("ihl"),
             )
         )
-    path = tempfile.mkdtemp(prefix="ffs_stream_feats_") + "/in"
-    for i, df in enumerate([turns, *advancers]):
-        sub = f"{path}/batch{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        stamp = _time.time() + i * 10  # mtime orders the staged micro-batches
-        for root, _, files in os.walk(sub):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (stamp, stamp))
-    schema = spark.read.parquet(f"{path}/batch0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{path}/batch*")
-    )
-    name = f"stream_feats_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stateful_session_features(
+    out = _replay_staged(
+        spark,
+        [[turns, *advancers]],
+        lambda stream: stateful_session_features(
             stream, gap_seconds=OQ.SESSION_GAP_S, rounding="r6",
             timeout="event_time", watermark="0 seconds",
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+        ),
+        "stream_feats",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        # inside the finally: a processAllAvailable() failure must not leak
-        # the staged micro-batch dir in /tmp on every failed gate run
-        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-    return (
-        spark.table(name)
-        .filter(F.col("conv_id") != "zz_advancer")
-        .select("conv_id", "session_id", "n_turns", *FEATURE_NAMES)
+    return out.filter(F.col("conv_id") != "zz_advancer").select(
+        "conv_id", "session_id", "n_turns", *FEATURE_NAMES
     )
 
 
@@ -374,12 +359,6 @@ def q_stream_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid bit-for-bit — same staged-replay mechanics as q_stream_features
     (data batch, then two far-future advancer events of a sentinel user that
     push the watermark past every pending bucket; sentinel filtered out)."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid as _uuid
-
     from flow_feature_spark.streaming import stream_decayed_counts
 
     ev = _events_us(spark, sf_dir).select(
@@ -394,37 +373,16 @@ def q_stream_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("user_id", F.timestamp_micros("ts_us").alias("ts"), "ts_us")
         for off in (2 * OQ.RESAMPLE_BUCKET_US, 4 * OQ.RESAMPLE_BUCKET_US)
     ]
-    path = tempfile.mkdtemp(prefix="ffs_stream_decay_") + "/in"
-    for i, df in enumerate([ev, *advancers]):
-        sub = f"{path}/batch{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        stamp = _time.time() + i * 10
-        for root, _, files in os.walk(sub):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (stamp, stamp))
-    schema = spark.read.parquet(f"{path}/batch0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{path}/batch*")
-    )
-    name = f"stream_decay_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream_decayed_counts(
+    out = _replay_staged(
+        spark,
+        [[ev, *advancers]],
+        lambda stream: stream_decayed_counts(
             stream, "user_id", "ts",
             bucket_us=OQ.RESAMPLE_BUCKET_US, lookback=20,
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+        ),
+        "stream_decay",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
-    return spark.table(name).filter(F.col("user_id") >= 0).select(
+    return out.filter(F.col("user_id") >= 0).select(
         "user_id", "bucket_idx", "bucket_start_us",
         "n_events", "decayed_num", "decayed",
     )
@@ -774,7 +732,6 @@ def q_asof_running_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns = _events_turns(spark, sf_dir).persist()
     sess = _assign(turns, gap_seconds=OQ.SESSION_GAP_S)
     run = cumulative_turn_features(sess, value_cols=("plen",))
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     # exact-domain running std matching the oracle formula
     from pyspark.sql import Window as W2
 
@@ -794,7 +751,7 @@ def q_asof_running_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         "turn_idx",
         F.col("run_n_turns").cast("long").alias("run_n_turns"),
         F.col("run_plen_sum").cast("long").alias("run_plen_sum"),
-        r6(std_).alias("run_plen_std"),
+        _r6(std_).alias("run_plen_std"),
     )
     w_tie = W2.partitionBy("conv_id", "ts_us").orderBy(F.desc("turn_idx"))
     rv = (
@@ -900,10 +857,9 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_us", F.unix_micros(F.col("probe_ts").cast("timestamp"))
     )
     out = interval_join_bucketed(iv, probes, bucket_us=86_400_000_000)
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     return out.select(
         "entity_id", "probe_ts", "session_id", "n_turns",
-        r6((F.col("ts_us") - F.col("start_us")) / F.lit(1e6)).alias("into_session_s"),
+        _r6((F.col("ts_us") - F.col("start_us")) / F.lit(1e6)).alias("into_session_s"),
     )
 
 
@@ -931,13 +887,12 @@ def q_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = overlap_join_bucketed(a, b, bucket_us=86_400_000_000).filter(
         F.col("conv_a") < F.col("conv_b")
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     ov = (
         F.least("l_end_us", "r_end_us") - F.greatest("l_start_us", "r_start_us")
     )
     return out.select(
         "conv_a", "session_a", "conv_b", "session_b",
-        r6(ov / F.lit(1e6)).alias("overlap_s"),
+        _r6(ov / F.lit(1e6)).alias("overlap_s"),
     )
 
 
@@ -1214,13 +1169,13 @@ def q_incremental_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns split at the 60th ts_us percentile; batch 1 initializes the
     turn-history and feature snapshot tables, batch 2 is ingested
     incrementally — fast-append the delta, recompute ONLY the touched
-    conversations over their full history, and (feature_buckets=8) replace
-    their rows via the partition-bounded path: only touched hash buckets
-    are rewritten, readers shadow them in older directories. The final
-    table must equal the full-recompute oracle (feature_vector_sql, the
+    conversations over their full history, and replace their rows via the
+    partition-bounded path: only touched hash buckets are rewritten,
+    readers shadow them in older directories. Batch 1 records the bucket
+    expression in the feature table's log; batch 2 takes it from there.
+    The final table must equal the full-recompute oracle (feature_vector_sql, the
     same oracle session_features_sql uses): the whole point of the operator
     is that incremental == full, bit-for-bit."""
-    import os
     import shutil
     import tempfile
 
@@ -1234,11 +1189,10 @@ def q_incremental_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         incremental_feature_update(
             turns.filter(F.col("ts_us") <= cut), tt, ft, OQ.SESSION_GAP_S,
-            feature_buckets=8,
+            feature_bucket_expr="pmod(xxhash64(conv_id), 8)",
         )
         incremental_feature_update(
-            turns.filter(F.col("ts_us") > cut), tt, ft, OQ.SESSION_GAP_S,
-            feature_buckets=8,
+            turns.filter(F.col("ts_us") > cut), tt, ft, OQ.SESSION_GAP_S
         )
         return _collect_frozen(
             read_snapshot(spark, ft).select(

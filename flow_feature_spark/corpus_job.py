@@ -105,22 +105,24 @@ def _pairs(df, args):
 def run(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
-    from pyspark import SparkContext
+    from flow_feature_spark.session import owned_session
+
+    with owned_session(
+        app_name=f"ffs_corpus_{args.op}",
+        master=args.master,
+        shuffle_partitions=args.shuffle_partitions,
+    ) as spark:
+        return _run(args, spark)
+
+
+def _run(args: argparse.Namespace, spark) -> int:
+    """The work of one ``run`` on ``spark``; returns the exit code."""
     from pyspark.sql import functions as F
 
     from flow_feature_spark.ops import text as tx
     from flow_feature_spark.ops.cluster import dedup_clusters
     from flow_feature_spark.ops.sample import deterministic_sample, stratified_topk
-    from flow_feature_spark.session import get_spark
 
-    # only stop a session this run created; the JVM's active session is per
-    # thread, so ask whether a SparkContext exists at all
-    owns_session = SparkContext._active_spark_context is None
-    spark = get_spark(
-        app_name=f"ffs_corpus_{args.op}",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
     docs = spark.read.parquet(args.input)
 
     if args.op == "analyze":
@@ -179,8 +181,6 @@ def run(argv: list[str] | None = None) -> int:
     else:
         out.write.mode("overwrite").parquet(args.output)
     print(f"wrote {args.output} ({args.op})")
-    if owns_session:
-        spark.stop()
     return 0
 
 

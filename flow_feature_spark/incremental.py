@@ -30,9 +30,10 @@ Scale shape at 100 TB:
 - the feature recompute is the JVM-only exact-SQL engine, shuffling only the
   touched conversations' turns;
 - the feature-table rewrite is copy-on-write replace_groups; bound it with
-  ``feature_buckets`` / ``feature_bucket_expr`` (partition-bounded replace),
-  or keep deltas and reconcile at read (merge-on-read) when the touched set
-  is huge.
+  ``feature_bucket_expr`` (partition-bounded replace), or keep deltas and
+  reconcile at read (merge-on-read) when the touched set is huge. The
+  feature table's log records that expression and the turns snapshot the
+  table reflects.
 """
 
 from __future__ import annotations
@@ -47,10 +48,50 @@ from flow_feature_spark.io import (
     _replace_groups,
     _replace_groups_partitioned,
     _write_snapshot,
-    write_snapshot,
 )
 
 TURN_COLS = ("conv_id", "turn_idx", "ts_us", "is_fwd", "plen", "win", "flags", "ihl")
+
+
+def _check_consistent(
+    turns_log: list[dict],
+    features_log: list[dict],
+    turns_table: str,
+    features_table: str,
+) -> None:
+    """Raise IOError unless the feature table reflects the turns table's
+    current state. A call that stopped between its turns append and its
+    feature commit left the delta appended; a rerun would append it twice.
+    Rollbacks and compactions keep the state they point at, so the turns
+    table may reach the recorded snapshot through them. A feature table
+    without the recorded turns snapshot is not checked."""
+    if turns_log and not features_log:
+        raise IOError(
+            f"turns table {turns_table} is at snapshot "
+            f"{turns_log[-1]['snapshot_id']} but feature table "
+            f"{features_table} has no snapshot: the first update stopped "
+            f"between its two commits; delete {turns_table} and rerun it"
+        )
+    if not features_log or "turns_snapshot_id" not in features_log[-1]:
+        return
+    want = features_log[-1]["turns_snapshot_id"]
+    by_id = {e["snapshot_id"]: e for e in turns_log}
+    e = turns_log[-1] if turns_log else None
+    while e is not None and e["snapshot_id"] != want:
+        op = e["operation"]
+        if op.startswith("rollback_to_"):
+            e = by_id[int(op[len("rollback_to_"):])]
+        else:
+            e = by_id[e["parent_id"]] if e.get("job") == "compact_snapshot" else None
+    if e is None:
+        raise IOError(
+            f"feature table {features_table} reflects turns snapshot {want}, "
+            f"but turns table {turns_table} is at snapshot "
+            f"{turns_log[-1]['snapshot_id'] if turns_log else None}: an update "
+            f"stopped between its two commits. Restore with "
+            f"io.rollback_snapshot(spark, {turns_table!r}, {want}), then "
+            f"rerun the delta"
+        )
 
 
 def incremental_feature_update(
@@ -60,7 +101,6 @@ def incremental_feature_update(
     gap_seconds: float,
     rounding: str = "r6",
     reset_tool: str | None = None,
-    feature_buckets: int | None = None,
     feature_bucket_expr: str | None = None,
 ) -> dict:
     """Ingest ``new_turns`` and bring ``features_table`` up to date.
@@ -77,26 +117,23 @@ def incremental_feature_update(
     The distinct touched conversation ids are broadcast into the history
     scan (the right call when the delta is a day against years of history).
     A later call reads each table's snapshot log once and runs no job
-    beyond its two commits: no schema inference, no separate count.
+    beyond its two commits: no schema inference, no separate count. Before
+    writing anything it raises IOError, naming the rollback that restores
+    the tables, if an earlier call stopped between its two commits.
 
-    ``feature_buckets=N`` stores the feature table hive-partitioned by
-    ``__bucket = xxhash64(conv_id) % N`` and updates it with
-    replace_groups_partitioned: only the buckets containing touched
-    conversations are rewritten, so the update cost is proportional to the
-    delta's footprint instead of the feature-table size — without it, the
-    full-table copy-on-write rewrite is the floor of every update
-    (measured in BENCH/INCREMENTAL.md). Size N so table_rows/N fits a
-    comfortable rewrite unit (~one parquet file per bucket).
-
-    A HASH bucket only bounds the rewrite while touched_convs << N (k
-    random convs hit ~k distinct buckets). When deltas have locality — new
-    and recent conversations, the daily-pipeline norm — pass
-    ``feature_bucket_expr`` instead: a SQL expression over ``conv_id``
-    (and ONLY conv_id: every row of a group must land in one bucket, and
-    the bucket must never change across updates) that buckets by
-    cohort/range, so a recent-cohort delta touches few buckets regardless
-    of its size. Measured: the range-bucketed update rewrites ~2% of the
-    table where hash bucketing rewrites most of it (BENCH/INCREMENTAL.md).
+    ``feature_bucket_expr`` stores the feature table hive-partitioned by
+    ``__bucket = <expr>``, a SQL expression over ``conv_id`` only (every row
+    of a group must land in one bucket), and updates it with
+    replace_groups_partitioned: only the buckets holding touched
+    conversations are rewritten, where the copy-on-write replace rewrites
+    the whole table (BENCH/INCREMENTAL.md). A hash bucket,
+    ``pmod(xxhash64(conv_id), N)``, bounds the rewrite only while
+    touched_convs << N; when deltas are recent cohorts, bucket by cohort
+    range instead (~2% of the table rewritten where hash bucketing rewrites
+    most of it, BENCH/INCREMENTAL.md). The first call records the
+    expression (None for none) in the feature table's log; later calls use
+    the recorded one, and a different one raises ValueError. A feature
+    table written before the expression was recorded uses the caller's.
 
     Returns {"initialized", "touched_convs", "turns_appended",
     "feature_rows", "turns_snapshot", "features_snapshot"}.
@@ -111,77 +148,73 @@ def incremental_feature_update(
         t, gap_seconds, rounding=rounding, reset_tool=reset_tool
     )
 
-    if feature_bucket_expr:
-        bucket_of = F.expr(feature_bucket_expr).cast("int")
-        bucketed = True
-    elif feature_buckets:
-        bucket_of = F.pmod(F.xxhash64("conv_id"), F.lit(feature_buckets)).cast("int")
-        bucketed = True
-    else:
-        bucket_of, bucketed = None, False
-    # each table's log is read once; the commits and reads below take the
-    # parsed log or entry, and every read takes its schema from the log
+    # each table's log is read once, both before anything is written; the
+    # commits and reads below take the parsed log or entry, and every read
+    # takes its schema from the log
     turns_log = _read_log(spark, turns_table)
+    features_log = _read_log(spark, features_table)
+    _check_consistent(turns_log, features_log, turns_table, features_table)
+    bucket_expr = feature_bucket_expr
+    if features_log and "bucket_expr" in features_log[-1]:
+        # a different expression would leave a touched conversation's old
+        # rows in the buckets it does not rewrite
+        bucket_expr = features_log[-1]["bucket_expr"]
+        if feature_bucket_expr not in (None, bucket_expr):
+            raise ValueError(
+                f"feature table {features_table} records bucket expression "
+                f"{bucket_expr!r}, but this call passes "
+                f"{feature_bucket_expr!r}; omit it to use the recorded one"
+            )
+    bucket_of = F.expr(bucket_expr).cast("int") if bucket_expr else None
+    te = _write_snapshot(
+        new_turns, turns_table, turns_log, job="incremental",
+        operation="append" if turns_log else "overwrite",
+    )
+    reflects = {"turns_snapshot_id": te["snapshot_id"]}
     if not turns_log:
-        te = _write_snapshot(new_turns, turns_table, turns_log, job="incremental")
         feats = feats_of(_read_entry(spark, turns_table, te))
-        if bucketed:
-            fe = write_snapshot(
-                feats.withColumn("__bucket", bucket_of),
-                features_table,
-                job="incremental",
-                partition_cols=("__bucket",),
+        fe = _write_snapshot(
+            feats.withColumn("__bucket", bucket_of) if bucket_expr else feats,
+            features_table, features_log, job="incremental",
+            partition_cols=("__bucket",) if bucket_expr else None,
+            extra_entry={"bucket_expr": bucket_expr, **reflects},
+        )
+        touched_convs = None
+    else:
+        # the touched ids come from the committed delta directory, not from
+        # new_turns (each use would rerun its normalize + dedup plan), and
+        # they are the replace's keys, not feats' own ids (which would rerun
+        # the feature plan inside the write). history holds only touched
+        # conversations, so the keys cover every conversation in feats —
+        # the replaces' precondition. Their count is observed on the jobs
+        # that already scan them, not counted by a job of its own (an empty
+        # delta has none, and Spark drops the empty frame from the plans
+        # that would report the observation).
+        delta_dir = f"{turns_table.rstrip('/')}/{te['dir']}"
+        convs = Observation()
+        touched = (
+            _entry_reader(spark, te).parquet(delta_dir).select("conv_id")
+            .distinct().observe(convs, F.expr("count(1) AS n"))
+        )
+        history = _read_entry(spark, turns_table, te).join(
+            F.broadcast(touched), on="conv_id", how="left_semi"
+        )
+        feats = feats_of(history)
+        if bucket_expr:
+            fe = _replace_groups_partitioned(
+                feats.withColumn("__bucket", bucket_of), features_table,
+                features_log, ("conv_id",), "__bucket",
+                keys=touched.withColumn("__bucket", bucket_of), extra_entry=reflects,
             )
         else:
-            fe = write_snapshot(feats, features_table, job="incremental")
-        return {
-            "initialized": True,
-            "touched_convs": None,
-            "turns_appended": te["rows"],
-            "feature_rows": fe["rows"],
-            "turns_snapshot": te["snapshot_id"],
-            "features_snapshot": fe["snapshot_id"],
-        }
-
-    te = _write_snapshot(
-        new_turns, turns_table, turns_log, job="incremental", operation="append"
-    )
-    # the touched ids come from the committed delta directory, not from
-    # new_turns (each use would rerun its normalize + dedup plan), and they
-    # are the replace's keys, not feats' own ids (which would rerun the
-    # feature plan inside the write). history holds only touched
-    # conversations, so the keys cover every conversation in feats — the
-    # replaces' precondition. Their count is observed on the jobs that
-    # already scan them, not counted by a job of its own (an empty delta
-    # has none, and Spark drops the empty frame from the plans that would
-    # report the observation).
-    delta_dir = f"{turns_table.rstrip('/')}/{te['dir']}"
-    convs = Observation()
-    touched = (
-        _entry_reader(spark, te).parquet(delta_dir).select("conv_id").distinct()
-        .observe(convs, F.expr("count(1) AS n"))
-    )
-    history = _read_entry(spark, turns_table, te).join(
-        F.broadcast(touched), on="conv_id", how="left_semi"
-    )
-    feats = feats_of(history)
-    features_log = _read_log(spark, features_table)
-    if bucketed:
-        fe = _replace_groups_partitioned(
-            feats.withColumn("__bucket", bucket_of),
-            features_table,
-            features_log,
-            ("conv_id",),
-            "__bucket",
-            keys=touched.withColumn("__bucket", bucket_of),
-        )
-    else:
-        fe = _replace_groups(
-            feats, features_table, features_log, ("conv_id",), keys=touched
-        )
+            fe = _replace_groups(
+                feats, features_table, features_log, ("conv_id",),
+                keys=touched, extra_entry=reflects,
+            )
+        touched_convs = int(convs.get["n"]) if te["rows"] else 0
     return {
-        "initialized": False,
-        "touched_convs": int(convs.get["n"]) if te["rows"] else 0,
+        "initialized": not turns_log,
+        "touched_convs": touched_convs,
         "turns_appended": te["rows"],
         "feature_rows": fe["rows"],
         "turns_snapshot": te["snapshot_id"],

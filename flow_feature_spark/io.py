@@ -265,9 +265,13 @@ def compact_table(
 # entry is the current table state. ``dir`` is the data directory THIS commit
 # wrote (None for rollback, which writes no data); ``dirs`` is the full list
 # of directories composing the snapshot's state — [own] for overwrite/merge,
-# parent dirs + [own] for append, a copy of the source's for rollback.
+# parent dirs + [own] for append, parent dirs with partition exclusions +
+# [own] for a bounded replace, a copy of the source's for rollback.
 # Readers scan ``dirs`` as one multi-path parquet read, so an append commits
-# only its delta (Iceberg fast-append: no table rewrite). Rollback appends a
+# only its delta (Iceberg fast-append: no table rewrite). Every commit that
+# writes data (overwrite, append, merge, group and bounded replace,
+# compaction) goes through ``_commit``: orphan reclaim, the data write, the
+# zone-map sidecar and the log entry are one step. Rollback appends a
 # NEW entry (history is never rewritten — Iceberg semantics); expiration
 # deletes data directories no live log entry references. Single writer.
 # ``resume_or_compute`` above runs on the same log.
@@ -483,7 +487,6 @@ def _write_snapshot(
     read it for their own checks first (one log read per commit)."""
     if operation not in ("overwrite", "append", "merge"):
         raise ValueError(f"unknown snapshot operation {operation!r}")
-    spark = df.sparkSession
     parent_dirs: list = []
     state_rows_base = 0
     exclude_col = None
@@ -517,8 +520,37 @@ def _write_snapshot(
         schema_evolved = bool(parent.get("schema_evolved")) or (
             allow_new_columns and parent["schema"] != df.schema.jsonValue()
         )
+    return _commit(
+        df, table_path, log, parent_dirs, state_rows_base,
+        {"operation": operation, "job": job, "schema": df.schema.jsonValue(),
+         "input_fingerprint": input_fingerprint,
+         "exclude_col": exclude_col, "schema_evolved": schema_evolved},
+        partition_cols, stats_cols, extra_entry, metrics,
+    )
+
+
+def _commit(
+    df: DataFrame,
+    table_path: str,
+    log: list[dict],
+    dirs: list,
+    base_rows: int,
+    fields: dict,
+    partition_cols: tuple[str, ...] | None,
+    stats_cols: tuple[str, ...] | None,
+    extra_entry: dict | None,
+    metrics: KernelMetrics | None = None,
+) -> dict:
+    """The one snapshot commit: write ``df`` into a fresh ``snap-<id>``
+    directory (with its zone-map sidecar for ``stats_cols``) and append the
+    log entry. The caller gives what differs: ``dirs``, the other (raw)
+    directories of the new state; ``base_rows``, the state rows they serve;
+    and ``fields``, its own entry keys (operation, job, schema, ...). The
+    ``metrics`` accumulators are read after the write has run them."""
+    spark = df.sparkSession
     snap_id = len(log) + 1
-    snap_dir = f"{table_path.rstrip('/')}/snap-{snap_id:06d}"
+    own = f"snap-{snap_id:06d}"
+    snap_dir = f"{table_path.rstrip('/')}/{own}"
     # crash-retry safety: a failure between the data write and the log
     # commit leaves snap-<id> on disk with no log entry referencing it, and
     # since snap_id = len(log)+1 is unchanged on retry, errorifexists would
@@ -554,21 +586,16 @@ def _write_snapshot(
     entry = {
         "snapshot_id": snap_id,
         "parent_id": log[-1]["snapshot_id"] if log else None,
-        "dir": f"snap-{snap_id:06d}",
-        "dirs": parent_dirs + [f"snap-{snap_id:06d}"],
-        "operation": operation,
-        "job": job,
+        "dir": own,
+        "dirs": dirs + [own],
         "rows": rows,
-        "state_rows": state_rows_base + rows,
+        "state_rows": base_rows + rows,
         "partition_cols": list(partition_cols) if partition_cols else [],
         "stats_cols": list(stats_cols) if stats_cols else [],
-        "exclude_col": exclude_col,
-        "schema_evolved": schema_evolved,
-        "schema": df.schema.jsonValue(),
-        "input_fingerprint": input_fingerprint,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "committed_at_unix": int(time.time()),
         "metrics": metrics.snapshot() if metrics is not None else None,
+        **fields,
     }
     if extra_entry:
         clash = set(extra_entry) & set(entry)
@@ -686,21 +713,30 @@ def read_snapshot_pruned(
     return out.filter(cond)
 
 
+# entry keys a rewrite of the current state keeps from its parent: the
+# incremental feature table's bucket expression (the SQL expression of its
+# partition column) and the turns snapshot it reflects (incremental.py)
+_CARRIED_KEYS = ("bucket_expr", "turns_snapshot_id")
+
+
 def _inherit_spec(
     parent: dict,
     partition_cols: tuple[str, ...] | None,
-) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """Default a COW rewrite's partition spec and zone-map columns to the
-    ``parent`` entry's. Every operation that rewrites the CURRENT state (merge,
-    group replace, compaction) must preserve both unless the caller
-    explicitly changes them: flattening the spec breaks the bounded-replace
-    path ('requires the table partitioned by ...'), and dropping stats_cols
-    silently turns read_snapshot_pruned into a full scan. Pass ``()`` to
-    deliberately flatten."""
+) -> tuple[tuple[str, ...], tuple[str, ...], dict]:
+    """Default a rewrite's partition spec and zone-map columns to the
+    ``parent`` entry's, and carry its recorded ``_CARRIED_KEYS`` as entry
+    keys. Every operation that rewrites the CURRENT state (merge, group and
+    bounded replace, compaction) must preserve them unless the caller
+    explicitly changes the spec: flattening it breaks the bounded-replace
+    path ('requires the table partitioned by ...'), dropping stats_cols
+    silently turns read_snapshot_pruned into a full scan, and dropping the
+    bucket expression lets a later writer pick another layout. Pass ``()``
+    to deliberately flatten."""
     if partition_cols is None:
         partition_cols = tuple(parent.get("partition_cols") or [])
     stats_cols = tuple(parent.get("stats_cols") or [])
-    return partition_cols, stats_cols
+    carried = {k: parent[k] for k in _CARRIED_KEYS if k in parent}
+    return partition_cols, stats_cols, carried
 
 
 def compact_snapshot(
@@ -728,7 +764,7 @@ def compact_snapshot(
     log = _read_log(spark, table_path)
     parent = _pick_entry(log, table_path)
     cur = _read_entry(spark, table_path, parent)
-    partition_cols, inherited_stats = _inherit_spec(parent, partition_cols)
+    partition_cols, inherited_stats, carried = _inherit_spec(parent, partition_cols)
     if stats_cols is None:
         stats_cols = inherited_stats
     parts = list(partition_cols)
@@ -744,6 +780,7 @@ def compact_snapshot(
         operation="overwrite",
         partition_cols=tuple(parts),
         stats_cols=stats_cols,
+        extra_entry=carried,
     )
 
 
@@ -865,23 +902,23 @@ def merge_snapshot(
     merged state as a new snapshot (operation="merge"); time travel to the
     pre-merge state keeps working.
 
-    Plan shape: current LEFT ANTI JOIN (distinct update keys) ∪ upserts —
+    Plan shape: the group replace of replace_groups_snapshot keyed on the
+    update keys — current LEFT ANTI JOIN (distinct update keys) ∪ upserts —
     one shuffle of the current state on the key (or zero when the update
     key set fits under the broadcast threshold, the common CDC case), then
     a plain append-style write. Copy-on-write rewrites the table like
     Iceberg's COW mode; partition_cols bound the rewrite the same way
     partitioned COW does. A merge-on-read variant (commit the delta, apply
     at read) is the append operation + read-side reconciliation."""
-    spark = updates.sparkSession
-    log = _read_log(spark, table_path)
-    current = _read_entry(spark, table_path, _pick_entry(log, table_path))
+    log = _read_log(updates.sparkSession, table_path)
+    cols = [f["name"] for f in _pick_entry(log, table_path)["schema"]["fields"]]
     data_cols = [c for c in updates.columns if c != delete_col]
-    if set(data_cols) != set(current.columns):
+    if set(data_cols) != set(cols):
         raise ValueError(
             f"merge schema mismatch: updates {sorted(data_cols)} vs "
-            f"table {sorted(current.columns)}"
+            f"table {sorted(cols)}"
         )
-    missing = [k for k in key_cols if k not in current.columns]
+    missing = [k for k in key_cols if k not in cols]
     if missing:
         raise ValueError(f"key columns not in table: {missing}")
     from pyspark.sql import functions as F
@@ -899,7 +936,7 @@ def merge_snapshot(
     if dup:
         keys = [tuple(r[k] for k in key_cols) for r in dup]
         raise ValueError(f"merge updates have multiple rows per key: {keys}")
-    touched = updates.select(*key_cols).distinct()
+    touched = updates.select(*key_cols)
     if delete_col:
         # a NULL flag would vanish from filter(~col) while its key stays in
         # `touched` — a silent DELETE; fail loudly instead (the caller must
@@ -917,17 +954,12 @@ def merge_snapshot(
         )
     upserts = (
         updates.filter(~F.col(delete_col)) if delete_col else updates
-    ).select(*current.columns)
-    kept = current.join(touched, on=list(key_cols), how="left_anti")
-    partition_cols, stats_cols = _inherit_spec(log[-1], partition_cols)
-    return _write_snapshot(
-        kept.unionByName(upserts),
-        table_path,
-        log,
-        job=job,
-        operation="merge",
-        partition_cols=partition_cols,
-        stats_cols=stats_cols,
+    ).select(*cols)
+    # a key in `touched` without an upsert row is a delete: the group
+    # replace drops every touched key's current row
+    return _replace_groups(
+        upserts, table_path, log, key_cols, job=job,
+        partition_cols=partition_cols, keys=touched,
     )
 
 
@@ -975,6 +1007,7 @@ def _replace_groups(
     job: str = "",
     partition_cols: tuple[str, ...] | None = None,
     keys: DataFrame | None = None,
+    extra_entry: dict | None = None,
 ) -> dict:
     """replace_groups_snapshot on the table's already-read ``log``."""
     spark = updates.sparkSession
@@ -989,7 +1022,7 @@ def _replace_groups(
         raise ValueError(f"group columns not in table: {missing}")
     touched = (updates if keys is None else keys).select(*group_cols).distinct()
     kept = current.join(touched, on=list(group_cols), how="left_anti")
-    partition_cols, stats_cols = _inherit_spec(log[-1], partition_cols)
+    partition_cols, stats_cols, carried = _inherit_spec(log[-1], partition_cols)
     return _write_snapshot(
         kept.unionByName(updates),
         table_path,
@@ -998,6 +1031,7 @@ def _replace_groups(
         operation="merge",
         partition_cols=partition_cols,
         stats_cols=stats_cols,
+        extra_entry={**carried, **(extra_entry or {})},
     )
 
 
@@ -1055,9 +1089,9 @@ def _replace_groups_partitioned(
     partition_col: str,
     job: str = "",
     keys: DataFrame | None = None,
+    extra_entry: dict | None = None,
 ) -> dict:
     """replace_groups_partitioned on the table's already-read ``log``."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     spark = updates.sparkSession
@@ -1106,43 +1140,22 @@ def _replace_groups_partitioned(
     touched_keys = keys.select(*group_cols).distinct()
     kept = cur_touched.join(touched_keys, on=list(group_cols), how="left_anti")
 
-    snap_id = len(log) + 1
-    own = f"snap-{snap_id:06d}"
-    obs = Observation()
-    (
-        kept.unionByName(updates)
-        .observe(obs, F.expr("count(1) AS rows"))
-        .write.mode("errorifexists")
-        .partitionBy(partition_col)
-        .parquet(f"{table_path.rstrip('/')}/{own}")
-    )
-    rows = int(obs.get["rows"])
-    new_dirs = [
+    _, stats_cols, carried = _inherit_spec(parent, (partition_col,))
+    dirs = [
         {"dir": d["dir"], "exclude": sorted(set(d["exclude"]) | set(touched_parts))}
         for d in ndirs
-    ] + [own]
-    state_rows = int(parent.get("state_rows", parent["rows"])) - replaced_rows + rows
-    entry = {
-        "snapshot_id": snap_id,
-        "parent_id": parent["snapshot_id"],
-        "dir": own,
-        "dirs": new_dirs,
-        "operation": "replace_partitioned",
-        "job": job,
-        "rows": rows,
-        "state_rows": state_rows,
-        "partition_cols": [partition_col],
-        "exclude_col": partition_col,
-        "replaced_partitions": touched_parts,
-        "schema_evolved": bool(parent.get("schema_evolved")),
-        "schema": parent["schema"],
-        "input_fingerprint": "",
-        "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        "committed_at_unix": int(time.time()),
-        "metrics": None,
-    }
-    _write_log(spark, table_path, log + [entry])
-    return entry
+    ]
+    # the entry keeps the parent's schema, which the type check above made
+    # the updates' too
+    return _commit(
+        kept.unionByName(updates), table_path, log, dirs,
+        int(parent.get("state_rows", parent["rows"])) - replaced_rows,
+        {"operation": "replace_partitioned", "job": job,
+         "schema": parent["schema"], "input_fingerprint": "",
+         "exclude_col": partition_col, "replaced_partitions": touched_parts,
+         "schema_evolved": bool(parent.get("schema_evolved"))},
+        (partition_col,), stats_cols, {**carried, **(extra_entry or {})},
+    )
 
 
 def snapshot_changes(

@@ -73,15 +73,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--features-table",
                    help="--mode incremental: snapshot table holding the "
                    "maintained per-session feature vectors")
-    p.add_argument("--feature-buckets", type=int, default=None,
-                   help="--mode incremental: hash-bucket the feature table "
-                   "into N hive partitions and rewrite only touched buckets "
-                   "(partition-bounded replace)")
     p.add_argument("--feature-bucket-expr", default=None,
                    help="--mode incremental: SQL bucket expression over "
-                   "conv_id (cohort/range locality) instead of the hash "
-                   "bucket; every row of a conv must land in one stable "
-                   "bucket")
+                   "conv_id, e.g. pmod(xxhash64(conv_id), 64) or a cohort "
+                   "range; an update rewrites only the touched buckets. "
+                   "The first run records it in the feature table's log; "
+                   "later runs use the recorded one (a different one fails)")
     p.add_argument("--probes", help="probe table path (entity_id, probe_ts) for --mode asof")
     p.add_argument("--bucket-seconds", type=float, default=3600.0,
                    help="--mode resample: grid bucket width in seconds")
@@ -197,26 +194,24 @@ def run(argv: list[str] | None = None) -> int:
             "--mode incremental requires --turns-table and --features-table"
         )
 
+    from flow_feature_spark.session import owned_session
+
+    with owned_session(
+        app_name=f"ffs_job_{args.mode}",
+        master=args.master,
+        shuffle_partitions=args.shuffle_partitions,
+    ) as spark:
+        return _run(args, spark)
+
+
+def _run(args: argparse.Namespace, spark) -> int:
+    """The work of one ``run`` on ``spark``; returns the exit code."""
     from flow_feature_spark.asof import asof_join_union_window
     from flow_feature_spark.io import resume_or_compute, snapshot_history
     from flow_feature_spark.kernel import attach_feature_ts
     from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
     from flow_feature_spark.prepare import drop_housekeeping, normalize_turns
-    from flow_feature_spark.session import get_spark
     from flow_feature_spark.sessionize import assign_sessions, dedup_turns
-
-    from pyspark import SparkContext
-
-    # getOrCreate reuses a running session (e.g. pytest's); only stop what
-    # this run created. The JVM's active session is per thread, so a call on
-    # a non-main thread sees none — whether a SparkContext exists is the
-    # process-wide answer.
-    owns_session = SparkContext._active_spark_context is None
-    spark = get_spark(
-        app_name=f"ffs_job_{args.mode}",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
 
     if args.mode == "compact":
         from flow_feature_spark.io import compact_table
@@ -229,8 +224,6 @@ def run(argv: list[str] | None = None) -> int:
             f"compacted {args.input}: {stats['files_before']} -> "
             f"{stats['files_after']} files ({stats['bytes']} bytes)"
         )
-        if owns_session:
-            spark.stop()
         return 0
 
     if args.mode == "zorder":
@@ -246,8 +239,6 @@ def run(argv: list[str] | None = None) -> int:
             f"z-ordered {args.input} -> {args.output}: "
             f"{len(zonemap['files'])} files, zone maps on {cols}"
         )
-        if owns_session:
-            spark.stop()
         return 0
 
     if args.mode == "vacuum":
@@ -258,8 +249,6 @@ def run(argv: list[str] | None = None) -> int:
             f"vacuumed {args.input}: removed {len(out['removed'])} orphan "
             f"dir(s) {out['removed']}, {len(out['live'])} live"
         )
-        if owns_session:
-            spark.stop()
         return 0
 
     if args.mode == "stream":
@@ -310,8 +299,6 @@ def run(argv: list[str] | None = None) -> int:
         q = writer.start()
         q.awaitTermination()
         print(f"wrote {args.output} (stream, checkpoint {args.checkpoint})")
-        if owns_session:
-            spark.stop()
         return 0
 
     # per-partition lineage metrics ride on accumulators inside the Arrow
@@ -346,7 +333,6 @@ def run(argv: list[str] | None = None) -> int:
             delta, args.turns_table, args.features_table,
             gap_seconds=args.gap_seconds, rounding=args.rounding,
             reset_tool=args.reset_tool,
-            feature_buckets=args.feature_buckets,
             feature_bucket_expr=args.feature_bucket_expr,
         )
         print(
@@ -357,8 +343,6 @@ def run(argv: list[str] | None = None) -> int:
             f"(turns snap {stats['turns_snapshot']}, "
             f"features snap {stats['features_snapshot']})"
         )
-        if owns_session:
-            spark.stop()
         return 0
 
     def compute():
@@ -567,8 +551,6 @@ def run(argv: list[str] | None = None) -> int:
         if failed:
             print(f"quality gate FAILED: {failed}", file=sys.stderr)
             rc = 2
-    if owns_session:
-        spark.stop()
     return rc
 
 

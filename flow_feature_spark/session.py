@@ -8,6 +8,7 @@ re-plan shuffles at runtime (skew splits, partition coalescing).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -99,3 +100,21 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def owned_session(**kwargs):
+    """``get_spark(**kwargs)`` for one job run, stopped when the run ends,
+    by return or by raise, if the run created it. getOrCreate reuses a
+    running session (e.g. pytest's), which stays running. The JVM's active
+    session is per thread, so a run on a non-main thread sees none: whether
+    a SparkContext exists is the process-wide answer."""
+    from pyspark import SparkContext
+
+    owns = SparkContext._active_spark_context is None
+    spark = get_spark(**kwargs)
+    try:
+        yield spark
+    finally:
+        if owns:
+            spark.stop()

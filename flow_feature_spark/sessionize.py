@@ -41,11 +41,7 @@ def assign_sessions(
     gap = F.col(ts_us_col) - F.lag(ts_us_col, 1).over(w)
     new_cond = gap.isNull() | (gap > F.lit(gap_us))
     if reset_tool is not None:
-        # normalized turns carry the tool as a flag bitmask (prepare.py)
-        from flow_feature_spark.schema import TOOL_FLAG_BITS
-
-        bit = TOOL_FLAG_BITS[reset_tool]
-        new_cond = new_cond | (F.shiftright(F.col("flags"), bit).bitwiseAND(1) == 1)
+        new_cond = new_cond | _reset_cond_col(reset_tool)
     is_new = F.when(new_cond, F.lit(1)).otherwise(F.lit(0))
     cum = Window.partitionBy(conv_col).orderBy(ts_us_col, tiebreak_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -54,7 +50,8 @@ def assign_sessions(
 
 
 def _reset_cond_col(reset_tool: str | None) -> "F.Column":
-    """tool-flag force-new predicate (False literal when no reset tool)."""
+    """tool-flag force-new predicate (False literal when no reset tool);
+    normalized turns carry the tool as a flag bitmask (prepare.py)."""
     if reset_tool is None:
         return F.lit(False)
     from flow_feature_spark.schema import TOOL_FLAG_BITS

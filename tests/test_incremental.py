@@ -24,6 +24,12 @@ from pyspark.sql import functions as F
 from flow_feature_spark.incremental import incremental_feature_update
 from flow_feature_spark.io import read_snapshot, replace_groups_snapshot, write_snapshot
 
+HASH8 = "pmod(xxhash64(conv_id), 8)"
+# the bucket layouts the update tests run: none, and 4 hash buckets
+LAYOUTS = pytest.mark.parametrize(
+    "bucket_expr", [None, "pmod(xxhash64(conv_id), 4)"], ids=["None", "4"]
+)
+
 TURN_SCHEMA = (
     "conv_id string, turn_idx int, ts_us long, is_fwd boolean, "
     "plen long, win long, flags int, ihl long"
@@ -175,10 +181,10 @@ def test_replace_groups_snapshot(spark, tmp_path):
 
 
 def test_incremental_bucketed_equals_full(spark, tmp_path):
-    """feature_buckets=N: the maintained table (hive-partitioned by a conv
-    hash bucket, updated via partition-bounded replace) still equals the
-    full recompute — and the update commit writes only the touched buckets,
-    not the table."""
+    """A hash bucket expression: the maintained table (hive-partitioned by a
+    conv hash bucket, updated via partition-bounded replace) still equals
+    the full recompute — and the update commit writes only the touched
+    buckets, not the table."""
     from flow_feature_spark.io import snapshot_history
 
     rows = _rand_rows(n_convs=40, turns_per_conv=20, seed=11)
@@ -187,9 +193,11 @@ def test_incremental_bucketed_equals_full(spark, tmp_path):
     b1 = [r for r in rows if r[2] <= c1]
     b2 = [r for r in rows if r[2] > c1]
     tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
-    incremental_feature_update(_mk_turns(spark, b1), tt, ft, 5.0, feature_buckets=8)
+    incremental_feature_update(
+        _mk_turns(spark, b1), tt, ft, 5.0, feature_bucket_expr=HASH8
+    )
     st = incremental_feature_update(
-        _mk_turns(spark, b2), tt, ft, 5.0, feature_buckets=8
+        _mk_turns(spark, b2), tt, ft, 5.0, feature_bucket_expr=HASH8
     )
     got = sorted(
         map(tuple, read_snapshot(spark, ft).drop("__bucket").collect())
@@ -296,8 +304,8 @@ def _analysis_time_jobs(spark, group, executions_before):
     ]
 
 
-@pytest.mark.parametrize("feature_buckets", [None, 4])
-def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, feature_buckets):
+@LAYOUTS
+def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, bucket_expr):
     """A warm update reads each table's snapshot log once (2 reads), takes
     every read schema from the log (no schema-inference job), and gets
     touched_convs from jobs it runs anyway — still the delta's distinct
@@ -309,7 +317,7 @@ def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, feature_buck
     old, delta = [r for r in rows if r[2] <= cut], [r for r in rows if r[2] > cut]
     tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
     incremental_feature_update(
-        _mk_turns(spark, old), tt, ft, 5.0, feature_buckets=feature_buckets
+        _mk_turns(spark, old), tt, ft, 5.0, feature_bucket_expr=bucket_expr
     )
     new_turns = _mk_turns(spark, delta)
 
@@ -319,12 +327,12 @@ def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, feature_buck
         io, "_slurp", lambda *a: slurps.append(str(a[2])) or slurp(*a)
     )
     sc = spark.sparkContext
-    group = f"budget-{feature_buckets}"
+    group = f"budget-{bucket_expr}"
     executions_before = spark._jsparkSession.sharedState().statusStore().executionsCount()
     sc.setJobGroup(group, group)
     try:
         st = incremental_feature_update(
-            new_turns, tt, ft, 5.0, feature_buckets=feature_buckets
+            new_turns, tt, ft, 5.0, feature_bucket_expr=bucket_expr
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -337,18 +345,117 @@ def test_incremental_warm_call_budget(spark, tmp_path, monkeypatch, feature_buck
     assert got == _full(spark, rows, 5.0)
 
 
-@pytest.mark.parametrize("feature_buckets", [None, 4])
-def test_incremental_empty_delta(spark, tmp_path, feature_buckets):
+@LAYOUTS
+def test_incremental_empty_delta(spark, tmp_path, bucket_expr):
     """An empty delta commits, touches no conversation and leaves the
     feature rows as they were."""
     rows = _rand_rows(n_convs=5, turns_per_conv=6, seed=3)
     tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
     incremental_feature_update(
-        _mk_turns(spark, rows), tt, ft, 5.0, feature_buckets=feature_buckets
+        _mk_turns(spark, rows), tt, ft, 5.0, feature_bucket_expr=bucket_expr
     )
     before = _table(spark, ft)
     st = incremental_feature_update(
-        _mk_turns(spark, []), tt, ft, 5.0, feature_buckets=feature_buckets
+        _mk_turns(spark, []), tt, ft, 5.0, feature_bucket_expr=bucket_expr
     )
     assert st["touched_convs"] == 0 and st["turns_appended"] == 0
     assert _table(spark, ft) == before
+
+
+def _split(rows):
+    cut = sorted(r[2] for r in rows)[len(rows) // 2]
+    return [r for r in rows if r[2] <= cut], [r for r in rows if r[2] > cut]
+
+
+def test_incremental_layout_from_log(spark, tmp_path):
+    """The first call records the bucket expression (or none) in the feature
+    table's log, and compaction keeps it. A later call with a different
+    expression raises before writing anything: it would rewrite the touched
+    conversations' new buckets and leave their old rows in buckets it does
+    not touch. A later call without one takes the recorded layout."""
+    from flow_feature_spark.io import compact_snapshot, snapshot_history
+
+    rows = _rand_rows(n_convs=30, turns_per_conv=12, seed=13)
+    old, delta = _split(rows)
+    tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
+    incremental_feature_update(
+        _mk_turns(spark, old), tt, ft, 5.0, feature_bucket_expr=HASH8
+    )
+    assert snapshot_history(spark, ft)[-1]["bucket_expr"] == HASH8
+    assert compact_snapshot(spark, ft, target_files=2)["bucket_expr"] == HASH8
+    hash4 = "pmod(xxhash64(conv_id), 4)"
+    with pytest.raises(ValueError, match=r"xxhash64\(conv_id\), 8\).*4\)"):
+        incremental_feature_update(
+            _mk_turns(spark, delta), tt, ft, 5.0, feature_bucket_expr=hash4
+        )
+    assert len(snapshot_history(spark, tt)) == 1  # nothing was written
+    incremental_feature_update(_mk_turns(spark, delta), tt, ft, 5.0)
+    e = snapshot_history(spark, ft)[-1]
+    assert e["operation"] == "replace_partitioned"
+    assert e["bucket_expr"] == HASH8
+    got = sorted(map(tuple, read_snapshot(spark, ft).drop("__bucket").collect()))
+    assert got == _full(spark, rows, 5.0)
+
+    # an unbucketed table records the key with a null value
+    ut, uf = str(tmp_path / "uturns"), str(tmp_path / "ufeats")
+    incremental_feature_update(_mk_turns(spark, old), ut, uf, 5.0)
+    assert snapshot_history(spark, uf)[-1]["bucket_expr"] is None
+    with pytest.raises(ValueError, match="records bucket expression None"):
+        incremental_feature_update(
+            _mk_turns(spark, delta), ut, uf, 5.0, feature_bucket_expr=HASH8
+        )
+
+
+def test_incremental_rerun_after_crash_between_commits_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A call that stops after its turns append and before its feature
+    commit leaves the delta appended. Rerunning the delta raises, naming
+    the rollback, instead of appending it a second time; after that
+    rollback the rerun equals the full recompute, and compacting either
+    table does not make the next update refuse. A first call that stops
+    the same way leaves a turns table without a feature table, which a
+    rerun also refuses."""
+    from flow_feature_spark import incremental
+    from flow_feature_spark.io import compact_snapshot, rollback_snapshot
+
+    rows = _rand_rows(n_convs=12, turns_per_conv=10, seed=17)
+    old, delta = _split(rows)
+    tt, ft = str(tmp_path / "turns"), str(tmp_path / "feats")
+    incremental_feature_update(_mk_turns(spark, old), tt, ft, 5.0)
+
+    def crash(*a, **kw):
+        raise RuntimeError("stopped before the feature commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_replace_groups", crash)
+        with pytest.raises(RuntimeError, match="stopped before"):
+            incremental_feature_update(_mk_turns(spark, delta), tt, ft, 5.0)
+    assert read_snapshot(spark, tt).count() == len(rows)
+    with pytest.raises(IOError, match=r"rollback_snapshot\(spark, '.*turns', 1\)"):
+        incremental_feature_update(_mk_turns(spark, delta), tt, ft, 5.0)
+    assert read_snapshot(spark, tt).count() == len(rows)  # did not grow
+    rollback_snapshot(spark, tt, 1)
+    incremental_feature_update(_mk_turns(spark, delta), tt, ft, 5.0)
+    assert _table(spark, ft) == _full(spark, rows, 5.0)
+    # compactions keep the state they rewrite: the next update goes on
+    compact_snapshot(spark, tt, target_files=2)
+    assert compact_snapshot(spark, ft, target_files=2)["turns_snapshot_id"] == 4
+    incremental_feature_update(_mk_turns(spark, []), tt, ft, 5.0)
+    assert _table(spark, ft) == _full(spark, rows, 5.0)
+
+    t2, f2 = str(tmp_path / "turns2"), str(tmp_path / "feats2")
+    commit = incremental._write_snapshot
+
+    def crash_on_features(df, path, *a, **kw):
+        if path == f2:
+            raise RuntimeError("stopped before the feature commit")
+        return commit(df, path, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_write_snapshot", crash_on_features)
+        with pytest.raises(RuntimeError, match="stopped before"):
+            incremental_feature_update(_mk_turns(spark, old), t2, f2, 5.0)
+    with pytest.raises(IOError, match="has no snapshot"):
+        incremental_feature_update(_mk_turns(spark, old), t2, f2, 5.0)
+    assert read_snapshot(spark, t2).count() == len(old)

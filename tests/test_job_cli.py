@@ -34,6 +34,47 @@ def test_job_features_parquet(spark, tmp_path):
     assert "fiat_mean" in got.columns and "feature_ts" in got.columns
 
 
+OWNED_SESSION_PROBE = """\
+import sys
+
+from pyspark import SparkContext
+
+from flow_feature_spark import corpus_job, job
+
+args = ["--input", sys.argv[1], "--output", sys.argv[2], "--master", "local[1]"]
+for run, more in ((job.run, []), (corpus_job.run, ["--op", "analyze"])):
+    try:
+        run(args + more)
+    except Exception as e:
+        print("RAISED", type(e).__name__)
+    print("ACTIVE", SparkContext._active_spark_context is not None)
+"""
+
+
+def test_job_raising_run_stops_the_session_it_owns(tmp_path):
+    """In a fresh process job.run (and corpus_job.run) owns the session it
+    creates: a run that raises (here on a missing --input) must still stop
+    it, or the next in-process run sees a context it does not own and never
+    stops it."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", OWNED_SESSION_PROBE,
+         f"{tmp_path}/missing", f"{tmp_path}/out"],
+        capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
+    )
+    lines = [ln for ln in r.stdout.splitlines() if ln.startswith(("RAISED", "ACTIVE"))]
+    assert lines == ["RAISED AnalysisException", "ACTIVE False"] * 2, (
+        r.stdout + r.stderr[-2000:]
+    )
+
+
 def test_job_on_worker_thread_keeps_shared_session(spark, tmp_path):
     """A job run on a non-main thread sees no active JVM session (it is per
     thread) but must still leave the caller's session running."""

@@ -347,6 +347,19 @@ def test_orphan_snap_dir_from_crashed_commit_is_reclaimed_on_retry(spark, tmp_pa
     got = {r["k"] for r in read_snapshot(spark, tp).collect()}
     assert got == {"a", "b"}
 
+    # a bounded replace commits through the same step: its retry reclaims
+    # the orphan too
+    from flow_feature_spark.io import replace_groups_partitioned
+
+    bp = str(tmp_path / "obtbl")
+    mk = lambda rows: spark.createDataFrame(rows, "k string, v int, b int")  # noqa: E731
+    write_snapshot(mk([("a", 1, 0), ("b", 2, 1)]), bp, partition_cols=("b",))
+    mk([("zz", 9, 0)]).write.partitionBy("b").parquet(os.path.join(bp, "snap-000002"))
+    e = replace_groups_partitioned(mk([("a", 5, 0)]), bp, ("k",), "b")
+    assert e["snapshot_id"] == 2
+    got = sorted(map(tuple, read_snapshot(spark, bp).collect()))
+    assert got == [("a", 5, 0), ("b", 2, 1)]
+
 
 def test_merge_null_delete_flag_raises_not_silent_delete(spark, tmp_path):
     """NULL in the delete flag used to vanish from filter(~col) while the
@@ -466,6 +479,8 @@ def test_compact_and_merge_inherit_stats_cols_zone_maps_survive(spark, tmp_path)
     from flow_feature_spark.io import (
         compact_snapshot,
         merge_snapshot,
+        read_snapshot_pruned,
+        replace_groups_partitioned,
         replace_groups_snapshot,
     )
 
@@ -484,6 +499,29 @@ def test_compact_and_merge_inherit_stats_cols_zone_maps_survive(spark, tmp_path)
     e3 = replace_groups_snapshot(upd, tp, ("k",))
     assert e3["stats_cols"] == ["ts"]
     assert os.path.exists(os.path.join(tp, "snap-000004", "_zonemap.json"))
+    # the bounded replace keeps them as well, and the pruned read of its
+    # composition (maps per directory, exclusions on top) stays exact
+    bp = str(tmp_path / "zbtbl")
+    write_snapshot(
+        df.withColumn("b", (F.col("k") % 4).cast("int")), bp,
+        partition_cols=("b",), stats_cols=("ts",),
+    )
+    e4 = replace_groups_partitioned(
+        spark.createDataFrame([(5, 999, 1)], "k long, ts long, b int"),
+        bp, ("k",), "b",
+    )
+    assert e4["stats_cols"] == ["ts"]
+    assert os.path.exists(os.path.join(bp, "snap-000002", "_zonemap.json"))
+    for lo, hi in ((990, 1000), (0, 20)):
+        got = sorted(
+            map(tuple, read_snapshot_pruned(spark, bp, {"ts": (lo, hi)}).collect())
+        )
+        want = sorted(
+            map(tuple, read_snapshot(spark, bp).filter(
+                F.col("ts").between(lo, hi)
+            ).collect())
+        )
+        assert got == want
 
 
 def test_merge_inherits_partition_spec_bounded_replace_survives(spark, tmp_path):
