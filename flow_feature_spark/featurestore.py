@@ -7,12 +7,13 @@ its own cadence — attach to every probe, for every group, the latest
 feature row the probe could have seen, with zero temporal leakage, and
 prefix each group's value columns with its name.
 
-Built on the engine's union-and-window as-of (asof.py:72 — the JVM-only
-scale path: no Python crossing, ONE exchange per group, map-side
-union), extended to CARRY the probe's payload columns through each pass
-so labels and previously-attached groups survive. N groups = N window
-passes = N shuffles of the probe frame — the same cost shape a feature
-store pays, and each pass is skew-safe (entity hash partitioning).
+Each group attaches through the engine's one as-of join,
+``asof.asof_join_union_window`` (JVM-only: no Python crossing, ONE
+exchange per group, map-side union), which carries every probe column
+through its pass, so labels and previously-attached groups survive.
+N groups = N window passes = N shuffles of the probe frame — the same
+cost shape a feature store pays, and each pass is skew-safe (entity hash
+partitioning).
 
 Leakage contract (north_rule "zero temporal leakage at every
 entity×timestamp"): ``strict=True`` (default) attaches only features with
@@ -34,7 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flow_feature_spark.asof import _tol_us
+from flow_feature_spark.asof import asof_join_union_window
+from flow_feature_spark.prepare import quote_ident
 
 
 @dataclass
@@ -66,60 +68,16 @@ def _attach_group(
         raise ValueError(
             f"feature group {name!r} would overwrite probe columns {sorted(clash)}"
         )
-    tol_us = _tol_us(g.tolerance_seconds)
-    probe_side, feat_side = (0, 1) if g.strict else (1, 0)
-    carried = [c for c in probes.columns if c != probe_entity]
-
-    # the union-window key is the STRING form of both sides' entity (the
-    # group's key type may differ from the probe's); the probe's ORIGINAL
-    # entity column rides along untouched so the output keeps its type —
-    # an int64 probe id must not come back retyped to string
-    f = g.df.select(
-        F.col(g.entity_col).cast("string").alias("__ent"),
-        F.unix_micros(F.col(g.ts_col).cast("timestamp")).alias("__t_us"),
-        F.lit(feat_side).alias("__side"),
-        F.struct(
-            F.unix_micros(F.col(g.ts_col).cast("timestamp")).alias("__ft_us"),
-            *[F.col(c) for c in vals],
-        ).alias("__payload"),
-        F.lit(None).cast(probes.schema[probe_entity].dataType).alias("__orig_ent"),
-        *[
-            F.lit(None).cast(probes.schema[c].dataType).alias(c)
-            for c in carried
-        ],
-    )
-    p = probes.select(
-        F.col(probe_entity).cast("string").alias("__ent"),
-        F.unix_micros(F.col(probe_ts).cast("timestamp")).alias("__t_us"),
-        F.lit(probe_side).alias("__side"),
-        F.lit(None).cast(f.schema["__payload"].dataType).alias("__payload"),
-        F.col(probe_entity).alias("__orig_ent"),
-        *[F.col(c) for c in carried],
-    )
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("__ent")
-        .orderBy("__t_us", "__side")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    joined = (
-        f.unionByName(p)
-        .withColumn("__last", F.last("__payload", ignorenulls=True).over(w))
-        .filter(F.col("__side") == probe_side)
-    )
-    if tol_us is not None:
-        fresh = F.col("__last").isNotNull() & (
-            (F.col("__t_us") - F.col("__last").getField("__ft_us")) <= tol_us
-        )
-        joined = joined.withColumn("__last", F.when(fresh, F.col("__last")))
-    return joined.select(
-        F.col("__orig_ent").alias(probe_entity),
-        *[F.col(c) for c in carried],
-        *[
-            F.col("__last").getField(c).alias(o)
-            for c, o in zip(vals, out_cols)
-        ],
+    q = quote_ident
+    # renamed inside one struct: a selectExpr list costs a py4j round trip
+    # per element, one SQL string does not
+    renamed = ", ".join(f"{q(c)} AS {q(o)}" for c, o in zip(vals, out_cols))
+    group = g.df.selectExpr(
+        q(g.entity_col), q(g.ts_col), f"struct({renamed}) AS __group"
+    ).selectExpr(q(g.entity_col), q(g.ts_col), "__group.*")
+    return asof_join_union_window(
+        group, probes, g.entity_col, g.ts_col, probe_entity, probe_ts,
+        strict=g.strict, tolerance_seconds=g.tolerance_seconds,
     )
 
 
@@ -176,11 +134,14 @@ def materialize_online(
         read_snapshot,
         write_snapshot,
     )
-    from pyspark.sql import Window
 
     spark = features.sparkSession
-    w = Window.partitionBy(entity_col).orderBy(F.col(ts_col).desc())
-    ranked = features.withColumn("__rk", F.rank().over(w))
+    q = quote_ident
+    ranked = features.selectExpr(
+        "*",
+        f"rank() OVER (PARTITION BY {q(entity_col)} ORDER BY {q(ts_col)} DESC) "
+        "AS __rk",
+    )
     dup = (
         ranked.filter(F.col("__rk") == 1)
         .groupBy(entity_col)
@@ -237,22 +198,17 @@ def attach_future_labels(
     if horizon_seconds <= 0:
         raise ValueError("horizon_seconds must be positive")
     horizon_us = int(round(horizon_seconds * 1_000_000))
-    from pyspark.sql import Window
-
+    q = quote_ident
     w = (
-        Window.partitionBy(entity_col)
-        .orderBy(F.col(ts_us_col).cast("long"))
-        .rangeBetween(1, horizon_us)
+        f"OVER (PARTITION BY {q(entity_col)} ORDER BY CAST({q(ts_us_col)} AS BIGINT) "
+        f"RANGE BETWEEN 1 FOLLOWING AND {horizon_us} FOLLOWING)"
     )
-    out = df.withColumn(
-        f"{prefix}_n", F.count(F.lit(1)).over(w).cast("bigint")
-    )
+    labels = {f"{prefix}_n": F.expr(f"CAST(count(1) {w} AS BIGINT)")}
     if value_col is not None:
-        out = out.withColumn(
-            f"{prefix}_sum",
-            F.coalesce(F.sum(value_col).over(w), F.lit(0)).cast("bigint"),
+        labels[f"{prefix}_sum"] = F.expr(
+            f"CAST(coalesce(sum({q(value_col)}) {w}, 0) AS BIGINT)"
         )
-    return out
+    return df.withColumns(labels)
 
 
 def build_scd2(
@@ -286,22 +242,17 @@ def build_scd2(
     """
     if not key_cols or not attr_cols:
         raise ValueError("build_scd2 needs at least one key and one attribute")
-    from pyspark.sql import Window
-
-    order = [F.col(ts_us_col).cast("long")] + [
-        F.col(c) for c in (tiebreak_cols or [])
-    ]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    changed = F.lit(False)
-    first = F.row_number().over(w) == 1
-    for a in attr_cols:
-        changed = changed | ~F.col(a).eqNullSafe(F.lag(a).over(w))
-    runs = df.withColumn("_is_start", first | changed).filter("_is_start")
-    w2 = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        runs.withColumn("valid_from_us", F.col(ts_us_col).cast("long"))
-        .withColumn("valid_to_us", F.lead("valid_from_us").over(w2))
-        .select(*key_cols, *attr_cols, "valid_from_us", "valid_to_us")
+    q = quote_ident
+    ts_us = f"CAST({q(ts_us_col)} AS BIGINT)"
+    order = ", ".join([ts_us, *map(q, tiebreak_cols or [])])
+    w = f"OVER (PARTITION BY {', '.join(map(q, key_cols))} ORDER BY {order})"
+    changed = " OR ".join(f"NOT ({q(a)} <=> lag({q(a)}) {w})" for a in attr_cols)
+    runs = df.selectExpr(
+        "*", f"row_number() {w} = 1 OR {changed} AS _is_start"
+    ).where("_is_start")
+    return runs.selectExpr(
+        *map(q, key_cols), *map(q, attr_cols),
+        f"{ts_us} AS valid_from_us", f"lead({ts_us}) {w} AS valid_to_us",
     )
 
 

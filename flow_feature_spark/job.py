@@ -410,19 +410,21 @@ def _run(args: argparse.Namespace, spark) -> int:
             )
         if args.per_source and args.mode == "features":
             # pcap mode: the whole FILE is one flow — key by source basename,
-            # order rows by time within the file; an infinite gap never splits
+            # order rows by time within the file; an infinite gap never splits.
+            # The turns are numbered after normalize_turns has read the text,
+            # so the numbering sort carries the kernel columns, not raw rows.
             import math
-
-            from pyspark.sql import Window as W
-            from pyspark.sql import functions as F
 
             from flow_feature_spark.prepare import with_source_file
 
-            src = with_source_file(df)
-            w = W.partitionBy("source").orderBy("ts", "conv_id", "turn_idx")
-            turns = normalize_turns(
-                src.withColumn("turn_idx", F.row_number().over(w)),
-                conv_col="source",
+            turns = with_source_file(normalize_turns(df)).selectExpr(
+                "source",
+                "row_number() OVER (PARTITION BY source "
+                "ORDER BY ts, conv_id, turn_idx) AS __turn",
+                "ts_us", "is_fwd", "plen", "win", "flags", "ihl",
+            ).selectExpr(
+                "source AS conv_id", "__turn AS turn_idx",
+                "ts_us", "is_fwd", "plen", "win", "flags", "ihl",
             )
             feats = sessionize_and_extract_fast(
                 turns, gap_seconds=math.inf, rounding=args.rounding,

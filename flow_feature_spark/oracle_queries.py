@@ -563,7 +563,7 @@ def asof_tolerance_sql(
     is older than the tolerance (DuckDB oracle for the engine's
     tolerance_seconds option; the as-of match is the latest admissible
     feature, so a stale match implies no admissible feature exists)."""
-    assert dialect == "duckdb", "spark side runs the engine API (asof_join_fast)"
+    assert dialect == "duckdb", "spark side runs the engine API (asof_join_union_window)"
     tol_us = int(round(tolerance_s * 1e6))
     return f"""
 WITH {turns_cte(dialect)}, {sess_cte(gap_us)}, {feats_cte()}, {probes_cte()},

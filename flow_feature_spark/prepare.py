@@ -69,8 +69,8 @@ def with_source_file(df: DataFrame, col: str = "source") -> Column | DataFrame:
     Analog of the reference's per-pcap identifier prefix
     (get_flow_feature.py:57: ``[pcap_name, flow_num] + features``): a
     directory of per-day shards keeps its per-shard breakdown. Must be
-    applied directly on the scanned DataFrame, before any shuffle —
-    ``input_file_name()`` is only defined at scan time.
+    applied on the scanned DataFrame or a row-wise projection of it, before
+    any shuffle — ``input_file_name()`` is only defined in the scan's stage.
     """
     return df.withColumn(
         col, F.element_at(F.split(F.input_file_name(), "/"), -1)

@@ -1,11 +1,11 @@
 """As-of join oracle: ``pd.merge_asof`` per entity, cogrouped.
 
-Written independently of flow_feature_spark.asof's two production strategies
-(a union-window SQL pass and a vectorized Arrow forward-fill): pandas does the
-backward search, strictness maps to ``allow_exact_matches=not strict`` and the
-max-staleness guard to ``tolerance``. Agreement with both strategies is a real
-cross-check. It shares only the payload-column choice and the tolerance
-validation (``_tol_us``), so every strategy rejects the same tolerances.
+Written independently of flow_feature_spark.asof's production join (a
+union-window SQL pass): pandas does the backward search, strictness maps to
+``allow_exact_matches=not strict`` and the max-staleness guard to
+``tolerance``. Agreement with it is a real cross-check. It shares only the
+payload-column choice and the tolerance validation (``_tol_us``), so the join
+and the oracle reject the same tolerances.
 """
 
 from __future__ import annotations

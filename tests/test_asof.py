@@ -1,5 +1,5 @@
-"""As-of join: strict/inclusive semantics, both strategies agree with the
-pd.merge_asof oracle (tests/reference_asof.py), and a brute-force
+"""As-of join: strict/inclusive semantics, the union-window join agrees
+with the pd.merge_asof oracle (tests/reference_asof.py), and a brute-force
 zero-leakage property check (SURVEY.md §5.3)."""
 
 from __future__ import annotations
@@ -102,45 +102,17 @@ def test_ghost_entity_all_null(spark, data):
     assert out.count() == ghosts.count()
 
 
-def test_fast_asof_agrees_both_modes(spark, data):
-    from flow_feature_spark.asof import asof_join_fast
-
-    feats, probes = data
-    for strict in (True, False):
-        a = _collect(asof_join_union_window(feats, probes, strict=strict))
-        b = _collect(asof_join_fast(feats, probes, strict=strict))
-        assert a == b, f"strict={strict}"
-
-
-def test_fast_asof_tiny_batches(spark, data):
-    from flow_feature_spark.asof import asof_join_fast
-
-    feats, probes = data
-    expected = _collect(asof_join_union_window(feats, probes, strict=True))
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-    try:
-        got = _collect(asof_join_fast(feats, probes, strict=True))
-        assert got == expected
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def test_tolerance_all_strategies_agree_and_match_brute_force(spark, data):
-    """Max-staleness: both strategies and the oracle agree under tolerance,
-    and every row matches a brute-force 'latest fresh feature'
+    """Max-staleness: the union-window join and the oracle agree under
+    tolerance, and every row matches a brute-force 'latest fresh feature'
     recomputation."""
-    from flow_feature_spark.asof import asof_join_fast
-
     feats, probes = data
     tol = 900.0  # 15 min — forces a mix of kept and nulled matches
     a = _collect(asof_join_union_window(feats, probes, strict=True,
                                         tolerance_seconds=tol))
     b = _collect(asof_join_merge(feats, probes, strict=True,
                                  tolerance_seconds=tol))
-    c = _collect(asof_join_fast(feats, probes, strict=True,
-                                tolerance_seconds=tol))
-    assert a == b == c
+    assert a == b
     nulls = sum(1 for v in a.values() if v[0] is None)
     assert 0 < nulls < len(a)  # tolerance actually bites, but not everywhere
 
@@ -199,32 +171,38 @@ def _wide_payload(spark):
     return feats, probes
 
 
-@pytest.mark.parametrize("strategy", ["fast", "union_window"])
+@pytest.mark.parametrize("strategy", ["training_set", "union_window"])
 def test_build_round_trip_budget(spark, strategy):
-    """Building the as-of frame over the 72-feature payload costs a bounded
-    number of py4j round trips, not several per feature column: every Column
-    call pays about 10 under PySpark's call-site capture, so per-column
-    Column calls alone cost 3,500-6,000 here."""
-    from flow_feature_spark import asof
+    """Building the as-of frame over the 72-feature payload, alone or as two
+    groups of a training set, costs a bounded number of py4j round trips,
+    not several per feature column: every Column call pays about 10 under
+    PySpark's call-site capture, so per-column Column calls alone cost
+    3,500-6,000 here."""
+    from flow_feature_spark.featurestore import FeatureGroup, build_training_set
 
-    build = {"fast": asof.asof_join_fast,
-             "union_window": asof.asof_join_union_window}[strategy]
     feats, probes = _wide_payload(spark)
-    build(feats, probes)  # warm: first-call imports and lookups
-    out, calls = calling_thread_round_trips(lambda: build(feats, probes))
+    vals = feats.columns[2:]
+    groups = {"a": FeatureGroup(feats), "b": FeatureGroup(feats)}
+    build, want = {
+        "training_set": (lambda: build_training_set(probes, groups),
+                         [f"{g}__{c}" for g in groups for c in vals]),
+        "union_window": (lambda: asof_join_union_window(feats, probes), vals),
+    }[strategy]
+    build()  # warm: first-call imports and lookups
+    out, calls = calling_thread_round_trips(build)
     assert calls < 600, calls
-    assert out.columns[2:] == feats.columns[2:]
+    assert out.columns[2:] == want
 
 
 def test_value_column_types_and_unmatched_nulls(spark):
-    """Both strategies keep every value column's type, and fill the value
-    columns of unmatched probes (an entity with no features, a probe before
-    the first feature) with nulls."""
+    """The join keeps every value column's type, carries every probe column
+    (a label here) through on its own row, fills the value columns of
+    unmatched probes (an entity with no features, a probe before the first
+    feature) with nulls, and refuses a probe column that a value column
+    would duplicate."""
     import datetime as dt
 
     from pyspark.sql import types as T
-
-    from flow_feature_spark.asof import asof_join_fast
 
     t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
     value_fields = [
@@ -243,22 +221,25 @@ def test_value_column_types_and_unmatched_nulls(spark):
                       T.StructField("feature_ts", T.TimestampType())] + value_fields),
     )
     probes = spark.createDataFrame(
-        [("a", t(5)), ("a", t(15)), ("a", t(25)), ("b", t(11)), ("z", t(30))],
-        "entity_id string, probe_ts timestamp",
+        [("a", t(5), 1), ("a", t(15), 2), ("a", t(25), 3), ("b", t(11), 4),
+         ("z", t(30), None)],
+        "entity_id string, probe_ts timestamp, label int",
     )
     expected = {
-        ("a", t(5)): (None,) * 6,
-        ("a", t(15)): (1, 10, True, "x", t(1), 0.5),
-        ("a", t(25)): (2, 20, False, "y", t(2), 1.5),
-        ("b", t(11)): (3, 30, None, None, None, None),
-        ("z", t(30)): (None,) * 6,
+        ("a", t(5)): (1,) + (None,) * 6,
+        ("a", t(15)): (2, 1, 10, True, "x", t(1), 0.5),
+        ("a", t(25)): (3, 2, 20, False, "y", t(2), 1.5),
+        ("b", t(11)): (4, 3, 30, None, None, None, None),
+        ("z", t(30)): (None,) * 7,
     }
-    want_types = [("entity_id", T.StringType()), ("probe_ts", T.TimestampType())] + [
+    want_types = [("entity_id", T.StringType()), ("probe_ts", T.TimestampType()),
+                  ("label", T.IntegerType())] + [
         (f.name, f.dataType) for f in value_fields
     ]
-    for build in (asof_join_union_window, asof_join_fast):
-        out = build(feats, probes, strict=True)
-        assert [(f.name, f.dataType) for f in out.schema] == want_types, build
-        assert all(f.nullable for f in out.schema.fields[2:]), build
-        got = {(r[0], r[1]): tuple(r[2:]) for r in out.collect()}
-        assert got == expected, build
+    out = asof_join_union_window(feats, probes, strict=True)
+    assert [(f.name, f.dataType) for f in out.schema] == want_types
+    assert all(f.nullable for f in out.schema.fields[3:])
+    got = {(r[0], r[1]): tuple(r[2:]) for r in out.collect()}
+    assert got == expected
+    with pytest.raises(ValueError, match="clash with probe columns"):
+        asof_join_union_window(feats, probes.withColumnRenamed("label", "i"))

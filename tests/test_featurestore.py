@@ -208,8 +208,9 @@ def test_materialize_online_latest_wins_out_of_order_safe(spark, tmp_path):
 
 
 def test_probe_entity_column_keeps_its_original_type(spark):
-    """An int64 probe entity must come back as int64 (the union-window key
-    uses the string form internally, but output columns keep probe types)."""
+    """An int64 probe entity must come back as int64, whether the group's key
+    has the probe's type or another one (a string key joins on the string
+    form internally, but output columns keep probe types)."""
     probes = spark.createDataFrame(
         [(2**62 + 3, _ts(10), 1.0), (7, _ts(30), 0.0)],
         "entity_id long, probe_ts timestamp, label double",
@@ -218,8 +219,11 @@ def test_probe_entity_column_keeps_its_original_type(spark):
         [(2**62 + 3, _ts(5), 100)],
         "conv_id long, feature_ts timestamp, f1 int",
     )
-    out = build_training_set(probes, {"g": FeatureGroup(g)})
+    s = spark.createDataFrame(
+        [("7", _ts(20), 9)], "conv_id string, feature_ts timestamp, f1 int"
+    )
+    out = build_training_set(probes, {"g": FeatureGroup(g), "s": FeatureGroup(s)})
     assert dict(out.dtypes)["entity_id"] == "bigint"
-    got = {r["entity_id"]: r["g__f1"] for r in out.collect()}
+    got = {r["entity_id"]: (r["g__f1"], r["s__f1"]) for r in out.collect()}
     # int64 magnitude past 2^53: a silent string/double round-trip would corrupt
-    assert got == {2**62 + 3: 100, 7: None}
+    assert got == {2**62 + 3: (100, None), 7: (None, 9)}

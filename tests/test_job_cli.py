@@ -110,6 +110,34 @@ def test_job_per_source_mode(spark, tmp_path):
     assert all(r["source"].startswith("part-") for r in rows)
 
 
+def test_job_per_source_numbering_sort_carries_no_text(spark, tmp_path):
+    """--per-source numbers each file's turns after normalize_turns has read
+    the text: the numbering Window sorts the kernel columns, never the raw
+    rows with their text."""
+    inp, out = f"{tmp_path}/in", f"{tmp_path}/out"
+    synth_transcripts(spark, n_convs=6, turns_mean=10).coalesce(1).write.parquet(
+        f"{inp}/shard0.parquet"
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsList().size()
+    assert job.run(
+        ["--input", f"{inp}/shard*.parquet", "--output", out, "--per-source"]
+    ) == 0
+    execs = store.executionsList()
+    window_inputs = [
+        cols
+        for i in range(first, execs.size())
+        for cols in re.findall(
+            r"\(\d+\) Window\s*\nInput \[\d+\]: \[([^\]]*)\]",
+            execs.apply(i).physicalPlanDescription(),
+        )
+    ]
+    assert window_inputs
+    for cols in window_inputs:
+        names = {c.split("#")[0] for c in cols.split(", ")}
+        assert "source" in names and "text" not in names, cols
+
+
 def test_job_per_source_tiny_batches_match_exact_kernel(spark, tmp_path):
     """--per-source over 37-row Arrow batches: each file's one flow spans
     several batches and its gaps pass --gap-seconds, and every row equals

@@ -36,7 +36,7 @@ from flow_feature_spark.session import get_spark
 from flow_feature_spark.prepare import normalize_turns
 from flow_feature_spark.kernel_fast import sessionize_and_extract_fast
 from flow_feature_spark.features import session_features_exact_sql
-from flow_feature_spark.asof import asof_join_fast
+from flow_feature_spark.asof import asof_join_union_window
 from flow_feature_spark.kernel import attach_feature_ts
 from pyspark.sql import functions as F
 
@@ -61,14 +61,14 @@ def asof_job():
         num_partitions=2 * cpus))
     probes = stored.select(F.col("conv_id").alias("entity_id"),
                            F.col("ts").alias("probe_ts"))
-    return asof_join_fast(
+    return asof_join_union_window(
         feats.select("conv_id", "feature_ts", "session_id", "n_turns", "dpl_total"),
-        probes, strict=True, num_partitions=2 * cpus).count()
+        probes, strict=True).count()
 
 out = {{"cpus": cpus, "rows": n_rows}}
 for name, job in (("feature_kernel", feature_job),
                   ("feature_exact_sql", feature_exact_sql_job),
-                  ("asof_fast", asof_job)):
+                  ("asof_union_window", asof_job)):
     for _ in range(warmups):
         job()
     times = []
@@ -139,7 +139,7 @@ def main() -> int:
         print(json.dumps(results[cpus]))
 
     rows = results[LEVELS[0]]["rows"]
-    jobs = ("feature_kernel", "feature_exact_sql", "asof_fast")
+    jobs = ("feature_kernel", "feature_exact_sql", "asof_union_window")
     md = [
         "# BENCH — scaling efficiency (N vs 4N cores)",
         "",
@@ -202,8 +202,8 @@ def main() -> int:
         "  out with executors rather than saturating a single host.",
         "- feature_exact_sql = the EXACT-domain generated SQL (bit-equal to the",
         "  kernel), also JVM-only — sessionization fused into the same query.",
-        "- asof_fast = feature_kernel -> vectorized sort-merge as-of join of",
-        "  every turn-timestamp probe (second co-shuffle).",
+        "- asof_union_window = feature_kernel -> union-window as-of join of",
+        "  every turn-timestamp probe (second co-shuffle, JVM-only).",
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out_path = os.path.join(REPO, "BENCH", "BASELINE.md")
